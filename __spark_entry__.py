@@ -6,7 +6,7 @@ registry (``trendengine_spark/queries/``): one entry per implemented
 operator from SURVEY.md §2 + the §2.6 relational closure + the
 LLM-data-pipeline extensions, each paired with DuckDB oracle SQL
 where the semantics are ANSI-SQL-expressible (non-SQL-expressible
-``applyInPandas`` fits are declared without SQL → rows-only check;
+per-series numpy fits are declared without SQL → rows-only check;
 their math is golden-tested in ``tests/``).
 """
 
@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
     The §3.2-shaped pipeline: scan → temporal filter → monthly mean
-    composite → per-series PolyTrend classification (applyInPandas),
+    composite → per-series PolyTrend classification (``fit_series``),
     over lineitem priced series keyed by return flag.
     """
     from trendengine_spark.queries.timeseries import flagship_trend_pipeline

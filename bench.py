@@ -57,7 +57,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 #: name → registry query. The set spans the engine surface: scan+agg
 #: (q1), joins (q3/inner), windows (topk), streaming windows
-#: (session), composites (a1), the applyInPandas analytical core
+#: (session), composites (a1), the per-series analytical core
 #: (flagship), and the LLM-pipeline paths (minhash, cosine topk).
 HEADLINE = [
     "tpch_q1_pricing_summary",

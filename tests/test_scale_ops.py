@@ -91,7 +91,15 @@ def test_bucketed_join_elides_exchange(spark):
             .groupBy("k")
             .agg(F.sum(F.col("a.q") + F.col("b.q")).alias("s"))
         )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
+        # run it, then read the plan that actually ran: under AQE that
+        # is the final plan, not the initial one executedPlan() shows
+        # before an action
+        assert agg.collect()
+        plan = agg._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            assert plan.isFinalPlan()
+            plan = plan.executedPlan()
+        plan = plan.toString()
         assert "Exchange" not in plan, plan[:800]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -10,7 +10,8 @@ Public surface:
   (composites, quality gate, roll-up stats, relational helpers,
   dedup, similarity, text, multimodal).
 - :mod:`trendengine_spark.functions` — the numpy analytical core
-  (PolyTrend, DBEST, stattools) behind ``applyInPandas``.
+  (PolyTrend, DBEST, stattools), run per series by one sorted
+  ``mapInArrow`` pass (``operators.util.fit_series``).
 - :mod:`trendengine_spark.streaming` — Structured Streaming twins.
 - :mod:`trendengine_spark.queries` — the declared query registry
   (driver contract).

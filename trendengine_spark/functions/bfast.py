@@ -16,8 +16,9 @@ the contract: stable and purely-seasonal series do not alarm, a
 planted level shift alarms within one MOSUM window of the true date
 with ~the planted magnitude.
 
-Execution envelope is the PolyTrend/DBEST one: per-series numpy
-inside ``applyInPandas``, series short by construction (composited).
+Execution envelope is the PolyTrend/DBEST one: per-series numpy run
+by :func:`~trendengine_spark.operators.util.fit_series`, series short
+by construction (composited).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -128,30 +128,19 @@ def bfast_monitor_groups(
     h_frac: float = 0.25,
     lam: float = 4.0,
 ) -> DataFrame:
-    """Per-series monitoring via ``applyInPandas`` (explicit in-group
-    time sort)."""
+    """Per-series monitoring via
+    :func:`~trendengine_spark.operators.util.fit_series` (explicit time
+    sort within each series)."""
     key_fields = [df.schema[k] for k in keys]
     schema = T.StructType(list(key_fields) + list(BFM_SCHEMA.fields))
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
+    def fit(cols: dict) -> list[dict]:
         r = bfast_monitor(
-            pdf[value_col].to_numpy(dtype=np.float64),
+            np.asarray(cols[value_col], dtype=np.float64),
             freq=freq, h_frac=h_frac, lam=lam,
         )
-        row = {k: pdf[k].iloc[0] for k in keys}
-        row.update(
-            {
-                "break_detected": r["break_detected"],
-                "break_idx": r["break_idx"],
-                "magnitude": r["magnitude"],
-                "mosum_max": r["mosum_max"],
-                "n_history": r["n_history"],
-                "n_monitor": r["n_monitor"],
-            }
-        )
-        return pd.DataFrame([row])
+        return [{f.name: r[f.name] for f in BFM_SCHEMA.fields}]
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(df, keys).groupBy(*keys).applyInPandas(fit, schema)
+    return fit_series(df, keys, [time_col], [value_col], fit, schema)

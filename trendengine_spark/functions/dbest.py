@@ -46,15 +46,16 @@ Re-derived pipeline (documented deviations noted):
 decomposition remainder, floored at 1% of the trend range) — a
 data-adaptive noise floor, not the level-shift constant.
 
-Spark execution: one ``groupBy(series).applyInPandas`` stage per
-call; a monthly series is ≤ ~500 points so groups are uniform and
-tiny — scale-out is purely horizontal across series (SURVEY.md §4.3).
+Spark execution: one
+:func:`~trendengine_spark.operators.util.fit_series` pass per call
+(hash repartition by series, per-partition sort, one ``mapInArrow``);
+a monthly series is ≤ ~500 points so series are uniform and tiny —
+scale-out is purely horizontal across series (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -304,13 +305,10 @@ STATUS_TOO_SHORT = "too_short"
 STATUS_BELOW_THRESHOLD = "below_threshold"
 
 
-def _prepare_series(
-    pdf: pd.DataFrame, time_col: str, value_col: str, threshold: float | None
-) -> tuple[np.ndarray, str]:
-    """Sort by time, trim edge-NaNs, interpolate interior gaps, apply
-    the quality gate. Returns (series, status)."""
-    pdf = pdf.sort_values(time_col)
-    y = pdf[value_col].to_numpy(dtype=np.float64)
+def _prepare_series(y: np.ndarray, threshold: float | None) -> tuple[np.ndarray, str]:
+    """Trim edge-NaNs of a time-ordered series, interpolate interior
+    gaps, apply the quality gate. Returns (series, status)."""
+    y = np.asarray(y, dtype=np.float64)
     good = ~np.isnan(y)
     if good.any():
         y = y[np.argmax(good) : y.size - np.argmax(good[::-1])]
@@ -332,7 +330,8 @@ def dbest_changes(
     **knobs,
 ) -> DataFrame:
     """Per-series DBEST change detection (reference U2) as one
-    ``applyInPandas`` stage; one output row per reported change
+    :func:`~trendengine_spark.operators.util.fit_series` pass; one
+    output row per reported change
     (UDTF-shaped), or only the largest change per series when
     ``largest_only`` (the reference's polygon path takes element
     ``[k][0]``, ``dbest.py:133-143``). Unqualified series yield one
@@ -348,18 +347,15 @@ def dbest_changes(
         *_CHANGE_FIELDS,
     ]
     schema = T.StructType(fields)
-    out_cols = [f.name for f in schema.fields]
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        y, status = _prepare_series(pdf, time_col, value_col, threshold)
-        keys = {c: pdf[c].iloc[0] for c in series_cols}
+    def fit(cols: dict) -> list[dict]:
+        y, status = _prepare_series(cols[value_col], threshold)
         if status != STATUS_OK:
-            return pd.DataFrame([{**keys, "status": status}], columns=out_cols)
+            return [{"status": status}]
         res = dbest_change_detection(y, **knobs)
         k = 1 if largest_only else len(res["start"])
-        rows = [
+        return [
             {
-                **keys,
                 "status": STATUS_OK,
                 "breakpoint_no": res["breakpoint_no"],
                 "segment_no": res["segment_no"],
@@ -373,11 +369,10 @@ def dbest_changes(
             }
             for i in range(k)
         ]
-        return pd.DataFrame(rows, columns=out_cols)
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(obs, series_cols).groupBy(*series_cols).applyInPandas(fit, schema)
+    return fit_series(obs, series_cols, [time_col], [value_col], fit, schema)
 
 
 def dbest_decomposition(
@@ -403,12 +398,10 @@ def dbest_decomposition(
         T.StructField("remainder", arr, True),
     ]
     schema = T.StructType(fields)
-    out_cols = [f.name for f in schema.fields]
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        y, status = _prepare_series(pdf, time_col, value_col, None)
-        row = {c: pdf[c].iloc[0] for c in series_cols}
-        row["status"] = status
+    def fit(cols: dict) -> list[dict]:
+        y, status = _prepare_series(cols[value_col], None)
+        row = {"status": status}
         if status == STATUS_OK:
             res = dbest_change_detection(y, **knobs)
             for k in (
@@ -416,11 +409,11 @@ def dbest_decomposition(
                 "seasonal", "remainder",
             ):
                 row[k] = res[k]
-        return pd.DataFrame([row], columns=out_cols)
+        return [row]
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(obs, series_cols).groupBy(*series_cols).applyInPandas(fit, schema)
+    return fit_series(obs, series_cols, [time_col], [value_col], fit, schema)
 
 
 def dbest_generalize(
@@ -449,18 +442,16 @@ def dbest_generalize(
         T.StructField("f_local", arr, True),
     ]
     schema = T.StructType(fields)
-    out_cols = [f.name for f in schema.fields]
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        y, status = _prepare_series(pdf, time_col, value_col, None)
-        row = {c: pdf[c].iloc[0] for c in series_cols}
-        row["status"] = status
+    def fit(cols: dict) -> list[dict]:
+        y, status = _prepare_series(cols[value_col], None)
+        row = {"status": status}
         if status == STATUS_OK:
             res = dbest_generalization(y, **knobs)
             for k in ("segment_no", "rmse", "mad", "fit", "data", "f_local"):
                 row[k] = res[k]
-        return pd.DataFrame([row], columns=out_cols)
+        return [row]
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(obs, series_cols).groupBy(*series_cols).applyInPandas(fit, schema)
+    return fit_series(obs, series_cols, [time_col], [value_col], fit, schema)

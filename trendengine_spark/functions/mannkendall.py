@@ -6,9 +6,9 @@ MK/Sen as the baseline comparison): S = Σ_{i<j} sign(y_j − y_i),
 tie-corrected variance, normal approximation with continuity
 correction, and Sen's slope = median of all pairwise slopes. Series
 are per-group and short (tens to hundreds of points), so the O(n²)
-pairwise computation is a trivially vectorized numpy triangle inside
-``applyInPandas`` — the same per-group execution envelope as
-PolyTrend (SURVEY §2.4).
+pairwise computation is a trivially vectorized numpy triangle run
+once per series by :func:`~trendengine_spark.operators.util.fit_series`
+— the same per-series execution envelope as PolyTrend (SURVEY §2.4).
 
 Correctness evidence: the integer-exact pieces (S, the ×18 variance
 numerator, Sen's slope over integer series) are ALSO expressible as a
@@ -25,7 +25,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -120,30 +119,28 @@ def mann_kendall_groups(
     time_col: str = "time",
     value_col: str = "value",
 ) -> DataFrame:
-    """Per-group MK + Sen via ``applyInPandas`` — one Arrow batch per
-    group, explicit in-group time sort (never positional, SURVEY
-    §4.4.2). Group state is the series itself (short by construction:
+    """Per-group MK + Sen via
+    :func:`~trendengine_spark.operators.util.fit_series` — explicit
+    time sort within each series (never positional, SURVEY §4.4.2).
+    Per-series state is the series itself (short by construction:
     composited series, not raw events)."""
     key_fields = [df.schema[k] for k in keys]
     schema = T.StructType(list(key_fields) + list(MK_SCHEMA_FULL.fields))
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        y = pdf[value_col].to_numpy(dtype=np.float64)
+    def fit(cols: dict) -> list[dict]:
+        y = np.asarray(cols[value_col], dtype=np.float64)
         r = mann_kendall(y)
-        row = {k: pdf[k].iloc[0] for k in keys}
-        row.update(
+        return [
             {
                 "n": r["n"], "s_stat": r["s"], "var_s18": r["var_s18"],
                 "z": r["z"], "p_value": r["p_value"], "trend": r["trend"],
                 "sens_slope": sens_slope(y),
             }
-        )
-        return pd.DataFrame([row])
+        ]
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(df, keys).groupBy(*keys).applyInPandas(fit, schema)
+    return fit_series(df, keys, [time_col], [value_col], fit, schema)
 
 
 def seasonal_mann_kendall(
@@ -214,21 +211,17 @@ def seasonal_mann_kendall_groups(
     season_col: str = "season",
     value_col: str = "value",
 ) -> DataFrame:
-    """Per-group seasonal MK via ``applyInPandas`` (explicit
-    (season, time) in-group sort)."""
+    """Per-group seasonal MK via
+    :func:`~trendengine_spark.operators.util.fit_series` (explicit
+    (season, time) sort within each series)."""
     key_fields = [df.schema[k] for k in keys]
     schema = T.StructType(list(key_fields) + list(SMK_SCHEMA.fields))
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([season_col, time_col])
-        r = seasonal_mann_kendall(
-            pdf[value_col].to_numpy(dtype=np.float64),
-            pdf[season_col].to_numpy(),
-        )
-        row = {k: pdf[k].iloc[0] for k in keys}
-        row.update(r)
-        return pd.DataFrame([row])
+    def fit(cols: dict) -> list[dict]:
+        return [seasonal_mann_kendall(cols[value_col], cols[season_col])]
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(df, keys).groupBy(*keys).applyInPandas(fit, schema)
+    return fit_series(
+        df, keys, [season_col, time_col], [value_col, season_col], fit, schema
+    )

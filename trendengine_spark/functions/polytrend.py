@@ -28,16 +28,17 @@ degree-1 fit (the net-change line), matching the reference's
 consumption of a single slope/direction per pixel regardless of
 class (``polytrend.py:300-305``).
 
-Spark execution: :func:`polytrend_groups` runs the classifier as one
-``groupBy(series).applyInPandas`` stage — Arrow-batched, distributed,
-~40 points per group (annual composite), so group skew is impossible
-by construction (SURVEY.md §4.3).
+Spark execution: :func:`polytrend_groups` runs the classifier through
+:func:`~trendengine_spark.operators.util.fit_series` — one hash
+repartition by series, a per-partition sort, and one ``mapInArrow``
+pass that classifies each series as its rows stream by; ~40 points
+per series (annual composite), so series skew is impossible by
+construction (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -160,24 +161,17 @@ def polytrend_groups(
     """
     key_types = {f.name: f.dataType for f in obs.schema.fields}
     schema = _result_schema(series_cols, key_types, include_series)
-    out_cols = [f.name for f in schema.fields]
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        y = pdf[value_col].to_numpy(dtype=np.float64)
+    def fit(cols: dict) -> list[dict]:
+        y = np.asarray(cols[value_col], dtype=np.float64)
         y = y[~np.isnan(y)]
-        row = {c: pdf[c].iloc[0] for c in series_cols}
         if y.size == 0 or (threshold is not None and not np.all(y > threshold)):
-            row["status"] = "below_threshold" if y.size else "too_short"
-            return pd.DataFrame([row], columns=out_cols)
-        res = polytrend_classify(y, alpha)
-        row["status"] = "ok"
-        row.update(res)
-        row["n_points"] = int(y.size)
+            return [{"status": "below_threshold" if y.size else "too_short"}]
+        row = {"status": "ok", **polytrend_classify(y, alpha), "n_points": int(y.size)}
         if include_series:
             row["ts"] = y.tolist()
-        return pd.DataFrame([row], columns=out_cols)
+        return [row]
 
-    from trendengine_spark.operators.util import fit_partitioned
+    from trendengine_spark.operators.util import fit_series
 
-    return fit_partitioned(obs, series_cols).groupBy(*series_cols).applyInPandas(fit, schema)
+    return fit_series(obs, series_cols, [time_col], [value_col], fit, schema)

@@ -4,7 +4,8 @@ The engine's extension point for per-group STATEFUL row expansion in
 SQL: a UDTF with a ``TABLE(...) PARTITION BY ... ORDER BY (...)``
 argument receives one ordered group per instance (``eval`` per row,
 ``terminate`` at group end) and may emit any number of output rows —
-the SQL-front-end twin of ``applyInPandas`` for algorithms that are
+the SQL-front-end twin of the per-series fit pass
+(``operators.util.fit_series``) for algorithms that are
 naturally streaming/one-pass rather than whole-group-matrix shaped.
 
 First resident: run-length segmentation of an event stream (the
@@ -15,7 +16,7 @@ the point is proving the registration/partitioning/ordering plumbing,
 not hiding novel math in Python.
 
 Scale notes: one shuffle keyed by the PARTITION BY column (identical
-to the applyInPandas analytical core); state per instance is O(1)
+to the per-series analytical core); state per instance is O(1)
 (the open run).
 
 Per-row dispatch cost (r9, measured at 100k events / 80k runs,
@@ -40,7 +41,7 @@ True`` + generator eval + name-keyed ``row["col"]`` access — costs
   passes to ``TABLE(...)`` — documented per UDTF below.
 
 This is the honest floor of the per-ROW Python UDTF surface; for
-whole-group vectorizable math use applyInPandas (columnar batches),
+whole-series vectorizable math use ``fit_series`` (columnar batches),
 and for anything SQL-expressible use the relational twin (the
 gaps-and-islands formulation of this same query runs 0.15 s).
 """

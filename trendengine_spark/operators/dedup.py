@@ -260,7 +260,8 @@ def minhash_signatures(
     # hundreds of py4j round trips — even with ctx_memo'd Column
     # trees, shipping the list into groupBy().agg() plus the eager
     # per-step analysis measured ~300 ms of client latency per build
-    # (tools/profile_constants.py). The SQL text reproduces
+    # (r6 plan-construction profile; the traced benchmark run now reports
+    # it as queries.build_ms). The SQL text reproduces
     # :func:`shingles` exactly (same \\G-anchored regex — its
     # rationale lives on that function, which remains the DataFrame
     # API for composition). ``mount`` keeps view names distinct when

@@ -6,7 +6,11 @@ import os
 import weakref
 from typing import Any, Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 #: SparkContext → {key: built value}. See :func:`ctx_memo`.
 _CTX_MEMO: "weakref.WeakKeyDictionary[Any, dict]" = weakref.WeakKeyDictionary()
@@ -268,21 +272,149 @@ def fan_out(df: DataFrame, cpu_dense: bool = False) -> DataFrame:
 
 
 def fit_partitioned(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Pin the parallelism of a CPU-dense, byte-light grouped fitting
-    stage (r7). AQE's coalescing is BYTE-based: a 2,000-series
-    fitting input is a few MB, so the post-shuffle stage coalesces to
-    a handful of tasks — starving an ``applyInPandas`` stage whose
-    cost is CPU per GROUP, not bytes (measured: the DBEST fit ran 8
-    tasks on a 32-core box, 4× under-parallel). An EXPLICIT
-    ``repartition(n, keys)`` is exempt from AQE coalescing, and the
-    downstream ``groupBy(keys)`` reuses its hash partitioning (no
-    second exchange), so the fit runs at :func:`pinned_width` — the
-    session's shuffle width, floored at the core count (r15: a static
-    shuffle setting below the core count, e.g. the bench conf's 8,
-    starved the fit the same way AQE coalescing did). At 100 TB the
-    same pin simply honors the user's shuffle sizing — byte-heavy
-    inputs were never coalesced in the first place."""
+    """Pin the parallelism of a CPU-dense, byte-light per-key stage
+    (r7). AQE's coalescing is BYTE-based: a 2,000-series fitting
+    input is a few MB, so the post-shuffle stage coalesces to a
+    handful of tasks — starving a fit whose cost is CPU per SERIES,
+    not bytes (measured: the DBEST fit ran 8 tasks on a 32-core box,
+    4× under-parallel). An EXPLICIT ``repartition(n, keys)`` is
+    exempt from AQE coalescing, and every row of a key lands in one
+    partition, so whatever runs per key downstream — a sort-and-stream
+    pass (:func:`fit_series`) or a keyed aggregate, which reuses the
+    hash partitioning with no second exchange — runs at
+    :func:`pinned_width`: the session's shuffle width, floored at the
+    core count (r15: a static shuffle setting below the core count,
+    e.g. the bench conf's 8, starved the fit the same way AQE
+    coalescing did). At 100 TB the same pin simply honors the user's
+    shuffle sizing — byte-heavy inputs were never coalesced in the
+    first place."""
     return df.repartition(pinned_width(df.sparkSession), *keys)
+
+
+def fit_series(
+    obs: DataFrame,
+    keys: list[str],
+    order_cols: list[str],
+    cols: list[str],
+    fit_one: Callable[[dict], list[dict]],
+    schema: StructType,
+) -> DataFrame:
+    """Run ``fit_one`` once per series (one distinct ``keys`` tuple)
+    in one streaming Arrow pass — sort each partition by key once,
+    then cut series at key changes (the sort-then-stream evaluation of
+    per-group work, SIGMOD 2022 "Efficient Evaluation of
+    Arbitrarily-Framed Holistic SQL Aggregates").
+
+    Plan: :func:`fit_partitioned` (every row of a series in one
+    partition, at :func:`pinned_width`) → ``sortWithinPartitions(keys,
+    order_cols)`` with nulls last in ``order_cols`` (pandas'
+    ``sort_values`` placement) → ``coalesce`` to the core count → one
+    ``mapInArrow``. Series are grouped as ``groupBy(keys)`` groups
+    them: null keys form one series and NaN keys another.
+
+    ``fit_one`` receives ``{col: numpy array}`` for ``cols``, rows in
+    ``order_cols`` order (Arrow's ``to_numpy``: float nulls and
+    integer columns holding nulls arrive as float NaN), and returns a
+    list of row dicts over ``schema``'s non-key fields; a missing
+    field, or a NaN in a float field, is written as null, and each row
+    gets the series' key values (from its first input row). A series
+    spanning an Arrow batch boundary is carried into the next batch,
+    so a worker holds one batch plus one series; each input batch
+    yields at most one output batch."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    out_names = [f.name for f in schema.fields]
+    out_types = {
+        f.name: to_arrow_type(f.dataType) for f in schema.fields if f.name not in keys
+    }
+    # mapInArrow, unlike a grouped map, starts a Python task even for an
+    # empty partition, at ~0.1 s each (pyspark 4.1, local[4]): 3 series
+    # over the default 200 shuffle partitions took 6 s. So the sorted
+    # hash partitions are concatenated into one task per core; a series
+    # stays contiguous, as all its rows sit in one hash partition.
+    ordered = (
+        fit_partitioned(obs.select(*keys, *dict.fromkeys([*order_cols, *cols])), keys)
+        .sortWithinPartitions(*keys, *[F.col(c).asc_nulls_last() for c in order_cols])
+        .coalesce(obs.sparkSession.sparkContext.defaultParallelism)
+    )
+
+    def emit(key_parts, rows):
+        # key_parts: (key arrays, row indices) pairs in output order
+        arrays = {
+            k: pa.concat_arrays([ka[i].take(pa.array(idx, pa.int64())) for ka, idx in key_parts])
+            for i, k in enumerate(keys)
+        }
+        for name, t in out_types.items():
+            arrays[name] = pa.array([r.get(name) for r in rows], type=t, from_pandas=True)
+        return pa.RecordBatch.from_arrays([arrays[n] for n in out_names], names=out_names)
+
+    def fit_joined(pieces):
+        return fit_one({c: np.concatenate([p[c] for p in pieces]) for c in cols})
+
+    def stream(batches):
+        # the open series, possibly continued by the next batch: its
+        # 1-row key arrays and its column pieces, copied out of their
+        # batches
+        carry_key, carry = None, []
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            key_cols = [batch.column(k) for k in keys]
+            vals = {c: batch.column(c).to_numpy(zero_copy_only=False) for c in cols}
+            key_parts, rows = [], []
+            if carry_key is None:
+                starts = np.concatenate(([0], _series_starts(key_cols)))
+            else:
+                # prepend the open series' key row: a start at batch row
+                # 0 means the batch opens with a new series
+                ext = [pa.concat_arrays([c, k]) for c, k in zip(carry_key, key_cols)]
+                starts = _series_starts(ext) - 1
+                head = starts[0] if starts.size else n
+                carry.append({c: v[:head].copy() for c, v in vals.items()})
+                if not starts.size:
+                    continue
+                out = fit_joined(carry)
+                key_parts.append((carry_key, [0] * len(out)))
+                rows += out
+            bounds = np.append(starts, n)
+            idx = []
+            for lo, hi in zip(bounds[:-2], bounds[1:-1]):
+                out = fit_one({c: v[lo:hi] for c, v in vals.items()})
+                idx += [lo] * len(out)
+                rows += out
+            key_parts.append((key_cols, idx))
+            lo = starts[-1]
+            carry_key = [k.take(pa.array([lo])) for k in key_cols]
+            carry = [{c: v[lo:].copy() for c, v in vals.items()}]
+            if rows:
+                yield emit(key_parts, rows)
+        if carry_key is not None:
+            out = fit_joined(carry)
+            if out:
+                yield emit([(carry_key, [0] * len(out))], out)
+
+    return ordered.mapInArrow(stream, schema)
+
+
+def _series_starts(key_cols: list) -> np.ndarray:
+    """Row positions ``i ≥ 1`` where the key tuple differs from row
+    ``i - 1``, with ``groupBy`` equality: nulls equal each other, and
+    so do NaNs (``-0.0`` equals ``0.0`` under both)."""
+    n = len(key_cols[0])
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for col in key_cols:
+        prev, cur = col.slice(0, n - 1), col.slice(1)
+        diff = pc.or_(
+            pc.fill_null(pc.not_equal(prev, cur), False),
+            pc.xor(pc.is_null(prev), pc.is_null(cur)),
+        )
+        if pa.types.is_floating(col.type):
+            both_nan = pc.fill_null(pc.and_(pc.is_nan(prev), pc.is_nan(cur)), False)
+            diff = pc.and_not(diff, both_nan)
+        change |= diff.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change) + 1
 
 
 def pinned_width(spark) -> int:

@@ -597,7 +597,7 @@ def trend_mann_kendall_stats(spark, sf_dir):
     non-parametric trend baseline of the reference's own literature
     (MK/Sen is what PolyTrend-class methods are benchmarked against).
 
-    CROSS-PARADIGM oracle: Spark runs the numpy ``applyInPandas``
+    CROSS-PARADIGM oracle: Spark runs the numpy per-series
     implementation (`functions/mannkendall.py` — vectorized pairwise
     triangle per group); DuckDB states the same math as a relational
     pairwise self-join over the day-indexed series. Two independent

@@ -131,7 +131,7 @@ def raster_region_ingest(spark, sf_dir):
     "data-skipping AOI read → annual composite → PolyTrend "
     "classification → category roll-up. Rows-only by design (the "
     "versioned table is not a DuckDB-readable source and PolyTrend "
-    "is the applyInPandas cascade); every stage is individually "
+    "is a per-series numpy cascade); every stage is individually "
     "pinned — region source goldens, z-order prune file counts, "
     "composite oracle (a1_annual_composite), PolyTrend goldens — and "
     "the manifest prune is plan-asserted in "
@@ -160,7 +160,7 @@ def flagship_lifecycle_pipeline(spark, sf_dir):
 
     At 100 TB each stage keeps its posture: partitioned acquisition,
     one extra ingest shuffle for the clustered layout, storage-level
-    AOI pruning (measured 3-4/16 files), applyInPandas only per
+    AOI pruning (measured 3-4/16 files), a per-series fit only per
     bounded pixel series, and a tiny final aggregate.
 
     The synthetic field is interannually STATIONARY by construction

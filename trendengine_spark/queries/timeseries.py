@@ -4,7 +4,7 @@ Each query exercises one operator row of SURVEY.md §2 (the
 citations name the reference behavior being reproduced), expressed
 over ``events``/``lineitem``/``orders`` since those are the tables
 the DuckDB oracle can check. The analytical core (U1/U2/U3) is also
-declared here; those are ``applyInPandas`` fits and therefore
+declared here; those are per-series numpy fits and therefore
 rows-only (no ``oracle_sql`` entry — the driver records the weaker
 check, FIXTURES.md golden tests cover the math).
 
@@ -12,8 +12,8 @@ Scale notes: every SQL-expressible query below is a single scan →
 (filter) → hash-aggregate plan: filters and column pruning push to
 the parquet scan, aggregates get map-side partials, and nothing
 collects to the driver. The U* queries add one co-partitioned
-``groupBy(key).applyInPandas`` stage on top of an already-aggregated
-(small) frame.
+per-series fit pass (``operators.util.fit_series``: a keyed sort, then
+``mapInArrow``) on top of an already-aggregated (small) frame.
 """
 
 from __future__ import annotations
@@ -615,7 +615,7 @@ def a2c_interpolate_gaps(spark, sf_dir):
     "u1_polytrend_events",
     sql=None,
     doc="U1: PolyTrend classification per event_type over daily-mean "
-    "series (applyInPandas; golden-tested in tests/, not SQL-expressible).",
+    "series (per-series numpy fit; golden-tested in tests/, not SQL-expressible).",
 )
 def u1_polytrend_events(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
@@ -638,7 +638,7 @@ def u1_polytrend_events(spark, sf_dir):
     "u2_dbest_events",
     sql=None,
     doc="U2: DBEST change detection per event_type over daily series "
-    "(applyInPandas; golden-tested in tests/).",
+    "(per-series numpy fit; golden-tested in tests/).",
 )
 def u2_dbest_events(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
@@ -667,8 +667,8 @@ def flagship_trend_pipeline(spark, sf_dir):
     exact-decimal mean) through the SQL front-end — one analysis pass,
     arithmetic identical to ``filter_years`` + ``monthly_composite``
     (half-open year bound; per-row /1000.0 in double then
-    DECIMAL(18,10) sum ÷ count) — then the applyInPandas PolyTrend
-    stage on top. Output pinned unchanged across the r6 rewrite at
+    DECIMAL(18,10) sum ÷ count) — then the per-series PolyTrend
+    fit pass on top. Output pinned unchanged across the r6 rewrite at
     sf0.001 and sf0.01."""
     monthly = sql_over_tables(
         spark,

@@ -4,7 +4,8 @@ Why this exists (measured, r6): classic PySpark DataFrame
 transformations are EAGERLY ANALYZED — every ``select``/``join``/
 ``groupBy`` in a chain pays a py4j round trip plus JVM analysis of
 the growing plan, so a 10-step build costs 50-120 ms of pure
-client-side latency before any execution (tools/profile_constants.py:
+client-side latency before any execution (r6 plan-construction
+profile, now the traced benchmark run's ``queries.build_ms``:
 tpch_q3 117 ms build for 354 ms exec; dedup_minhash_lsh 335 ms build
 after its expression lists were already memoized — 661 py4j round
 trips). A single ``spark.sql(...)`` statement ships ONE string, is
