@@ -547,7 +547,7 @@ def test_versioned_commit_collision_retries(spark, tmp_path):
     import pandas as pd
 
     from trendengine_spark.tablelog import (
-        _commit_manifest,
+        _publish,
         _stage_files,
         current_version,
         read_versioned,
@@ -566,8 +566,8 @@ def test_versioned_commit_collision_retries(spark, tmp_path):
     )
     # simulate the race: both saw current_version == 0; commit A
     # first, then B (which would have targeted v1 too)
-    va = _commit_manifest(path, a)
-    vb = _commit_manifest(path, b)
+    va = _publish(path, {"": a}, append=False)
+    vb = _publish(path, {"": b}, append=False)
     assert (va, vb) == (1, 2)
     assert current_version(path) == 2
     assert {r.k for r in read_versioned(spark, path, version=1).collect()} == {1}
@@ -618,37 +618,52 @@ def test_versioned_snapshot_batch_retry_is_noop(spark, tmp_path):
     assert read_versioned(spark, path).count() == 5
 
 
-def test_commit_manifest_raise_on_conflict(tmp_path):
-    """Folded (append-style) commits must surface a lost optimistic-
-    concurrency race instead of silently retrying with a stale file
-    list (ADVICE r6)."""
-    import pytest
+def _race_first_fold(monkeypatch, tl, compete):
+    """Make the next commit race: its FIRST fold call runs
+    ``compete()``, a competing writer that takes the slot the fold is
+    building for. Returns the head version each fold call saw."""
+    real, seen = tl._commit, []
 
-    from trendengine_spark.tablelog import _commit_manifest
+    def racing(root, fold):
+        # one race only: later commits, the competitor's too, run as is
+        monkeypatch.setattr(tl, "_commit", real)
 
-    path = str(tmp_path / "vt")
-    import os
+        def observed(head):
+            seen.append(None if head is None else head["version"])
+            if len(seen) == 1:
+                compete()
+            return fold(head)
 
-    os.makedirs(os.path.join(path, "_manifests"))
-    _commit_manifest(path, ["a.parquet"])  # v0
-    # simulate the winner committing v1 while our fold is in flight
-    _commit_manifest(path, ["a.parquet", "b.parquet"])  # v1
-    # loser rebuilt on v0's list and targets v1 → must raise, not
-    # publish a manifest that drops b.parquet
+        return real(root, observed)
 
-    real_cv = __import__(
-        "trendengine_spark.tablelog", fromlist=["current_version"]
-    ).current_version
+    monkeypatch.setattr(tl, "_commit", racing)
+    return seen
+
+
+def test_append_refolds_on_winner_manifest(spark, tmp_path, monkeypatch):
+    """An append that loses the commit race folds again on the
+    winner's manifest: the final version lists both writers' files,
+    never a stale list that drops the winner's."""
     import trendengine_spark.tablelog as tl
 
-    orig = tl.current_version
-    tl.current_version = lambda p: 0  # pretend we still see v0
-    try:
-        with pytest.raises(FileExistsError):
-            _commit_manifest(path, ["a.parquet", "c.parquet"], on_conflict="raise")
-    finally:
-        tl.current_version = orig
-    assert real_cv(path) == 1
+    path = str(tmp_path / "vt")
+
+    def batch(lo):
+        return spark.range(lo, lo + 10).withColumnRenamed("id", "k")
+
+    tl.publish_versioned_batch(batch(0), 0, path)  # v0
+    seen = _race_first_fold(
+        monkeypatch, tl, lambda: tl.publish_versioned_batch(batch(100), 1, path)
+    )
+    assert tl.publish_versioned_batch(batch(10), 2, path) is True
+    assert seen == [0, 1]  # re-folded on the winner's v1
+    assert tl.current_version(path) == 2
+    winner = tl._read_manifest(path, 1)["files"]
+    final = tl._read_manifest(path, 2)["files"]
+    assert final[: len(winner)] == winner and len(final) > len(winner)
+    got = sorted(r["k"] for r in tl.read_versioned(spark, path).collect())
+    assert got == sorted([*range(20), *range(100, 110)])
+    assert tl.last_batch_id(path) == 2
 
 
 def test_merge_upsert_partitioned_rejects_hostile_partition_types(
@@ -740,42 +755,46 @@ def test_versioned_head_hint_and_compaction(spark, tmp_path):
 
 
 def test_versioned_concurrent_commit_storm(tmp_path):
-    """8 threads x 20 racing retry-mode commits: every commit lands,
-    versions are distinct, nothing is lost (the optimistic os.link
-    protocol under real contention)."""
-    import os
+    """8 threads x 20 racing folded appends: every commit lands at a
+    distinct version and the last manifest lists all 160 files — no
+    fold ever published a stale list (the optimistic os.link protocol
+    under real contention)."""
+    import sys
     import threading
 
     from trendengine_spark.tablelog import (
-        _commit_manifest,
+        _publish,
         _read_manifest,
         current_version,
     )
 
     path = str(tmp_path / "vt")
-    os.makedirs(os.path.join(path, "_manifests"))
     got: list[int] = []
     lock = threading.Lock()
 
     def worker(tid):
         mine = [
-            _commit_manifest(path, [f"w{tid}_{i}.parquet"])
+            _publish(path, {"": [f"w{tid}_{i}.parquet"]}, append=True)
             for i in range(20)
         ]
         with lock:
             got.extend(mine)
 
     ts = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the folds more finely
+    try:
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in ts)
     assert len(got) == 160 and len(set(got)) == 160
     assert current_version(path) == 159
-    names = set()
-    for v in range(160):
-        names.update(_read_manifest(path, v)["files"])
-    assert len(names) == 160  # no commit's file list was lost
+    last = _read_manifest(path, 159)["files"]
+    assert len(last) == len(set(last)) == 160
 
 
 def test_join_view_incremental_equals_recompute(spark, tmp_path):
@@ -897,28 +916,180 @@ def test_compact_carries_batch_id_and_rebases_concurrent_append(
     )
 
 
-def test_commit_manifest_base_version_pins_slot(tmp_path):
-    """base_version pins a folded commit to snapshot+1: a taken slot
-    raises instead of drifting to a later slot with a stale list; the
-    retry mode refuses the pin (it would spin on one slot)."""
-    import os
-
+def test_compact_refolds_on_winner_or_raises_on_replaced_lineage(
+    spark, tmp_path, monkeypatch
+):
+    """compact_versioned losing the commit race to an append folds
+    again on the winner's manifest (compacted files + the winner's new
+    files); losing it to a snapshot commit that replaced the compacted
+    lineage raises and commits nothing."""
     import pytest
 
     import trendengine_spark.tablelog as tl
 
     path = str(tmp_path / "vt")
-    os.makedirs(os.path.join(path, "_manifests"))
-    os.makedirs(os.path.join(path, "data"))
-    v0 = tl._commit_manifest(path, ["a.parquet"])
-    assert v0 == 0
-    with pytest.raises(FileExistsError):
-        tl._commit_manifest(
-            path, ["b.parquet"], on_conflict="raise", base_version=-1
+
+    def batch(lo):
+        return spark.range(lo, lo + 10).withColumnRenamed("id", "k")
+
+    for b in range(3):
+        tl.publish_versioned_batch(batch(b * 10), b, path)  # v0..v2
+    seen = _race_first_fold(
+        monkeypatch, tl, lambda: tl.publish_versioned_batch(batch(100), 9, path)
+    )
+    assert tl.compact_versioned(spark, path) == 4
+    assert seen == [2, 3]
+    winner_new = set(tl._read_manifest(path, 3)["files"]) - set(
+        tl._read_manifest(path, 2)["files"]
+    )
+    final = tl._read_manifest(path, 4)["files"]
+    assert winner_new and winner_new <= set(final)
+    got = sorted(r["k"] for r in tl.read_versioned(spark, path).collect())
+    assert got == sorted([*range(30), *range(100, 110)])
+    assert tl.last_batch_id(path) == 9
+
+    seen = _race_first_fold(
+        monkeypatch, tl, lambda: tl.write_versioned(spark, batch(500), path)
+    )
+    with pytest.raises(RuntimeError, match="replaced the lineage"):
+        tl.compact_versioned(spark, path)
+    assert seen == [4, 5]
+    assert tl.current_version(path) == 5  # the winner's snapshot stands
+    assert sorted(
+        r["k"] for r in tl.read_versioned(spark, path).collect()
+    ) == list(range(500, 510))
+
+
+def test_publish_multi_batch_refolds_on_winner_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A multi-table append that loses the commit race folds again on
+    the winner's root manifest: every member table lists both
+    writers' files."""
+    import trendengine_spark.tablelog as tl
+
+    root = str(tmp_path / "root")
+
+    def batch(lo):
+        return spark.range(lo, lo + 5).withColumnRenamed("id", "k")
+
+    tl.publish_multi_versioned_batch({"a": batch(0), "b": batch(0)}, 0, root)
+    seen = _race_first_fold(
+        monkeypatch,
+        tl,
+        lambda: tl.publish_multi_versioned_batch(
+            {"a": batch(100), "b": batch(100)}, 1, root
+        ),
+    )
+    assert tl.publish_multi_versioned_batch({"a": batch(200)}, 2, root)
+    assert seen == [0, 1]
+    winner = tl._read_manifest(root, 1)["tables"]
+    final = tl._read_manifest(root, 2)["tables"]
+    assert final["b"] == winner["b"]  # untouched table carried through
+    assert final["a"][: len(winner["a"])] == winner["a"]
+
+    def rows(t):
+        return sorted(
+            r["k"] for r in tl.read_multi_versioned(spark, root, t).collect()
         )
-    with pytest.raises(ValueError, match="rebase"):
-        tl._commit_manifest(path, ["b.parquet"], base_version=0)
-    assert tl.current_version(path) == 0  # nothing drifted
+
+    assert rows("a") == sorted([*range(5), *range(100, 105), *range(200, 205)])
+    assert rows("b") == sorted([*range(5), *range(100, 105)])
+
+
+def test_parent_format_manifests_read_append_compact_vacuum(spark, tmp_path):
+    """Tables whose manifests were written in the earlier on-disk
+    formats — single-table ``files``/``stats`` (with and without
+    stats) and multi-table ``tables`` — read, append, compact and
+    vacuum to the expected rows, and new commits keep those formats."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import trendengine_spark.tablelog as tl
+
+    def put(table_dir, name, ks):
+        os.makedirs(os.path.join(table_dir, "data"), exist_ok=True)
+        pq.write_table(
+            pa.table({"k": pa.array(ks, pa.int64())}),
+            os.path.join(table_dir, "data", name),
+        )
+
+    def manifest(root, v, body):
+        os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
+        with open(os.path.join(root, "_manifests", f"v{v:06d}.json"), "w") as fh:
+            json.dump({"version": v, **body, "committed_at": 1.0}, fh)
+
+    def keys(df):
+        return sorted(r["k"] for r in df.collect())
+
+    # single table: v0 without stats, v1 appends with stats + batch_id
+    path = str(tmp_path / "single")
+    put(path, "a.parquet", [1, 2])
+    put(path, "b.parquet", [3])
+    put(path, "stray.parquet", [99])  # never committed
+    manifest(path, 0, {"files": ["a.parquet"]})
+    manifest(
+        path,
+        1,
+        {
+            "files": ["a.parquet", "b.parquet"],
+            "stats": {"b.parquet": {"rows": 1, "cols": {"k": [3, 3]}}},
+            "batch_id": 4,
+        },
+    )
+    assert keys(tl.read_versioned(spark, path, version=0)) == [1, 2]
+    assert keys(tl.read_versioned(spark, path)) == [1, 2, 3]
+    # b.parquet's recorded stats prune it; stat-less a.parquet is kept
+    pruned = tl.read_versioned(spark, path, predicate={"k": (5, 9)})
+    assert [os.path.basename(f) for f in pruned.inputFiles()] == ["a.parquet"]
+    assert tl.last_batch_id(path) == 4
+    assert not tl.publish_versioned_batch(spark.range(1), 4, path)  # replay
+    new = spark.createDataFrame([(7,)], "k long")
+    assert tl.publish_versioned_batch(new, 5, path)
+    m2 = tl._read_manifest(path, 2)
+    assert set(m2) == {"version", "files", "stats", "committed_at", "batch_id"}
+    assert m2["files"][:2] == ["a.parquet", "b.parquet"]
+    assert m2["stats"]["b.parquet"]["cols"]["k"] == [3, 3]  # inherited
+    assert keys(tl.read_versioned(spark, path)) == [1, 2, 3, 7]
+    assert tl.compact_versioned(spark, path) == 3
+    assert tl.last_batch_id(path) == 5
+    out = tl.vacuum_versioned(path, keep_last=1)
+    assert out["dropped_manifests"] == 3
+    assert not os.path.exists(os.path.join(path, "data", "stray.parquet"))
+    assert keys(tl.read_versioned(spark, path)) == [1, 2, 3, 7]
+
+    # multi-table root: stats keyed per table, one table stat-less
+    root = str(tmp_path / "multi")
+    put(os.path.join(root, "x"), "x0.parquet", [10, 11])
+    put(os.path.join(root, "y"), "y0.parquet", [20])
+    put(os.path.join(root, "y"), "y_stray.parquet", [29])
+    manifest(
+        root,
+        0,
+        {
+            "tables": {"x": ["x0.parquet"], "y": ["y0.parquet"]},
+            "stats": {"x": {"x0.parquet": {"rows": 2, "cols": {"k": [10, 11]}}}},
+            "batch_id": 0,
+        },
+    )
+    assert keys(tl.read_multi_versioned(spark, root, "x")) == [10, 11]
+    assert tl.publish_multi_versioned_batch(
+        {"y": spark.createDataFrame([(21,)], "k long")}, 1, root
+    )
+    m1 = tl._read_manifest(root, 1)
+    assert set(m1) == {"version", "tables", "stats", "committed_at", "batch_id"}
+    assert m1["tables"]["x"] == ["x0.parquet"]
+    assert m1["stats"]["x"]["x0.parquet"]["rows"] == 2  # inherited
+    assert keys(tl.read_multi_versioned(spark, root, "y")) == [20, 21]
+    assert tl.compact_versioned(spark, root) == 2
+    assert len(tl._read_manifest(root, 2)["tables"]["y"]) == 1
+    assert tl.last_batch_id(root) == 1
+    tl.vacuum_versioned(root, keep_last=1)
+    assert not os.path.exists(os.path.join(root, "y", "data", "y_stray.parquet"))
+    assert keys(tl.read_multi_versioned(spark, root, "x")) == [10, 11]
+    assert keys(tl.read_multi_versioned(spark, root, "y")) == [20, 21]
 
 
 def test_versioned_manifest_stats_prune_files(spark, tmp_path):

@@ -707,7 +707,7 @@ def test_streaming_dedup_pipeline_folds_probes_and_replays(spark, tmp_path):
         _stage_files,
         current_version,
         read_multi_versioned,
-        vacuum_multi_versioned,
+        vacuum_versioned,
     )
 
     root = str(tmp_path / "dedup_root")
@@ -790,7 +790,7 @@ def test_streaming_dedup_pipeline_folds_probes_and_replays(spark, tmp_path):
     bands_df = read_multi_versioned(spark, root, BANDS)
     assert bands_df.select("id").distinct().count() == 4
     # vacuum reclaims the crashed attempt's unreferenced stragglers
-    removed = vacuum_multi_versioned(root, keep_last=2)["removed_files"]
+    removed = vacuum_versioned(root, keep_last=2)["removed_files"]
     assert removed >= len(orphan_corpus) + len(orphan_sigs)
     assert sorted(
         r["doc_id"]

@@ -109,6 +109,26 @@ def filter_polygon(
     )
 
 
+def _select(
+    obs: DataFrame,
+    year_from: int,
+    year_to: int,
+    bbox: tuple[float, float, float, float] | None = None,
+    point: tuple[float, float] | None = None,
+    polygon: list[tuple[float, float]] | None = None,
+) -> DataFrame:
+    """The selection every flow starts from: the year range, then the
+    bbox, polygon and point AOIs that were given, in that order."""
+    df = filter_years(obs, year_from, year_to)
+    if bbox is not None:
+        df = filter_bbox(df, *bbox)
+    if polygon is not None:
+        df = filter_polygon(df, polygon)
+    if point is not None:
+        df = filter_point(df, *point)
+    return df
+
+
 def polytrend(
     obs: DataFrame,
     year_from: int,
@@ -131,13 +151,7 @@ def polytrend(
     series_cols = series_cols or PIXEL
     if include_series is None:
         include_series = point is not None
-    df = filter_years(obs, year_from, year_to)
-    if bbox is not None:
-        df = filter_bbox(df, *bbox)
-    if polygon is not None:
-        df = filter_polygon(df, polygon)
-    if point is not None:
-        df = filter_point(df, *point)
+    df = _select(obs, year_from, year_to, bbox, point, polygon)
     annual = annual_composite(df, series_cols, how=composite)
     return polytrend_groups(
         annual,
@@ -204,13 +218,7 @@ def dbest(
     string — SURVEY.md §4.4.7)."""
     series_cols = series_cols or PIXEL
     algorithm = algorithm.replace(" ", "_").replace("changedetection", "change_detection")
-    df = filter_years(obs, year_from, year_to)
-    if bbox is not None:
-        df = filter_bbox(df, *bbox)
-    if polygon is not None:
-        df = filter_polygon(df, polygon)
-    if point is not None:
-        df = filter_point(df, *point)
+    df = _select(obs, year_from, year_to, bbox, point, polygon)
     # densify to a regular monthly grid: the fitting UDFs index seasonal
     # phase by position, so missing months must become null rows (then
     # interpolated in-UDF), not silently absent (ADVICE r1)
@@ -245,11 +253,7 @@ def mann_kendall(
     from trendengine_spark.functions.mannkendall import mann_kendall_groups
 
     series_cols = series_cols or PIXEL
-    df = filter_years(obs, year_from, year_to)
-    if bbox is not None:
-        df = filter_bbox(df, *bbox)
-    if point is not None:
-        df = filter_point(df, *point)
+    df = _select(obs, year_from, year_to, bbox, point)
     annual = annual_composite(df, series_cols, how=composite)
     return mann_kendall_groups(
         annual, series_cols, time_col="yr", value_col="value"
@@ -274,11 +278,7 @@ def seasonal_mann_kendall(
     )
 
     series_cols = series_cols or PIXEL
-    df = filter_years(obs, year_from, year_to)
-    if bbox is not None:
-        df = filter_bbox(df, *bbox)
-    if point is not None:
-        df = filter_point(df, *point)
+    df = _select(obs, year_from, year_to, bbox, point)
     monthly = monthly_composite(df, series_cols)
     monthly = monthly.withColumn(
         "season", F.month("period_start")
@@ -308,11 +308,7 @@ def bfast_monitor(
     from trendengine_spark.functions.bfast import bfast_monitor_groups
 
     series_cols = series_cols or PIXEL
-    df = filter_years(obs, year_from, year_to)
-    if bbox is not None:
-        df = filter_bbox(df, *bbox)
-    if point is not None:
-        df = filter_point(df, *point)
+    df = _select(obs, year_from, year_to, bbox, point)
     monthly = monthly_composite(df, series_cols)
     return bfast_monitor_groups(
         monthly, series_cols, time_col="period_start",

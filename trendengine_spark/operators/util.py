@@ -279,9 +279,9 @@ def fit_partitioned(df: DataFrame, keys: list[str]) -> DataFrame:
     not bytes (measured: the DBEST fit ran 8 tasks on a 32-core box,
     4× under-parallel). An EXPLICIT ``repartition(n, keys)`` is
     exempt from AQE coalescing, and every row of a key lands in one
-    partition, so whatever runs per key downstream — a sort-and-stream
-    pass (:func:`fit_series`) or a keyed aggregate, which reuses the
-    hash partitioning with no second exchange — runs at
+    partition, so whatever runs per key downstream — e.g. a keyed
+    aggregate, which reuses the hash partitioning with no second
+    exchange — runs at
     :func:`pinned_width`: the session's shuffle width, floored at the
     core count (r15: a static shuffle setting below the core count,
     e.g. the bench conf's 8, starved the fit the same way AQE
@@ -305,12 +305,12 @@ def fit_series(
     per-group work, SIGMOD 2022 "Efficient Evaluation of
     Arbitrarily-Framed Holistic SQL Aggregates").
 
-    Plan: :func:`fit_partitioned` (every row of a series in one
-    partition, at :func:`pinned_width`) → ``sortWithinPartitions(keys,
+    Plan: hash ``repartition`` on ``keys`` to the core count (every
+    row of a series in one partition) → ``sortWithinPartitions(keys,
     order_cols)`` with nulls last in ``order_cols`` (pandas'
-    ``sort_values`` placement) → ``coalesce`` to the core count → one
-    ``mapInArrow``. Series are grouped as ``groupBy(keys)`` groups
-    them: null keys form one series and NaN keys another.
+    ``sort_values`` placement) → one ``mapInArrow``. Series are
+    grouped as ``groupBy(keys)`` groups them: null keys form one
+    series and NaN keys another.
 
     ``fit_one`` receives ``{col: numpy array}`` for ``cols``, rows in
     ``order_cols`` order (Arrow's ``to_numpy``: float nulls and
@@ -328,15 +328,12 @@ def fit_series(
     out_types = {
         f.name: to_arrow_type(f.dataType) for f in schema.fields if f.name not in keys
     }
-    # mapInArrow, unlike a grouped map, starts a Python task even for an
-    # empty partition, at ~0.1 s each (pyspark 4.1, local[4]): 3 series
-    # over the default 200 shuffle partitions took 6 s. So the sorted
-    # hash partitions are concatenated into one task per core; a series
-    # stays contiguous, as all its rows sit in one hash partition.
+    # one partition per core: mapInArrow starts a Python task even for
+    # an empty partition, at ~0.1 s each (pyspark 4.1, local[4])
     ordered = (
-        fit_partitioned(obs.select(*keys, *dict.fromkeys([*order_cols, *cols])), keys)
+        obs.select(*keys, *dict.fromkeys([*order_cols, *cols]))
+        .repartition(obs.sparkSession.sparkContext.defaultParallelism, *keys)
         .sortWithinPartitions(*keys, *[F.col(c).asc_nulls_last() for c in order_cols])
-        .coalesce(obs.sparkSession.sparkContext.defaultParallelism)
     )
 
     def emit(key_parts, rows):
@@ -499,47 +496,47 @@ def exact_rank_element(df, col: str, q: float, n: int | None = None):
         single task over ALL distinct values, a silent multi-hour
         stall if the guard path ever fired at 10⁹⁺ distinct values.
         Now: (1) tie-collapse to distinct-value counts (partial-agg),
-        (2) range-partition the distinct values and pin the layout
-        (persist — re-execution would re-sample range bounds between
-        the two passes), (3) per-bucket totals → driver-side running
-        offsets (≤ width rows), (4) the running-count window runs
-        INSIDE the one target bucket only: ~|distinct|/width rows per
-        task instead of |distinct|, every step spillable."""
+        (2) collect range bounds over the distinct values once (one
+        bounded GK aggregate) and derive an explicit bucket id from
+        them — both passes below bucket by the same literal bounds,
+        (3) per-bucket totals → driver-side running offsets (≤ width
+        rows), (4) the running-count window runs INSIDE the one target
+        bucket only: ~|distinct|/width rows per task instead of
+        |distinct|, every step spillable."""
         g = sliced.groupBy(col).agg(F.count(F.lit(1)).alias("_c"))
-        nb = pinned_width(sliced.sparkSession)
-        part = (
-            g.repartitionByRange(nb, F.col(col).asc())
-            .withColumn("_pid", F.spark_partition_id())
-            .persist()
+        nb = max(pinned_width(sliced.sparkSession), 2)
+        cuts = g.agg(
+            F.percentile_approx(col, [i / nb for i in range(1, nb)]).alias("b")
+        ).collect()[0]["b"]
+        bounds = F.array(*[F.lit(b) for b in sorted(set(cuts or []))])
+        part = g.withColumn(
+            "_bucket", F.size(F.filter(bounds, lambda b: b < F.col(col)))
         )
-        try:
-            totals = sorted(
-                part.groupBy("_pid").agg(F.sum("_c").alias("_t")).collect(),
-                key=lambda r: r["_pid"],
-            )
-            run = 0
-            hit_pid, offset = None, 0
-            for r in totals:
-                if run + r["_t"] >= target_rank:
-                    hit_pid, offset = r["_pid"], run
-                    break
-                run += r["_t"]
-            if hit_pid is None:
-                return None  # target_rank beyond the slice
-            w = Window.orderBy(F.col(col).asc()).rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-            hit = (
-                part.filter(F.col("_pid") == hit_pid)
-                .withColumn("_cum", F.sum("_c").over(w))
-                .filter(F.col("_cum") >= target_rank - offset)
-                .orderBy(F.col(col).asc())
-                .limit(1)
-                .collect()
-            )
-            return hit[0][0] if hit else None
-        finally:
-            part.unpersist(blocking=False)
+        totals = sorted(
+            part.groupBy("_bucket").agg(F.sum("_c").alias("_t")).collect(),
+            key=lambda r: r["_bucket"],
+        )
+        run = 0
+        hit_bucket, offset = None, 0
+        for r in totals:
+            if run + r["_t"] >= target_rank:
+                hit_bucket, offset = r["_bucket"], run
+                break
+            run += r["_t"]
+        if hit_bucket is None:
+            return None  # target_rank beyond the slice
+        w = Window.orderBy(F.col(col).asc()).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        hit = (
+            part.filter(F.col("_bucket") == hit_bucket)
+            .withColumn("_cum", F.sum("_c").over(w))
+            .filter(F.col("_cum") >= target_rank - offset)
+            .orderBy(F.col(col).asc())
+            .limit(1)
+            .collect()
+        )
+        return hit[0][0] if hit else None
 
     # GK bracket: rank error ≤ n/acc, so [q ± 2/acc] (rank units:
     # k ± 2n/acc) brackets the true element; acc fixed ⇒ sketch

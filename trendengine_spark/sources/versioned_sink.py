@@ -18,6 +18,9 @@ protocol drives the manifest-versioned table layer
   output into a visible version;
 - ``abort`` deletes the staged files.
 
+The commit follows the table layer's one rule: the next manifest is a
+fold over the head manifest, linked at head + 1 and re-folded on the
+winner's manifest if a concurrent writer took that slot.
 ``mode('append')`` folds the previous version's file list into the
 new manifest (no data rewrite); ``mode('overwrite')`` publishes only
 the new files as the next version — either way old versions remain
@@ -42,6 +45,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from trendengine_spark.tablelog import _DATA_DIR, _publish
+
 
 @dataclass
 class _FileMessage(WriterCommitMessage):
@@ -65,8 +70,7 @@ class VersionedWriter(DataSourceWriter):
             raise ValueError("te_versioned requires a save path")
         self.schema = schema
         self.overwrite = overwrite
-        os.makedirs(os.path.join(self.path, "data"), exist_ok=True)
-        os.makedirs(os.path.join(self.path, "_manifests"), exist_ok=True)
+        os.makedirs(os.path.join(self.path, _DATA_DIR), exist_ok=True)
 
     # executor-side: one immutable file per non-empty partition
     def write(self, iterator):
@@ -91,45 +95,19 @@ class VersionedWriter(DataSourceWriter):
                 arrays.append(pa.array(cols[f.name]))
         table = pa.Table.from_arrays(arrays, names=names)
         name = f"{uuid.uuid4().hex}.parquet"
-        pq.write_table(table, os.path.join(self.path, "data", name))
+        pq.write_table(table, os.path.join(self.path, _DATA_DIR, name))
         return _FileMessage(name)
 
     # driver-side, once, only after all tasks succeeded: THE commit
     def commit(self, messages):
-        from trendengine_spark.tablelog import (
-            _commit_manifest,
-            _read_manifest,
-            current_version,
-        )
-
         new_files = [m.name for m in messages if m and m.name]
-        if self.overwrite:
-            # self-contained file list: a lost optimistic-concurrency
-            # race can safely retry at the next version slot
-            _commit_manifest(self.path, new_files)
-            return
-        # append FOLDS the previous file list into the manifest, so a
-        # lost race must REBASE on the winner's manifest, never retry
-        # with the stale list (that would silently drop the winner's
-        # files — ADVICE r6 fix)
-        while True:
-            prev = current_version(self.path)
-            files = new_files
-            if prev >= 0:
-                files = _read_manifest(self.path, prev)["files"] + new_files
-            try:
-                _commit_manifest(
-                    self.path, files, on_conflict="raise", base_version=prev
-                )
-                return
-            except FileExistsError:
-                continue
+        _publish(self.path, {"": new_files}, append=not self.overwrite)
 
     def abort(self, messages):
         for m in messages:
             if m and m.name:
                 try:
-                    os.remove(os.path.join(self.path, "data", m.name))
+                    os.remove(os.path.join(self.path, _DATA_DIR, m.name))
                 except OSError:
                     pass
 

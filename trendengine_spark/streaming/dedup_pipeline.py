@@ -91,7 +91,7 @@ def dedup_fold_batch(
     measured per-batch latency creeping ~+4 ms/batch because each
     append commit grows the manifest file list by one and the probe
     re-plans over every file): every k-th applied batch, compact +
-    vacuum the transaction root (`tablelog.compact_multi_versioned`
+    vacuum the transaction root (`tablelog.compact_versioned`
     carries the newest ``batch_id`` into the compacted manifest, so
     replay dedup keeps answering across maintenance — its documented
     contract). The k-th batch pays the rewrite (O(state), amortized
@@ -171,12 +171,12 @@ def dedup_fold_batch(
         and batch_id % maintenance_every == 0
     ):
         from trendengine_spark.tablelog import (
-            compact_multi_versioned,
-            vacuum_multi_versioned,
+            compact_versioned,
+            vacuum_versioned,
         )
 
-        compact_multi_versioned(spark, root)
-        vacuum_multi_versioned(root, keep_last=2)
+        compact_versioned(spark, root)
+        vacuum_versioned(root, keep_last=2)
     return {
         "skipped": not committed,
         "admitted": n_kept,

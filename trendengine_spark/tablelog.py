@@ -14,16 +14,21 @@ This module is that mechanism reduced to its engine-portable core:
 - data files live under ``<path>/data/`` with unique names (never
   overwritten, never deleted by writers);
 - ``<path>/_manifests/vNNNNNN.json`` lists the file names of one
-  version; the commit is a single atomic ``os.replace`` of the
-  manifest (readable version = the manifest exists, entirely);
+  version (readable version = the manifest exists, entirely);
 - ``read_versioned`` loads the newest (or a pinned) manifest and
   scans exactly those files;
 - ``vacuum_versioned`` removes data files referenced only by
   dropped manifests.
 
-Single-writer by contract (like the rest of the plain-parquet sinks);
-at 100 TB the same layout is fronted by a catalog/lock service for
-multi-writer commits — the read path is unchanged.
+One commit rule covers every write: :func:`_commit` reads the head
+manifest, FOLDS it into the next manifest body and links that body at
+head + 1 with ``os.link``, which fails instead of overwriting. A writer
+that loses the race folds again on the winner's manifest, so a
+manifest only ever lands directly above the one it was built from and
+no commit can drop another's files. Snapshot, append, compaction and
+multi-table commits differ only in their fold. At 100 TB the same
+layout is fronted by a catalog/lock service for the link step — the
+read path is unchanged.
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -109,7 +115,6 @@ def _stage_files(df: DataFrame, path: str) -> list[str]:
     ``data/`` pool under unique names; returns the names. Nothing is
     visible until a manifest references them."""
     os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
-    os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
     df.write.parquet(staging)
     names = []
@@ -129,9 +134,7 @@ def _stage_files(df: DataFrame, path: str) -> list[str]:
 
 
 def _read_manifest(path: str, version: int) -> dict:
-    with open(
-        os.path.join(path, _MANIFEST_DIR, f"v{version:06d}.json")
-    ) as fh:
+    with open(_manifest_file(path, version)) as fh:
         return json.load(fh)
 
 
@@ -211,112 +214,126 @@ def last_batch_id(path: str) -> int | None:
     return None
 
 
-def _commit_manifest(
-    path: str,
-    files: list[str],
-    batch_id: int | None = None,
-    on_conflict: str = "retry",
-    base_version: int | None = None,
-) -> int:
-    """Publish ``files`` as the next version — THE commit point; a
-    crash before it leaves only invisible stragglers.
+def _applied(root: str, batch_id: int) -> bool:
+    """Whether streaming batch ``batch_id`` is already committed."""
+    bid = last_batch_id(root)
+    return bid is not None and batch_id <= bid
 
-    Optimistic concurrency: the manifest is linked into place with
-    ``os.link`` (fails with EEXIST instead of overwriting), so two
-    racing writers cannot silently clobber each other's commit.
-    ``on_conflict`` decides what the LOSER does:
 
-    - ``'retry'`` — re-read and take the next version number. Correct
-      ONLY for self-contained commits (snapshot / append-new-data):
-      the file list being published doesn't depend on the current
-      version, so publishing it one slot later is the same commit.
-    - ``'raise'`` — re-raise ``FileExistsError``. Required for FOLDED
-      commits whose file list embeds the previous version's files
-      (VersionedWriter append, streaming append): a blind retry would
-      publish a manifest built on a stale list and silently DROP the
-      winning writer's files. The caller must re-read the current
-      manifest, rebase its fold, and commit again.
+def _tables(m: dict | None) -> dict[str, list[str]]:
+    """A manifest's member tables → file lists. A single-table
+    manifest (``files`` plus flat ``stats``) is one table, ``""``, at
+    the root; a multi-table root's manifest keys both by table."""
+    if m is None:
+        return {}
+    return m["tables"] if "tables" in m else {"": m["files"]}
 
-    ``batch_id``, when given, is recorded in the manifest — the
-    idempotence marker streaming commits use to make retried
-    microbatches no-ops (see :func:`publish_stream_versioned`).
 
-    ``base_version`` (r8) PINS a folded commit to the slot directly
-    above the version its file list was built from: the commit goes to
-    exactly ``base_version + 1`` and conflicts (handled per
-    ``on_conflict``) if that slot is taken. Without the pin there is a
-    TOCTOU hole even under ``on_conflict='raise'``: a writer landing
-    between the caller's snapshot read and this function's own
-    ``current_version()`` re-read moves the fold to a LATER slot with
-    no link conflict at all — publishing the stale list and silently
-    dropping the interleaved writer's files. Folded callers
-    (:func:`publish_versioned_batch`, :func:`compact_versioned`,
-    :class:`VersionedWriter` append) must pass it."""
-    if on_conflict not in ("retry", "raise"):
-        raise ValueError(f"unknown on_conflict {on_conflict!r}")
-    if base_version is not None and on_conflict != "raise":
-        raise ValueError(
-            "base_version pins one slot; retrying it would spin — "
-            "folded commits must use on_conflict='raise' and rebase"
-        )
-    # file stats (r8): inherit stats for files already in the head
-    # manifest (folded commits re-list them), read footers only for
-    # NEW files — commit cost stays O(new files). Failure to stat a
-    # file records no entry, which pruning treats as "never skip".
-    stats: dict[str, dict] = {}
-    head_v = current_version(path)
-    if head_v >= 0:
-        try:
-            stats.update(_read_manifest(path, head_v).get("stats", {}))
-        except OSError:
-            pass
-    for f in files:
-        if f not in stats:
+def _new_stats(root: str, tables: dict[str, list[str]]) -> dict[str, dict]:
+    """Footer stats of newly staged files, per table (r8) — read once
+    per new file, before the commit loop. A file that cannot be read
+    records no entry, which pruning treats as "never skip"."""
+    out: dict[str, dict] = {}
+    for t, files in tables.items():
+        out[t] = {}
+        for f in files:
             try:
-                stats[f] = _file_stats(path, f)
+                out[t][f] = _file_stats(os.path.join(root, t), f)
             except Exception:
                 pass
-    stats = {f: s for f, s in stats.items() if f in set(files)}
+    return out
+
+
+def _body(
+    head: dict | None,
+    tables: dict[str, list[str]],
+    new_stats: dict[str, dict],
+    batch_id: int | None,
+) -> dict:
+    """The manifest body listing ``tables``: stats of files carried
+    from ``head`` are inherited, new files take ``new_stats`` — commit
+    cost stays O(new files). Written in the single-table format when
+    ``tables`` is just the root table."""
+    old = (head or {}).get("stats", {})
+    if head is not None and "tables" not in head:
+        old = {"": old}
+    stats = {}
+    for t, files in tables.items():
+        old_t, new_t = old.get(t, {}), new_stats.get(t, {})
+        stats[t] = {f: s for f in files if (s := new_t.get(f) or old_t.get(f))}
+    if set(tables) == {""}:
+        body = {"files": tables[""], "stats": stats[""]}
+    else:
+        body = {"tables": tables, "stats": stats}
+    if batch_id is not None:
+        body["batch_id"] = batch_id
+    return body
+
+
+def _commit(root: str, fold: Callable[[dict | None], dict | None]) -> int | None:
+    """THE commit point of every write. Reads the head manifest (None
+    for an empty table), calls ``fold(head)`` for the next manifest
+    body and links it at head + 1 with ``os.link``; a lost race calls
+    ``fold`` again on the winner's manifest. ``fold`` returns None to
+    skip the commit (an already-applied ``batch_id``) or raises to
+    abort it. Returns the committed version, or None when skipped. A
+    crash before the link leaves only invisible stragglers."""
+    os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
     while True:
-        version = (
-            base_version + 1
-            if base_version is not None
-            else current_version(path) + 1
-        )
-        final = os.path.join(path, _MANIFEST_DIR, f"v{version:06d}.json")
+        head_v = current_version(root)
+        body = fold(_read_manifest(root, head_v) if head_v >= 0 else None)
+        if body is None:
+            return None
+        version = head_v + 1
+        final = _manifest_file(root, version)
         tmp = final + f".tmp{uuid.uuid4().hex}"
-        body = {
-            "version": version,
-            "files": files,
-            "stats": stats,
-            # audit metadata (r10): wall-clock commit time, for
-            # table_history / retention decisions only — never query
-            # semantics (results must stay time-independent)
-            "committed_at": time.time(),
-        }
-        if batch_id is not None:
-            body["batch_id"] = batch_id
         with open(tmp, "w") as fh:
-            json.dump(body, fh)
+            # committed_at (r10): audit metadata for table_history /
+            # retention only — never query semantics
+            json.dump(
+                {"version": version, **body, "committed_at": time.time()}, fh
+            )
         try:
             os.link(tmp, final)
-            os.remove(tmp)
-            _write_head_hint(path, version)
-            return version
         except FileExistsError:
-            os.remove(tmp)  # lost the race
-            if on_conflict == "raise":
-                raise
-            # self-contained commit: re-read and retry the next slot
+            continue  # lost the race: fold again on the winner's manifest
+        finally:
+            os.remove(tmp)
+        _write_head_hint(root, version)
+        return version
+
+
+def _publish(
+    root: str,
+    staged: dict[str, list[str]],
+    append: bool,
+    batch_id: int | None = None,
+) -> int | None:
+    """Commit staged files (per member table; ``""`` is the root
+    table) as the next version: on their own, or with ``append`` after
+    the head's files, member tables the batch does not touch carried
+    through. A ``batch_id`` is recorded in the manifest, and the
+    commit is skipped (None) when that batch is already applied."""
+    new_stats = _new_stats(root, staged)
+
+    def fold(head):
+        if batch_id is not None and _applied(root, batch_id):
+            return None
+        tables = dict(_tables(head)) if append else {}
+        for t, files in staged.items():
+            tables[t] = tables.get(t, []) + files
+        return _body(head, tables, new_stats, batch_id)
+
+    return _commit(root, fold)
 
 
 def write_versioned(spark: SparkSession, df: DataFrame, path: str) -> int:
     """Commit ``df`` as the table's next version; returns the version.
 
-    Stage (invisible) → one atomic manifest rename (the commit).
+    Stage (invisible) → one atomic manifest link (the commit).
     Readers pinned to any OTHER version are unaffected: no visible
     file is ever mutated."""
-    return _commit_manifest(path, _stage_files(df, path))
+    return _publish(path, {"": _stage_files(df, path)}, append=False)
 
 
 def write_versioned_clustered(
@@ -348,9 +365,8 @@ def write_versioned_clustered(
     At 100 TB this is the same one extra shuffle per ingest batch
     that every clustered lakehouse write pays, bought back on every
     selective read."""
-    return _commit_manifest(
-        path, _stage_files(_zorder_layout(df, zorder_cols, num_partitions), path)
-    )
+    staged = _stage_files(_zorder_layout(df, zorder_cols, num_partitions), path)
+    return _publish(path, {"": staged}, append=False)
 
 
 def _zorder_layout(
@@ -462,31 +478,36 @@ def read_versioned(
 def vacuum_versioned(path: str, keep_last: int = 2) -> dict:
     """Drop all but the newest ``keep_last`` manifests and delete data
     files no surviving manifest references (incl. crash stragglers
-    that were never committed). Run only when no reader can still be
-    pinned older than the horizon — the retention contract every
-    log-structured table format has."""
-    ms = _manifest_paths(path)
-    keep, drop = ms[-keep_last:], ms[:-keep_last]
-    referenced: set[str] = set()
-    for m in keep:
-        with open(m) as fh:
-            referenced.update(json.load(fh)["files"])
-    removed = 0
-    data_dir = os.path.join(path, _DATA_DIR)
-    for f in os.listdir(data_dir):
-        if f not in referenced:
-            os.remove(os.path.join(data_dir, f))
-            removed += 1
-    for m in drop:
-        os.remove(m)
-    # a writer that crashed BEFORE moving its part files leaves a
-    # _staging_* directory; vacuum runs under the same no-live-writer
-    # contract as file deletion, so these are always dead
+    that were never committed), in every table the surviving
+    manifests name — the root table of a single-table path, each
+    member table of a multi-table root. Run only when no reader can
+    still be pinned older than the horizon — the retention contract
+    every log-structured table format has."""
     import shutil
 
-    for d in os.listdir(path):
-        if d.startswith("_staging_"):
-            shutil.rmtree(os.path.join(path, d))
+    ms = _manifest_paths(path)
+    keep, drop = ms[-keep_last:], ms[:-keep_last]
+    referenced: dict[str, set[str]] = {}
+    for m in keep:
+        with open(m) as fh:
+            for t, files in _tables(json.load(fh)).items():
+                referenced.setdefault(t, set()).update(files)
+    removed = 0
+    for t, names in referenced.items():
+        table_dir = os.path.join(path, t)
+        data_dir = os.path.join(table_dir, _DATA_DIR)
+        for f in os.listdir(data_dir) if os.path.isdir(data_dir) else []:
+            if f not in names:
+                os.remove(os.path.join(data_dir, f))
+                removed += 1
+        # a writer that crashed BEFORE moving its part files leaves a
+        # _staging_* directory; vacuum runs under the same no-live-writer
+        # contract as file deletion, so these are always dead
+        for d in os.listdir(table_dir):
+            if d.startswith("_staging_"):
+                shutil.rmtree(os.path.join(table_dir, d))
+    for m in drop:
+        os.remove(m)
     return {"dropped_manifests": len(drop), "removed_files": removed}
 
 
@@ -497,74 +518,66 @@ def compact_versioned(
     zorder_by: tuple[str, str] | None = None,
 ) -> int:
     """Rewrite the newest version's data into ~``target_bytes`` files
-    and publish the compacted file set as the next version — the
-    manifest-growth answer for append-mode tables: every streaming
-    append manifest lists ALL previous files plus its own, so after
-    10^5 small-batch commits the manifest names 10^5+ files (multi-MB
-    JSON, re-parsed per snapshot read) and the scan opens 10^5 tiny
-    parquet files. Compaction resets both to the data's natural file
-    count; older versions stay readable (time travel) until
-    :func:`vacuum_versioned` reclaims them — run the two together as
-    the maintenance pair every table format ships (Iceberg
-    rewrite_data_files + expire_snapshots). Returns the new version.
+    per table and publish the compacted file sets as the next version
+    — the manifest-growth answer for append-mode tables: every
+    streaming append manifest lists ALL previous files plus its own,
+    so after 10^5 small-batch commits the manifest names 10^5+ files
+    (multi-MB JSON, re-parsed per snapshot read) and the scan opens
+    10^5 tiny parquet files. Compaction resets both to the data's
+    natural file count; older versions stay readable (time travel)
+    until :func:`vacuum_versioned` reclaims them — run the two
+    together as the maintenance pair every table format ships
+    (Iceberg rewrite_data_files + expire_snapshots). Works on a
+    single-table path and on a multi-table root alike (every member
+    table compacted, one commit). Returns the new version.
 
-    Folded-commit safety (r8, ADVICE fix): the compacted manifest is a
-    FOLD of the snapshot read at the top — committing it with the
-    default ``on_conflict='retry'`` would let a concurrent append
-    racing the compaction win the version slot and then be silently
-    dropped when the retry publishes the stale compacted list one slot
-    later (the exact stale-list hazard ``on_conflict='raise'`` exists
-    to prevent). The commit therefore raises on conflict and REBASES:
-    files the winner added on top of our snapshot (new head's list
-    minus the snapshot's list) are appended, uncompacted, onto the
-    compacted set — they get folded by the next maintenance run. A
-    winner that REPLACED the lineage (snapshot-mode commit: its list
-    is not a superset of ours) cannot be rebased; that aborts with a
-    clear error rather than resurrecting replaced data. The newest
-    manifest's ``batch_id`` is carried into the compacted manifest so
-    :func:`last_batch_id` keeps answering after maintenance and a
-    replayed streaming microbatch stays a no-op."""
-    df = read_versioned(spark, path)
-    data_dir = os.path.join(path, _DATA_DIR)
+    The commit is a fold over the snapshot read at the top: files a
+    concurrent writer added on top of that snapshot are appended,
+    uncompacted, onto the compacted set — they get folded by the next
+    maintenance run. A winner that REPLACED a table's lineage
+    (snapshot-mode commit: its list is not a superset of ours) cannot
+    be rebased; that aborts with a clear error rather than
+    resurrecting replaced data. The newest manifest's ``batch_id`` is
+    carried into the compacted manifest so :func:`last_batch_id` keeps
+    answering after maintenance and a replayed streaming microbatch
+    stays a no-op."""
     v = current_version(path)
-    snap = _read_manifest(path, v)
-    files = snap["files"]
-    total = sum(
-        os.path.getsize(os.path.join(data_dir, f))
-        for f in files
-        if os.path.exists(os.path.join(data_dir, f))
-    )
-    n_out = max(1, -(-total // target_bytes))  # ceil
-    # zorder_by (r9): compaction doubles as the re-clustering pass
-    # (Delta OPTIMIZE ZORDER) — appended-but-unclustered batches fold
-    # into the Morton layout here, restoring planning-time prunability
-    # across the WHOLE table, not just per batch
-    if zorder_by is not None:
-        out = _zorder_layout(df, zorder_by, n_out)
-    else:
-        out = df.coalesce(n_out)
-    compacted = _stage_files(out, path)
-    snapshot_set = set(files)
-    while True:
-        head = current_version(path)
-        head_m = snap if head == v else _read_manifest(path, head)
-        head_files = head_m["files"]
-        if head != v and not snapshot_set.issubset(head_files):
-            raise RuntimeError(
-                f"compact_versioned: version {head} replaced the lineage "
-                f"compacted from version {v}; aborting (re-run compaction)"
-            )
-        delta = [f for f in head_files if f not in snapshot_set]
-        try:
-            return _commit_manifest(
-                path,
-                compacted + delta,
-                batch_id=head_m.get("batch_id"),
-                on_conflict="raise",
-                base_version=head,
-            )
-        except FileExistsError:
-            continue  # rebase onto the new winner's manifest
+    snap = _tables(_read_manifest(path, v))
+    staged: dict[str, list[str]] = {}
+    for t, files in snap.items():
+        if not files:
+            staged[t] = []
+            continue
+        table_dir = os.path.join(path, t)
+        paths = [os.path.join(table_dir, _DATA_DIR, f) for f in files]
+        total = sum(os.path.getsize(p) for p in paths if os.path.exists(p))
+        n_out = max(1, -(-total // target_bytes))  # ceil
+        df = spark.read.parquet(*paths)
+        # zorder_by (r9): compaction doubles as the re-clustering pass
+        # (Delta OPTIMIZE ZORDER) — appended-but-unclustered batches
+        # fold into the Morton layout here, restoring planning-time
+        # prunability across the WHOLE table, not just per batch
+        if zorder_by is not None:
+            out = _zorder_layout(df, zorder_by, n_out)
+        else:
+            out = df.coalesce(n_out)
+        staged[t] = _stage_files(out, table_dir)
+    new_stats = _new_stats(path, staged)
+
+    def fold(head):
+        tables = {}
+        for t, files in _tables(head).items():
+            old = set(snap.get(t, []))
+            if not old.issubset(files):
+                raise RuntimeError(
+                    f"compact_versioned: version {head['version']} replaced "
+                    f"the lineage of table {t!r} compacted from version {v}; "
+                    "aborting (re-run compaction)"
+                )
+            tables[t] = staged.get(t, []) + [f for f in files if f not in old]
+        return _body(head, tables, new_stats, head.get("batch_id"))
+
+    return _commit(path, fold)
 
 
 def publish_versioned_batch(
@@ -583,40 +596,12 @@ def publish_versioned_batch(
     before staging (r9) — streaming ingestion then lands with
     planning-time-prunable per-file stats on both cluster columns,
     batch by batch, no rewrite ever needed."""
-    if batch_df.isEmpty():
-        return False
-    applied = last_batch_id(path)
-    if applied is not None and batch_id <= applied:
-        return False  # retry of an already-committed batch: no-op
+    if batch_df.isEmpty() or _applied(path, batch_id):
+        return False  # empty, or a retry of an already-committed batch
     if zorder_by is not None:
         batch_df = _zorder_layout(batch_df, zorder_by, zorder_partitions)
-    new_files = _stage_files(batch_df, path)
-    if mode == "snapshot":
-        _commit_manifest(path, new_files, batch_id=batch_id)
-        return True
-    while True:
-        prev = current_version(path)
-        old_files: list[str] = []
-        if prev >= 0:
-            m = _read_manifest(path, prev)
-            old_files = m["files"]
-            # scan-back guard (not just the head manifest): a blind
-            # write_versioned commit between our stage and this read
-            # must not hide an already-applied batch_id
-            prev_bid = last_batch_id(path)
-            if prev_bid is not None and batch_id <= prev_bid:
-                return False  # another attempt won while we staged
-        try:
-            _commit_manifest(
-                path,
-                old_files + new_files,
-                batch_id=batch_id,
-                on_conflict="raise",
-                base_version=prev,
-            )
-            return True
-        except FileExistsError:
-            continue  # rebase the fold on the winner's manifest
+    staged = {"": _stage_files(batch_df, path)}
+    return _publish(path, staged, mode != "snapshot", batch_id) is not None
 
 
 def publish_stream_versioned(
@@ -645,13 +630,9 @@ def publish_stream_versioned(
     manifest commit and the streaming checkpoint commit replays the
     batch, and without the marker the retry would fold fresh copies
     of the same rows onto a file list that already contains the first
-    attempt's. Append commits also use ``on_conflict='raise'`` with
-    an explicit rebase loop, so a concurrent writer's commit is never
-    silently dropped by a stale-list retry. Residual contract: the
-    marker lives in the NEWEST manifest only, so interleaving
-    non-streaming commits into a live stream's table re-opens the
-    window (same single-streaming-writer contract as the checkpoint
-    itself)."""
+    attempt's. Append commits are folds (:func:`_commit`), so a
+    concurrent writer's commit is never dropped. Residual contract:
+    one streaming writer per table (the checkpoint's own contract)."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         publish_versioned_batch(
@@ -676,85 +657,13 @@ def publish_stream_versioned(
 # keeps its own immutable ``<root>/<table>/data/`` pool (staging and
 # footer-stats machinery reused verbatim), but there is exactly ONE
 # manifest chain at ``<root>/_manifests/`` whose entries map table →
-# file list. The commit is the same single ``os.link``; readers pin
+# file list. The commit is the same fold (:func:`_commit`); readers pin
 # one root manifest and see every member table at the same version —
 # all-or-nothing by construction, no commit ordering to reason about,
-# no intermediate states for a crash to expose. ``last_batch_id`` and
-# ``current_version`` work on the root unchanged (the manifest
-# carries the same ``batch_id`` marker).
-
-
-def _multi_file_stats(
-    root: str, tables_files: dict[str, list[str]], prev: dict | None
-) -> dict:
-    """Per-table data-skipping stats, inherited from the previous
-    manifest for carried files, footer-read only for new ones —
-    commit cost stays O(new files), as in :func:`_commit_manifest`."""
-    prev_stats = (prev or {}).get("stats", {})
-    out: dict[str, dict] = {}
-    for t, files in tables_files.items():
-        ts = dict(prev_stats.get(t, {}))
-        for f in files:
-            if f not in ts:
-                try:
-                    ts[f] = _file_stats(os.path.join(root, t), f)
-                except Exception:
-                    pass
-        out[t] = {f: s for f, s in ts.items() if f in set(files)}
-    return out
-
-
-def commit_multi_versioned(
-    root: str,
-    tables_files: dict[str, list[str]],
-    batch_id: int | None = None,
-    on_conflict: str = "retry",
-    base_version: int | None = None,
-) -> int:
-    """Publish one manifest naming every member table's exact file
-    set — the single commit point of a multi-table transaction. Same
-    optimistic-concurrency contract as :func:`_commit_manifest`
-    (``os.link`` race detection, ``base_version`` pinning for folded
-    commits, ``on_conflict='raise'`` when the lists embed the previous
-    version's files)."""
-    if on_conflict not in ("retry", "raise"):
-        raise ValueError(f"unknown on_conflict {on_conflict!r}")
-    if base_version is not None and on_conflict != "raise":
-        raise ValueError(
-            "base_version pins one slot; folded multi-table commits "
-            "must use on_conflict='raise' and rebase"
-        )
-    os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
-    head_v = current_version(root)
-    prev = _read_manifest(root, head_v) if head_v >= 0 else None
-    stats = _multi_file_stats(root, tables_files, prev)
-    while True:
-        version = (
-            base_version + 1
-            if base_version is not None
-            else current_version(root) + 1
-        )
-        final = os.path.join(root, _MANIFEST_DIR, f"v{version:06d}.json")
-        tmp = final + f".tmp{uuid.uuid4().hex}"
-        body = {
-            "version": version,
-            "tables": tables_files,
-            "stats": stats,
-            "committed_at": time.time(),
-        }
-        if batch_id is not None:
-            body["batch_id"] = batch_id
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-        try:
-            os.link(tmp, final)
-            os.remove(tmp)
-            _write_head_hint(root, version)
-            return version
-        except FileExistsError:
-            os.remove(tmp)
-            if on_conflict == "raise":
-                raise
+# no intermediate states for a crash to expose. ``last_batch_id``,
+# ``current_version``, ``compact_versioned`` and ``vacuum_versioned``
+# work on the root unchanged (the manifest carries the same
+# ``batch_id`` marker).
 
 
 def read_multi_versioned(
@@ -795,121 +704,12 @@ def publish_multi_versioned_batch(
     of the transaction (the r11 fold needed a paragraph of ordering
     argument for its three separate commits; this needs one word:
     all-or-nothing)."""
-    applied = last_batch_id(root)
-    if applied is not None and batch_id <= applied:
+    if _applied(root, batch_id):
         return False
     staged = {
         t: _stage_files(df, os.path.join(root, t)) for t, df in dfs.items()
     }
-    while True:
-        prev = current_version(root)
-        prev_m = _read_manifest(root, prev) if prev >= 0 else None
-        prev_bid = last_batch_id(root)
-        if prev_bid is not None and batch_id <= prev_bid:
-            return False  # another attempt won while we staged
-        tables_files = {
-            t: ((prev_m["tables"].get(t, []) if prev_m else []) + fs)
-            for t, fs in staged.items()
-        }
-        if prev_m:  # tables not touched by this batch carry through
-            for t, fs in prev_m["tables"].items():
-                tables_files.setdefault(t, fs)
-        try:
-            commit_multi_versioned(
-                root,
-                tables_files,
-                batch_id=batch_id,
-                on_conflict="raise",
-                base_version=prev,
-            )
-            return True
-        except FileExistsError:
-            continue  # rebase the fold on the winner's manifest
-
-
-def compact_multi_versioned(
-    spark: SparkSession, root: str, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Compact EVERY member table's newest file set and publish the
-    whole rewrite as one transaction — :func:`compact_versioned`'s
-    semantics (snapshot rewrite, rebase of interleaved appends,
-    ``batch_id`` carried so replay dedup survives maintenance) lifted
-    to the multi-table root with a single commit."""
-    v = current_version(root)
-    snap = _read_manifest(root, v)
-    staged: dict[str, list[str]] = {}
-    for t, files in snap["tables"].items():
-        if not files:
-            staged[t] = []
-            continue
-        data_dir = os.path.join(root, t, _DATA_DIR)
-        total = sum(
-            os.path.getsize(os.path.join(data_dir, f))
-            for f in files
-            if os.path.exists(os.path.join(data_dir, f))
-        )
-        n_out = max(1, -(-total // target_bytes))  # ceil
-        df = read_multi_versioned(spark, root, t, version=v)
-        staged[t] = _stage_files(df.coalesce(n_out), os.path.join(root, t))
-    snap_sets = {t: set(fs) for t, fs in snap["tables"].items()}
-    while True:
-        head = current_version(root)
-        head_m = snap if head == v else _read_manifest(root, head)
-        tables_files = {}
-        for t, head_files in head_m["tables"].items():
-            ss = snap_sets.get(t, set())
-            if not ss.issubset(head_files):
-                raise RuntimeError(
-                    f"compact_multi_versioned: version {head} replaced "
-                    f"table {t!r}'s lineage compacted from v{v}; aborting"
-                )
-            tables_files[t] = staged.get(t, []) + [
-                f for f in head_files if f not in ss
-            ]
-        try:
-            return commit_multi_versioned(
-                root,
-                tables_files,
-                batch_id=head_m.get("batch_id"),
-                on_conflict="raise",
-                base_version=head,
-            )
-        except FileExistsError:
-            continue
-
-
-def vacuum_multi_versioned(root: str, keep_last: int = 2) -> dict:
-    """Drop all but the newest ``keep_last`` root manifests and delete
-    member-table data files no surviving manifest references —
-    :func:`vacuum_versioned` for the transaction root (same
-    no-reader-behind-the-horizon retention contract)."""
-    import shutil
-
-    ms = _manifest_paths(root)
-    keep, drop = ms[-keep_last:], ms[:-keep_last]
-    referenced: dict[str, set[str]] = {}
-    tables: set[str] = set()
-    for m in keep:
-        with open(m) as fh:
-            body = json.load(fh)
-        for t, fs in body["tables"].items():
-            tables.add(t)
-            referenced.setdefault(t, set()).update(fs)
-    removed = 0
-    for t in tables:
-        data_dir = os.path.join(root, t, _DATA_DIR)
-        if os.path.isdir(data_dir):
-            for f in os.listdir(data_dir):
-                if f not in referenced.get(t, set()):
-                    os.remove(os.path.join(data_dir, f))
-                    removed += 1
-        tdir = os.path.join(root, t)
-        for d in os.listdir(tdir):
-            if d.startswith("_staging_"):
-                shutil.rmtree(os.path.join(tdir, d))
-    for m in drop:
-        os.remove(m)
-    return {"dropped_manifests": len(drop), "removed_files": removed}
+    return _publish(root, staged, append=True, batch_id=batch_id) is not None
 
 
 def table_history(path: str) -> list[dict]:
