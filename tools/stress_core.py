@@ -2,36 +2,30 @@
 
 Synthesizes N series × M monthly points (seasonal + noise, an
 injected 0.2 level shift at month 120 on every third series) and
-measures the two applyInPandas fitting stages end-to-end. This is
-the scale-out evidence for SURVEY §4.3: per-series work is bounded,
-so throughput is linear in cores and series count.
+times five per-series fitters end to end, each one
+``operators.util.fit_series`` pass (hash repartition by series, sort
+within partitions, one ``mapInArrow``): DBEST (largest change only),
+PolyTrend, Mann-Kendall, seasonal Mann-Kendall and BFAST monitor.
+This is the scale-out evidence for SURVEY §4.3: per-series work is
+bounded, so throughput is linear in cores and series count.
 
-Observed on local[32], 2.4M rows (10k series × 240 months):
-
-    r2: DBEST ~1.5k series/s, PolyTrend ~3.2k series/s
-    r7 (pre-fix): DBEST had regressed to ~212 series/s — two causes
-        found and fixed this round: (a) the STL LOESS smoother ran a
-        per-evaluation-point Python loop (~98% of the fit; now
-        vectorized across evaluation points, bit-identical — 87 →
-        27 ms/series), and (b) AQE's BYTE-based partition coalescing
-        starved the CPU-dense fitting shuffle down to 8 tasks on 32
-        cores (now pinned via util.fit_partitioned on every
-        applyInPandas fitting wrapper).
-    r7 (post-fix): DBEST 537 series/s, PolyTrend 2.7k, Mann-Kendall
-        3.1k, seasonal MK 2.5k, BFAST-monitor 4.0k series/s.
-        (BFAST alarms ≈ 0 here BY DESIGN: the planted shift at month
-        120 falls inside the 144-month history window, so the 4
-        alarms measure the λ=4 false-positive rate — 0.04%.)
+Series/s depends on the box: quote it with the core count and
+``bench._parallel_calibration()`` taken just before the run, and
+compare only runs on the same box at similar calibration. BFAST
+alarms are ≈ 0 by design: the planted shift at month 120 falls
+inside the 144-month history window, so the alarm count measures the
+λ=4 false-positive rate.
 
 Usage: python tools/stress_core.py [n_series] [n_months]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -247,52 +247,76 @@ def classical_decompose(y: np.ndarray, period: int):
     return trend, seasonal, remainder
 
 
-def _loess(
-    x: np.ndarray,
-    y: np.ndarray,
-    q: int,
-    rho: np.ndarray | None = None,
-    xeval: np.ndarray | None = None,
-) -> np.ndarray:
-    """Degree-1 LOESS smoother (Cleveland 1979, as used inside STL).
+def _loess_frame(x: np.ndarray, q: int, xeval: np.ndarray | None = None):
+    """Neighbourhoods of a degree-1 LOESS with span ``q`` over the
+    ascending grid ``x``, evaluated at ``xeval`` (default ``x``).
 
-    At each evaluation point: take the ``q`` nearest x-neighbours,
-    weight them by the tricube of scaled distance (times the
-    robustness weights ``rho`` if given), and evaluate the weighted
-    least-squares line there. For ``q > n`` the bandwidth inflates by
-    ``q/n`` as in the reference STL implementation.
+    The ``q`` nearest neighbours of any point (inside the grid or
+    extrapolated past either end) are a contiguous run of ``x`` within
+    ``q`` places of the point's insertion index, so a window of
+    ``min(2q, n)`` grid points holds all of them. The window therefore
+    yields the same bandwidth ``lam`` (the q-th smallest distance,
+    inflated by ``(q - n)/2`` when ``q > n`` as in the reference STL)
+    and the same non-zero tricube weights as the full (E, n) distance
+    matrix: every point outside it lies at least ``lam`` away. STL's
+    grids are unit-spaced integers, so the ``lam <= 0`` guard (q = 1
+    on a grid point) cannot admit an outside point either.
+
+    Returns (idx, xw, tri, xeval, tol): window indices and x values,
+    base tricube weights, all (E, W), the evaluation points, and the
+    slope guard ``0.001 × (x range)`` that :func:`_loess` applies. The
+    frame depends only on (x, q, xeval), so STL builds each one once
+    and reuses it on every pass.
     """
     x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
+    xeval = x if xeval is None else np.asarray(xeval, dtype=np.float64)
     n = x.size
-    if xeval is None:
-        xeval = x
-    xeval = np.asarray(xeval, dtype=np.float64)
-    r = np.ones(n) if rho is None else np.asarray(rho, dtype=np.float64)
+    width = min(2 * q, n)
+    start = np.clip(np.searchsorted(x, xeval) - q, 0, n - width)
+    idx = start[:, None] + np.arange(width)
+    xw = x[idx]
+    d = np.abs(xw - xeval[:, None])
     q_eff = min(q, n)
-    # vectorized across evaluation points (r7: the per-point Python
-    # loop dominated DBEST at ~85 ms/series — 98% of the fit). All
-    # reductions are elementwise-multiply + sum(axis=1), the same
-    # pairwise summation over the same operand order as the scalar
-    # loop's 1-D sums, so results are bit-identical; memory is the
-    # (E, n) weight matrix — E, n ≤ series length, trivial for
-    # composited series.
-    d = np.abs(x[None, :] - xeval[:, None])  # (E, n)
     lam = np.partition(d, q_eff - 1, axis=1)[:, q_eff - 1]
     if q > n:
         lam = lam + (q - n) / 2.0
     lam = np.where(lam <= 0.0, 1.0, lam)
-    w = np.clip(1.0 - (d / lam[:, None]) ** 3, 0.0, None) ** 3 * r[None, :]
-    sw = w.sum(axis=1)
+    tri = np.clip(1.0 - (d / lam[:, None]) ** 3, 0.0, None) ** 3
+    return idx, xw, tri, xeval, 0.001 * (x[-1] - x[0])
+
+
+def _loess(frame, y: np.ndarray, rho: np.ndarray | None = None) -> np.ndarray:
+    """Degree-1 LOESS smoother (Cleveland 1979, as used inside STL).
+
+    At each evaluation point of ``frame`` (:func:`_loess_frame`):
+    weight the window's points by their tricube (times the robustness
+    weights ``rho`` if given) and evaluate the weighted least-squares
+    line there. ``y`` (and ``rho``) may carry leading batch axes,
+    ``(..., n)`` → ``(..., E)``: STL smooths all cycle-subseries of
+    one length in a single call.
+
+    As R's ``stl`` (``stlest``), the line is fitted only when the
+    weighted spread of x, ``sqrt(Σw(x−x̄)²/Σw)``, exceeds 0.001 of the
+    x range; otherwise the fit is the flat weighted mean. Without the
+    guard a window whose robustness weights leave about one effective
+    point returns a slope made of rounding noise. A point with no
+    weight at all gets the series mean.
+    """
+    idx, xw, tri, xeval, tol = frame
+    y = np.asarray(y, dtype=np.float64)
+    yw = y[..., idx]
+    w = tri if rho is None else tri * np.asarray(rho, dtype=np.float64)[..., idx]
+    sw = w.sum(axis=-1)
     safe_sw = np.where(sw <= 0.0, 1.0, sw)
-    xm = (w * x[None, :]).sum(axis=1) / safe_sw
-    ym = (w * y[None, :]).sum(axis=1) / safe_sw
-    dx = x[None, :] - xm[:, None]
-    denom = (w * dx**2).sum(axis=1)
-    num = (w * dx * (y[None, :] - ym[:, None])).sum(axis=1)
-    slope = np.where(denom <= 0.0, 0.0, num / np.where(denom <= 0.0, 1.0, denom))
+    xm = (w * xw).sum(axis=-1) / safe_sw
+    ym = (w * yw).sum(axis=-1) / safe_sw
+    dx = xw - xm[..., None]
+    denom = (w * dx**2).sum(axis=-1)
+    num = (w * dx * (yw - ym[..., None])).sum(axis=-1)
+    line = np.sqrt(denom / safe_sw) > tol
+    slope = np.where(line, num / np.where(line, denom, 1.0), 0.0)
     out = ym + slope * (xeval - xm)
-    return np.where(sw <= 0.0, y.mean() if n else 0.0, out)
+    return np.where(sw <= 0.0, y.mean(axis=-1, keepdims=True), out)
 
 
 def _ma(a: np.ndarray, m: int) -> np.ndarray:
@@ -329,6 +353,15 @@ def stl_decompose(
     passes (R's default is 0 extra for ``robust=FALSE``; 1 pass gives
     bounded protection at deterministic cost).
 
+    Cost is O(n·q) per smoothing: each LOESS evaluates only a window
+    of at most 2q grid points around each output point
+    (:func:`_loess_frame`), never the full n × n distance matrix.
+    The cycle-subseries are smoothed in at most two batched calls,
+    one per subseries length (phases ``< n % period`` have one point
+    more than the rest). The four frames (two subseries lengths,
+    low-pass, trend) are built once and reused on every pass. Each
+    local line carries R's slope guard (see :func:`_loess`).
+
     Returns (trend, seasonal, remainder), each length ``len(y)``.
     """
     y = np.asarray(y, dtype=np.float64)
@@ -339,34 +372,40 @@ def stl_decompose(
     n_l = _next_odd(period)
     n_t = _next_odd(1.5 * period / (1.0 - 1.5 / n_s))
     t_idx = np.arange(n, dtype=np.float64)
+    low_frame = _loess_frame(t_idx, n_l)
+    trend_frame = _loess_frame(t_idx, n_t)
+    # phase p's subseries is row p of the (period, m + 1) transpose of
+    # the series padded to whole cycles; its m_p + 2 smoothed values
+    # (cycle positions 0 .. m_p + 1) are column p of the extended
+    # series c reshaped to (m + 3, period) — the extended axis is
+    # shifted one period right, so phase-p slots are c[p::period]
+    m, n_long = divmod(n, period)
+    groups = []
+    for phases, length in ((slice(0, n_long), m + 1), (slice(n_long, period), m)):
+        if phases.start < phases.stop:
+            pos = np.arange(1.0, length + 1.0)
+            frame = _loess_frame(pos, n_s, np.arange(0.0, length + 2.0))
+            groups.append((phases, length, frame))
+    cycles = np.empty((m + 1) * period)
+    c_cycles = np.empty((m + 3, period))
     trend = np.zeros(n)
     seasonal = np.zeros(n)
     rho = np.ones(n)
     for outer in range(max(outer_iter, 0) + 1):
+        cycles[:n] = rho
+        rho_sub = cycles.reshape(m + 1, period).T.copy()
         for _ in range(inner_iter):
-            detrended = y - trend
-            # cycle-subseries smoothing, extended one period both ways
-            c = np.empty(n + 2 * period)
-            for p in range(period):
-                sub = detrended[p::period]
-                m = sub.size
-                pos = np.arange(1.0, m + 1.0)
-                sm = _loess(
-                    pos,
-                    sub,
-                    n_s,
-                    rho=rho[p::period],
-                    xeval=np.arange(0.0, m + 2.0),
-                )
-                # extended axis is shifted one period right, so phase-p
-                # slots are exactly c[p::period] — m + 2 of them, matching
-                # sm evaluated at cycle positions 0 .. m+1
-                c[p::period] = sm
+            cycles[:n] = y - trend
+            sub = cycles.reshape(m + 1, period).T
+            for phases, length, frame in groups:
+                sm = _loess(frame, sub[phases, :length], rho=rho_sub[phases, :length])
+                c_cycles[: length + 2, phases] = sm.T
+            c = c_cycles.ravel()[: n + 2 * period]
             # low-pass: MA(period) x2 then MA(3) -> length n, then LOESS
             lp = _ma(_ma(_ma(c, period), period), 3)
-            low = _loess(t_idx, lp, n_l)
+            low = _loess(low_frame, lp)
             seasonal = c[period : period + n] - low
-            trend = _loess(t_idx, y - seasonal, n_t, rho=rho)
+            trend = _loess(trend_frame, y - seasonal, rho=rho)
         if outer < max(outer_iter, 0):
             resid = y - seasonal - trend
             h = 6.0 * np.median(np.abs(resid))
