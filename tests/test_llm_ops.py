@@ -333,16 +333,92 @@ def test_near_dup_adaptive_floor_non_vacuous(spark):
         assert (pairs["id_a"] < pairs["id_b"]).all()
 
 
-def test_ann_empty_query_set_returns_empty(spark):
-    """ADVICE r5 (low): an empty query set used to reach the BLAS
-    matmul as a (0,)-shaped array and raise ValueError."""
+def _pq_search(emb, q, _path):
+    from trendengine_spark.operators.similarity import (
+        pq_encode,
+        pq_topk,
+        pq_train_codebooks,
+    )
+
+    books = pq_train_codebooks(emb, m_subspaces=4, k=8)
+    return pq_topk(pq_encode(emb, books), books, q)
+
+
+def _ivfpq_search(emb, q, _path):
+    from trendengine_spark.operators.similarity import ivfpq_index, ivfpq_topk
+
+    return ivfpq_topk(*ivfpq_index(emb, n_cells=4, m_subspaces=4, k_codes=8), q)
+
+
+def _ivfpq_persisted_search(emb, q, path):
+    from trendengine_spark.operators.similarity import (
+        ivfpq_query_index,
+        ivfpq_write_index,
+    )
+
+    ivfpq_write_index(emb, str(path / "idx"), n_cells=4, m_subspaces=4, k_codes=8)
+    return ivfpq_query_index(emb.sparkSession, str(path / "idx"), q)
+
+
+def _sim(name, **kw):
+    def run(emb, q, _path):
+        from trendengine_spark.operators import similarity
+
+        return getattr(similarity, name)(emb, queries=q, **kw)
+
+    return run
+
+
+_TOPK = ["query_id", "vec_id", "cos_sim", "rn"]
+_ADC = ["query_id", "vec_id", "score", "rn"]
+
+
+@pytest.mark.parametrize(
+    "search,columns",
+    [
+        pytest.param(_sim("random_hyperplane_ann"), _TOPK, id="random_hyperplane_ann"),
+        pytest.param(_sim("cosine_topk"), _TOPK, id="cosine_topk"),
+        pytest.param(
+            _sim("cosine_range_search", threshold=0.3),
+            ["query_id", "vec_id", "cos_sim"],
+            id="cosine_range_search",
+        ),
+        pytest.param(_sim("ivf_topk", n_cells=4), _TOPK, id="ivf_topk"),
+        pytest.param(_pq_search, _ADC, id="pq_topk"),
+        pytest.param(_ivfpq_search, _ADC, id="ivfpq_topk"),
+        pytest.param(_ivfpq_persisted_search, _ADC, id="ivfpq_query_index"),
+        pytest.param(_sim("two_stage_rerank"), _TOPK, id="two_stage_rerank"),
+    ],
+)
+def test_ann_empty_query_set_returns_empty(spark, tmp_path, search, columns):
+    """Every search operator answers an empty query set with an empty
+    frame of its normal schema (the shared query set yields a (0, D)
+    matrix that every candidate path carries through)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     empty_q = emb.filter(F.col("vec_id") < 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = random_hyperplane_ann(emb, empty_q, k=5, dim=64)
+    out = search(emb, empty_q, tmp_path)
     assert out.count() == 0
-    assert out.columns == ["query_id", "vec_id", "cos_sim", "rn"]
+    assert out.columns == columns
+
+
+def test_bad_vectors_raise_naming_the_column(spark):
+    """The shared vector decoder rejects a null or a ragged vector with
+    a ValueError naming the column, on the driver and inside a task."""
+    import pyarrow as pa
+
+    from trendengine_spark.operators.lloyd_exact import _mat_from_list_col
+    from trendengine_spark.operators.similarity import _planes, band_signatures
+
+    for bad, what in (([[1.0, 2.0], None], "null"), ([[1.0, 2.0], [3.0]], "ragged")):
+        with pytest.raises(ValueError, match=f"'embedding' .*{what}"):
+            _mat_from_list_col(pa.array(bad), None, np.float64, "embedding")
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.5, 0.5, 0.5])], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="vector column 'embedding' is ragged"):
+        band_signatures(corpus, _planes(4, 2, 0), 2, 2).collect()
 
 
 def test_real_video_frame_sample_end_to_end(spark):
@@ -910,6 +986,11 @@ def test_ivfpq_persisted_index_matches_inmemory(spark, tmp_path):
     assert any("PartitionFilters" in l and "cell" in l for l in plan.splitlines()), (
         "expected a partition-pruned codes scan"
     )
+    # write_parquet co-locates each cell: exactly one data file per cell
+    cell_dirs = sorted((tmp_path / "ivfpq_idx" / "codes").glob("cell=*"))
+    assert len(cell_dirs) == codes.select("cell").distinct().count()
+    for d in cell_dirs:
+        assert len(list(d.glob("part-*.parquet"))) == 1, d
 
 
 def test_ivfpq_persisted_empty_queries(spark, tmp_path):

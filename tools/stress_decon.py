@@ -1,14 +1,17 @@
 """Semantic-decontamination stress: 200k train x 2k eval vectors,
 500 planted paraphrase-leaks (eval vectors + 1e-4 noise inserted into
 train). Measures wall, leak recall, and false drops through the LSH
-cross-join + exact-verify path (eval side broadcast)."""
+cross-join + exact-verify path (eval side broadcast).
+
+Usage: python tools/stress_decon.py [n_train_thousands]  (default 200)"""
 
 import sys, time
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession, functions as F
 from trendengine_spark.operators.similarity import semantic_decontaminate
 
-n_train, n_eval, n_leak, dim = 200_000, 2_000, 500, 64
+n_train = int(sys.argv[1]) * 1000 if len(sys.argv) > 1 else 200_000
+n_eval, n_leak, dim = 2_000, 500, 64
 spark = (SparkSession.builder.master("local[32]")
   .config("spark.sql.shuffle.partitions","32")
   .config("spark.driver.memory","48g")

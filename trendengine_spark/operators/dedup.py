@@ -975,52 +975,27 @@ def semantic_dedup(
     pipeline requirements.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    from trendengine_spark.operators.similarity import ivf_index
+    from trendengine_spark.operators.similarity import (
+        _arrow,
+        _collect,
+        _encode,
+        _vectors,
+        ivf_index,
+    )
 
     asg, cent = ivf_index(
         corpus, n_cells=n_cells, iters=iters, seed=seed,
         id_col=id_col, vec_col=vec_col,
     )
     if assign_cells > 1:
-        # top-m assignment pass (replaces the unexecuted lazy top-1)
-        m_probe = min(assign_cells, n_cells)
-        cn = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-        bc = corpus.sparkSession.sparkContext.broadcast(cn)
-        schema = T.StructType(
-            [
-                T.StructField(id_col, corpus.schema[id_col].dataType),
-                T.StructField(vec_col, corpus.schema[vec_col].dataType),
-                T.StructField("cell", T.IntegerType()),
-            ]
-        )
-
-        def gen(batches):
-            cmat = bc.value.T
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mx = np.asarray(
-                    [list(v) for v in pdf[vec_col]], dtype=np.float64
-                )
-                nrm = np.linalg.norm(mx, axis=1)
-                nrm[nrm == 0.0] = 1.0
-                sims = (mx / nrm[:, None]) @ cmat
-                top = np.argpartition(-sims, m_probe - 1, axis=1)[
-                    :, :m_probe
-                ]
-                idx = np.repeat(np.arange(len(pdf)), m_probe)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy()[idx],
-                        vec_col: pdf[vec_col].to_numpy()[idx],
-                        "cell": top.ravel().astype("int32"),
-                    }
-                )
-
-        asg = corpus.select(id_col, vec_col).mapInPandas(gen, schema)
+        # top-m assignment pass: each vector once per nearest cell
+        asg = _encode(
+            corpus, cent[None], "cos", vec_col, [id_col, vec_col], "_cells",
+            top=min(assign_cells, n_cells),
+        ).select(id_col, vec_col, F.explode("_cells").alias("cell"))
     asg = owned_cache(asg, f"dedup.sem.{n_cells}.{seed}.{assign_cells}")
 
     out_schema = T.StructType(
@@ -1032,55 +1007,37 @@ def semantic_dedup(
         ]
     )
 
-    def _cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cell": [], "cos_sim": []}
-            ).astype({"id_a": "int64", "id_b": "int64",
-                      "cell": "int32", "cos_sim": "float64"})
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        m = np.asarray(
-            [list(v) for v in pdf[vec_col].iloc[order]], dtype=np.float64
-        )
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0.0] = 1.0
-        m = m / norms[:, None]
-        cell = int(pdf["cell"].iloc[0])
-        outs = []
-        # row-block the matmul: (block x n) at a time, strict upper
-        # triangle via a vectorized mask; with a known threshold the
-        # emission is prefiltered so output rows are only real hits
-        col_idx = np.arange(n)
-        for lo in range(0, n, block_rows):
-            hi = min(lo + block_rows, n)
-            s = m[lo:hi] @ m.T  # (hi-lo, n)
-            keep = col_idx[None, :] > np.arange(lo, hi)[:, None]
-            if threshold is not None:
-                keep &= s >= threshold
-            r_idx, c_idx = np.nonzero(keep)
-            if r_idx.size:
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "id_a": ids[r_idx + lo],
-                            "id_b": ids[c_idx],
-                            "cell": np.full(r_idx.size, cell,
-                                            dtype="int32"),
-                            "cos_sim": s[r_idx, c_idx],
-                        }
-                    )
-                )
-        if not outs:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cell": [], "cos_sim": []}
-            ).astype({"id_a": "int64", "id_b": "int64",
-                      "cell": "int32", "cos_sim": "float64"})
-        return pd.concat(outs, ignore_index=True)
+    def _cell_pairs(tbl: pa.Table) -> pa.Table:
+        outs = {"id_a": [], "id_b": [], "cell": [], "cos_sim": []}
+        if tbl.num_rows >= 2:
+            ids = tbl.column(id_col).to_numpy()
+            order = np.argsort(ids)
+            ids = ids[order]
+            m = _vectors(tbl, vec_col)[order]
+            norms = np.linalg.norm(m, axis=1)
+            norms[norms == 0.0] = 1.0
+            m = m / norms[:, None]
+            cell = tbl.column("cell")[0].as_py()
+            # row-block the matmul: (block x n) at a time, strict upper
+            # triangle via a vectorized mask; with a known threshold the
+            # emission is prefiltered so output rows are only real hits
+            n = len(ids)
+            col_idx = np.arange(n)
+            for lo in range(0, n, block_rows):
+                hi = min(lo + block_rows, n)
+                s = m[lo:hi] @ m.T  # (hi-lo, n)
+                keep = col_idx[None, :] > np.arange(lo, hi)[:, None]
+                if threshold is not None:
+                    keep &= s >= threshold
+                r_idx, c_idx = np.nonzero(keep)
+                outs["id_a"].append(ids[r_idx + lo])
+                outs["id_b"].append(ids[c_idx])
+                outs["cell"].append(np.full(r_idx.size, cell, dtype=np.int32))
+                outs["cos_sim"].append(s[r_idx, c_idx])
+        cols = _collect(outs) or {name: [] for name in outs}
+        return pa.Table.from_batches([_arrow(out_schema, cols)])
 
-    all_pairs = asg.groupBy("cell").applyInPandas(_cell_pairs, out_schema)
+    all_pairs = asg.groupBy("cell").applyInArrow(_cell_pairs, out_schema)
     if assign_cells > 1:
         # a pair sharing several of its m cells is emitted once per
         # shared cell — collapse before thresholding

@@ -83,16 +83,33 @@ _QMAX = 1 << 21
 _SUMMAX = float(1 << 52)
 
 
-def _mat_from_list_col(col, d: int) -> np.ndarray:
-    """Arrow ``list<int64>`` column (no nulls, fixed length ``d``) →
-    ``(n, d)`` int64 matrix. ``flatten()`` honours slicing offsets;
-    ``zero_copy_only=False`` permits (never changes) a copy if a
-    future Arrow layout requires one — values are identical either
-    way."""
-    if isinstance(col, pa.ChunkedArray):  # pragma: no cover - defensive
+def _mat_from_list_col(
+    col, d: int | None = None, dtype=np.int64, name: str = "qa"
+) -> np.ndarray:
+    """Arrow list column of fixed-length vectors → C-contiguous
+    ``(n, d)`` matrix of ``dtype`` (``d=None`` takes the first
+    vector's length). The one vector decoder of the Arrow passes: the
+    Lloyd rounds read ``int64`` codes, the similarity operators
+    ``float64`` embeddings (float32 widens exactly). A null or ragged
+    vector raises ``ValueError`` naming column ``name`` — numpy would
+    otherwise build an object array or fail inside the task.
+    ``flatten()`` honours slicing offsets; ``zero_copy_only=False``
+    permits (never changes) a copy if an Arrow layout requires one."""
+    if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    m = col.flatten().to_numpy(zero_copy_only=False)
-    return np.ascontiguousarray(m, dtype=np.int64).reshape(-1, d)
+    flat = col.flatten()
+    if col.null_count or flat.null_count:
+        raise ValueError(f"vector column {name!r} holds a null vector or element")
+    lengths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    if d is None:
+        d = int(lengths[0]) if lengths.size else 0
+    if lengths.size and (lengths != d).any():
+        raise ValueError(
+            f"vector column {name!r} is ragged: lengths "
+            f"{sorted(set(lengths.tolist()))[:4]}, expected {d}"
+        )
+    m = flat.to_numpy(zero_copy_only=False)
+    return np.ascontiguousarray(m, dtype=dtype).reshape(len(col), d)
 
 
 def _assign_whole(q: np.ndarray, cvf: np.ndarray, cn2: np.ndarray) -> np.ndarray:
@@ -203,7 +220,7 @@ def lloyd_books_whole(
         acc = np.zeros((cells_a.size, d), dtype=np.int64)
         cnt = np.zeros(cells_a.size, dtype=np.int64)
         for b in batches:
-            q = _mat_from_list_col(b.column(b.schema.get_field_index("qa")), d)
+            q = _mat_from_list_col(b.column("qa"), d)
             if q.shape[0] == 0:
                 continue
             pos = _assign_whole(q, cvf, cn2)
@@ -341,7 +358,7 @@ def lloyd_round_sub(
         cnt = np.zeros(kc * subs, dtype=np.int64)
         books = emit == "books"
         for b in batches:
-            q = _mat_from_list_col(b.column(b.schema.get_field_index(qa_col)), d)
+            q = _mat_from_list_col(b.column(qa_col), d, name=qa_col)
             n = q.shape[0]
             if n == 0:
                 continue

@@ -1,22 +1,42 @@
-"""Similarity search over an embedding column (LLM-data-pipeline
-surface; ``embeddings(vec_id, embedding ARRAY<FLOAT>, label)``).
+"""Vector search over an embedding column (LLM-data-pipeline surface;
+``embeddings(vec_id, embedding ARRAY<FLOAT>, label)``).
 
-Two paths, per the scale playbook:
+Every search path here is one skeleton — query set → candidates →
+exact re-rank → top-k — and each step has exactly one implementation:
 
-- :func:`cosine_topk` — brute-force baseline: the (small, bounded)
-  query set is broadcast as a dense numpy matrix, scoring is ONE
-  ``mapInPandas`` pass over the corpus (Arrow batches → BLAS matmul,
-  vectorized across all queries at once), each batch emits only its
-  local top-k per query (partial top-k combine), and a tiny global
-  window finalizes ranks. Cost is O(N·D·|queries|) FLOPs in BLAS with
-  k·|queries| rows per partition reaching the shuffle — linear in N,
-  embarrassingly parallel, the right baseline at any scale where
-  |queries| is modest.
-- :func:`random_hyperplane_ann` — LSH scale path: sign-bit bucket
-  signatures from deterministic pseudo-random hyperplanes (hash-seeded,
-  no fitted model), candidates only within matching buckets (multi-probe
-  over bands), exact cosine re-rank inside buckets. Sub-linear
-  candidate volume; recall tunable by planes/bands.
+- **Query set** (:func:`_query_set`): the bounded query side, either
+  collected once from a ``queries`` frame or taken driver-side from
+  ``queries_local=(ids, matrix)`` (:func:`load_query_vectors`), as ids
+  plus a dense (Q, D) float64 matrix. An empty set flows through every
+  operator and yields an empty frame of its normal schema.
+- **Vector decode** (:func:`_vectors`): every corpus pass is a
+  ``mapInArrow`` that reads the Arrow list column straight into a
+  matrix with :func:`~trendengine_spark.operators.lloyd_exact.
+  _mat_from_list_col`; a null or ragged vector raises ``ValueError``
+  naming the column.
+- **Candidates**, three families:
+  brute force (:func:`_scan` — every corpus batch against the
+  broadcast query matrix: :func:`cosine_topk`,
+  :func:`cosine_range_search`, :func:`cosine_hamming_candidates`,
+  :func:`two_stage_rerank`); banded random-hyperplane LSH
+  (:func:`_hyperplanes` + :func:`_banded` → a (band, sig) equi-join:
+  :func:`random_hyperplane_ann`, :func:`embedding_near_dup_pairs`,
+  :func:`semantic_decontaminate`); and probed IVF cells
+  (:func:`_nearest` — the same kernel assigns corpus cells, encodes PQ
+  codes and picks probe cells: :func:`ivf_topk`, :func:`pq_topk`,
+  :func:`ivfpq_topk`, :func:`ivfpq_query_index`).
+- **Exact re-rank**: the scoring arithmetic stays per path — BLAS
+  matmul, einsum, quantized integers or ADC table gathers — because
+  the oracle twins' bit identity depends on it. The batch-local
+  partial top-k (:func:`_local_topk`) uses the final tie-break
+  (score desc, id asc), so the partial combine is exact.
+- **Top-k** (:func:`_top_k`): one global per-query rank window.
+- **Adaptive cut** (:func:`_quantile_cut`): the exact ⌈q·n⌉-rank
+  element (= DuckDB ``quantile_disc``) at every scale.
+- **Quantizer training** (:func:`_lloyd`): one float Lloyd loop — the
+  IVF coarse quantizer is one block with cosine assignment, PQ
+  codebooks are m blocks with L2 assignment. The integer-exact trainer
+  of the oracle twins is :mod:`~trendengine_spark.operators.lloyd_exact`.
 
 (``pyspark.ml.feature.BucketedRandomProjectionLSH`` offers similar
 machinery for L2; the hand-rolled version keeps determinism and stays
@@ -25,13 +45,24 @@ on plain DataFrames — no ML pipeline fit step.)
 
 from __future__ import annotations
 
+import functools
+from typing import NamedTuple
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from trendengine_spark.operators.util import fan_out, local_rows_df, owned_cache
+from trendengine_spark.operators.lloyd_exact import _mat_from_list_col
+from trendengine_spark.operators.util import (
+    GK_LOSSLESS_GATE,
+    exact_rank_element,
+    fan_out,
+    local_rows_df,
+    owned_cache,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -56,33 +87,68 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-_COSINE_ARROW = None
+# ----------------------------------------------------- arrow plumbing
+def _vectors(batch, col: str, dtype=np.float64) -> np.ndarray:
+    """A record batch's or table's vector column as an (n, D) matrix
+    (null or ragged vectors raise ``ValueError`` naming ``col``)."""
+    return _mat_from_list_col(batch.column(col), None, dtype, col)
+
+
+def _arrow(schema: T.StructType, cols: dict) -> pa.RecordBatch:
+    """Output columns → one Arrow batch of ``schema``: Arrow arrays
+    pass through, 2-D arrays become list columns, the rest convert to
+    the field's Arrow type."""
+    arrays = []
+    for f in schema.fields:
+        v, typ = cols[f.name], to_arrow_type(f.dataType)
+        if isinstance(v, np.ndarray) and v.ndim == 2:
+            n, d = v.shape
+            v = pa.ListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype=np.int32) * d),
+                pa.array(v.ravel(), type=typ.value_type),
+            )
+        elif not isinstance(v, pa.Array):
+            v = pa.array(v, type=typ)
+        arrays.append(v)
+    return pa.RecordBatch.from_arrays(arrays, names=schema.names)
+
+
+def _schema(*fields) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in fields])
+
+
+@functools.lru_cache(maxsize=None)
+def _cosine_udf(quantized: bool):
+    @F.arrow_udf("double")
+    def _cos(xs: pa.Array, ys: pa.Array) -> pa.Array:
+        ma = _mat_from_list_col(xs, None, np.float64, "cosine lhs")
+        mb = _mat_from_list_col(ys, None, np.float64, "cosine rhs")
+        if quantized:
+            # HALF-AWAY rounding, not np.rint (ties-to-even): the
+            # engines' round() is half-away-from-zero, and float32
+            # inputs scaled by the power-of-two 1024 DO land exact .5
+            # ties — rint silently picked the other integer there
+            sa, sb = ma * 1024, mb * 1024
+            ma = np.copysign(np.floor(np.abs(sa) + 0.5), sa).astype(np.int64)
+            mb = np.copysign(np.floor(np.abs(sb) + 0.5), sb).astype(np.int64)
+            dots = np.einsum("ij,ij->i", ma, mb).astype(np.float64)
+            na = np.sqrt(np.einsum("ij,ij->i", ma, ma).astype(np.float64))
+            nb = np.sqrt(np.einsum("ij,ij->i", mb, mb).astype(np.float64))
+        else:
+            dots = np.einsum("ij,ij->i", ma, mb)
+            na = np.linalg.norm(ma, axis=1)
+            nb = np.linalg.norm(mb, axis=1)
+        return pa.array(dots / (na * nb), type=pa.float64())
+
+    return _cos
 
 
 def cosine_arrow(a: Column, b: Column) -> Column:
     """Arrow-vectorized row-wise cosine of two ``array<numeric>``
-    columns: one pandas UDF, numpy einsum per batch — the scale path
+    columns: one Arrow UDF, numpy einsum per batch — the scale path
     for exact re-ranking of LSH/IVF candidates, where the interpreted
     per-element lambda fold of :func:`cosine` dominated query time."""
-    global _COSINE_ARROW
-    if _COSINE_ARROW is None:
-
-        @F.pandas_udf("double")
-        def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            ma = np.asarray([np.asarray(v, dtype=np.float64) for v in xs])
-            mb = np.asarray([np.asarray(v, dtype=np.float64) for v in ys])
-            if ma.size == 0:
-                return pd.Series([], dtype="float64")
-            dots = np.einsum("ij,ij->i", ma, mb)
-            na = np.linalg.norm(ma, axis=1)
-            nb = np.linalg.norm(mb, axis=1)
-            return pd.Series(dots / (na * nb))
-
-        _COSINE_ARROW = _cos
-    return _COSINE_ARROW(a, b)
-
-
-_COSINE_ARROW_Q: object = None
+    return _cosine_udf(False)(a, b)
 
 
 def cosine_arrow_quantized(a: Column, b: Column) -> Column:
@@ -93,7 +159,7 @@ def cosine_arrow_quantized(a: Column, b: Column) -> Column:
     lands ON an ulp plateau of near-identical pairs — at sf1 the
     replicated corpus put ~20k tied pairs at cos ≈ 1 and a one-ulp
     threshold difference moved 675 rows. Quantizing to
-    q = round(v·scale) (power-of-two scale: exact) makes dot and both
+    q = round(v·1024) (power-of-two scale: exact) makes dot and both
     norms² exact int64 sums — ORDER-INDEPENDENT, so any engine's
     summation agrees — and the cosine is then the fixed three-op
     double sequence dot/(sqrt(na)·sqrt(nb)), identical everywhere.
@@ -103,46 +169,11 @@ def cosine_arrow_quantized(a: Column, b: Column) -> Column:
     The quantization scale is PINNED to 1024 (no parameter — ADVICE
     r11): the UDF body, the oracle SQL of the md5-family queries, and
     the plane quantizer (:func:`_quantize_away_from_zero`) must all
-    agree on the same power-of-two constant, so a per-call scale knob
-    could only ever desynchronize them."""
-    global _COSINE_ARROW_Q
-    if _COSINE_ARROW_Q is None:
-
-        @F.pandas_udf("double")
-        def _cosq(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            ma = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in xs]
-            )
-            mb = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in ys]
-            )
-            if ma.size == 0:
-                return pd.Series([], dtype="float64")
-            # HALF-AWAY rounding, not np.rint (ties-to-even): the
-            # engines' round() is half-away-from-zero, and float32
-            # inputs scaled by the power-of-two 1024 DO land exact
-            # .5 ties — rint silently picked the other integer there
-            sa = ma * 1024
-            sb = mb * 1024
-            qa = np.copysign(np.floor(np.abs(sa) + 0.5), sa).astype(
-                np.int64
-            )
-            qb = np.copysign(np.floor(np.abs(sb) + 0.5), sb).astype(
-                np.int64
-            )
-            dots = np.einsum("ij,ij->i", qa, qb).astype(np.float64)
-            na = np.sqrt(
-                np.einsum("ij,ij->i", qa, qa).astype(np.float64)
-            )
-            nb = np.sqrt(
-                np.einsum("ij,ij->i", qb, qb).astype(np.float64)
-            )
-            return pd.Series(dots / (na * nb))
-
-        _COSINE_ARROW_Q = _cosq
-    return _COSINE_ARROW_Q(a, b)
+    agree on the same power-of-two constant."""
+    return _cosine_udf(True)(a, b)
 
 
+# ---------------------------------------------------------- query set
 #: (sf_dir, table, max_id, id_col, vec_col) → (ids, read-only matrix)
 _QUERY_VEC_MEMO: dict = {}
 
@@ -181,10 +212,127 @@ def load_query_vectors(
     )
     tbl = tbl.filter(pc.less(tbl[id_col], max_id))
     ids = tbl[id_col].to_pylist()
-    mat = np.asarray(tbl[vec_col].to_pylist(), dtype=np.float64)
+    mat = _mat_from_list_col(tbl[vec_col], None, np.float64, vec_col)
     mat.setflags(write=False)
     _QUERY_VEC_MEMO[key] = (ids, mat)
     return ids, mat
+
+
+class _Queries(NamedTuple):
+    ids: list
+    mat: np.ndarray  # (Q, D) float64
+    id_type: T.DataType
+    vec_type: T.DataType
+
+
+def _query_set(
+    queries: DataFrame | None,
+    queries_local: tuple[list, np.ndarray] | None,
+    query_id_col: str,
+    vec_col: str,
+    dim: int = 0,
+) -> _Queries:
+    """The bounded query side of a search: ``queries_local=(ids,
+    matrix)`` as given, else one collect of ``queries``'
+    (query_id_col, vec_col). The matrix is (Q, D) float64 — (0, D) for
+    an empty set, with D = ``dim`` when no vector fixes it."""
+    if queries_local is not None:
+        ids, mat = queries_local
+        ids, id_type = list(ids), T.LongType()
+        vec_type: T.DataType = T.ArrayType(T.DoubleType())
+        mat = np.asarray(mat, dtype=np.float64)
+    else:
+        tbl = queries.select(query_id_col, vec_col).toArrow()
+        ids = tbl.column(0).to_pylist()
+        mat = _mat_from_list_col(tbl.column(1), None, np.float64, vec_col)
+        id_type = queries.schema[query_id_col].dataType
+        vec_type = queries.schema[vec_col].dataType
+    if not ids and (mat.ndim != 2 or not mat.shape[1]):
+        mat = np.zeros((0, dim))  # no vector fixes D
+    return _Queries(ids, mat, id_type, vec_type)
+
+
+# -------------------------------------------------- candidates, top-k
+def _scan(
+    src: DataFrame,
+    qs: _Queries,
+    schema: T.StructType,
+    kernel,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The brute-force candidate pass: broadcast the query set and
+    stream ``src``'s (id, vector) batches through one ``mapInArrow``;
+    ``kernel(ids, m, q_ids, q_mat)`` scores a decoded batch into a dict
+    of output columns (or None). An empty query set emits nothing."""
+    bc = src.sparkSession.sparkContext.broadcast((qs.ids, qs.mat))
+
+    def gen(batches):
+        q_ids, q_mat = bc.value
+        for b in batches:
+            ids = b.column(id_col).to_numpy(zero_copy_only=False)
+            if not q_ids or ids.size == 0:
+                continue
+            cols = kernel(ids, _vectors(b, vec_col), q_ids, q_mat)
+            if cols is not None:
+                yield _arrow(schema, cols)
+
+    return src.select(id_col, vec_col).mapInArrow(gen, schema)
+
+
+def _local_topk(q_ids, ids, scores, k: int, exclude_self: bool = True):
+    """Per query ``qi`` (row ``qi`` of ``scores``, aligned with
+    ``ids``): yield (qi, qid, row positions of its batch-local top-k by
+    (score desc, id asc)) — the final window's total order, so the
+    per-batch prune never drops a row the global top-k keeps. A query
+    never matches its own id unless ``exclude_self`` is off."""
+    for qi, qid in enumerate(q_ids):
+        cand = np.flatnonzero(ids != qid) if exclude_self else np.arange(ids.size)
+        if cand.size:
+            yield qi, qid, cand[np.lexsort((ids[cand], -scores[qi][cand]))][:k]
+
+
+def _collect(parts: dict) -> dict | None:
+    """Per-query column chunks → concatenated columns (None if none)."""
+    first = next(iter(parts.values()))
+    if not first:
+        return None
+    return {name: np.concatenate(chunks) for name, chunks in parts.items()}
+
+
+def _top_k(scored: DataFrame, k: int, qcol: str, *order, rn: str = "rn") -> DataFrame:
+    """The global top-k tail: ``row_number`` per query over ``order``,
+    rows ranked past ``k`` dropped."""
+    w = Window.partitionBy(qcol).orderBy(*order)
+    return scored.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+
+
+def _ranked(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    id_col: str,
+    query_id_col: str,
+    qcol: str = "_qid",
+    out: str | None = None,
+) -> DataFrame:
+    """Top-k by (score desc, id asc) → (query_id_col, id_col,
+    round(score, 4) AS ``out``, rn)."""
+    return _top_k(scored, k, qcol, F.desc(score), F.asc(id_col)).select(
+        F.col(qcol).alias(query_id_col),
+        F.col(id_col),
+        F.round(score, 4).alias(out or score),
+        "rn",
+    )
+
+
+# --------------------------------------------------------- brute force
+def _cosine_sims(m: np.ndarray, q_mat: np.ndarray) -> np.ndarray:
+    """(N, Q) cosine of a batch against the query matrix: one BLAS
+    matmul; zero corpus rows score 0."""
+    norms = np.linalg.norm(m, axis=1)
+    norms[norms == 0.0] = 1.0
+    return (m @ q_mat.T) / np.outer(norms, np.linalg.norm(q_mat, axis=1))
 
 
 def cosine_topk(
@@ -201,75 +349,30 @@ def cosine_topk(
     ``queries`` must have (query_id_col, vec_col); alternatively pass
     ``queries_local=(ids, matrix)`` (e.g. from
     :func:`load_query_vectors`) to skip the driver collect job
-    entirely. The query side of a kNN search is bounded-small by
-    contract, so it is materialized once
-    on the driver and broadcast as a dense (Q, D) matrix — the corpus
-    side streams through ``mapInPandas`` in Arrow batches and is never
-    collected. Each batch computes all Q scores per row with one BLAS
-    matmul and emits only its local top-k per query, so the follow-up
-    global window ranks at most k·Q rows per partition — no all-pairs
-    shuffle at any corpus size.
+    entirely. The corpus streams through :func:`_scan` in Arrow
+    batches and is never collected: each batch computes all Q scores
+    per row with one BLAS matmul and emits only its local top-k per
+    query, so the global window ranks at most k·Q rows per partition —
+    no all-pairs shuffle at any corpus size.
     """
-    sc = corpus.sparkSession.sparkContext
-    if queries_local is not None:
-        q_ids, q_mat = queries_local
-        qid_type = T.LongType()
-    else:
-        q_rows = queries.select(query_id_col, vec_col).collect()
-        q_ids = [r[0] for r in q_rows]
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        qid_type = queries.schema[query_id_col].dataType
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    bc = sc.broadcast((q_ids, q_mat, q_norm))
-
-    id_field = corpus.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("_qid", qid_type),
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    qs = _query_set(queries, queries_local, query_id_col, vec_col)
+    schema = _schema(
+        ("_qid", qs.id_type),
+        (id_col, corpus.schema[id_col].dataType),
+        ("cos_sim", T.DoubleType()),
     )
 
-    def score_batches(batches):
-        ids_b, qm, qn = bc.value
-        qm_t = qm.T  # (D, Q)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0.0] = 1.0
-            sims = (m @ qm_t) / np.outer(norms, qn)  # (N, Q)
-            out_qid, out_id, out_sim = [], [], []
-            for qi, qid in enumerate(ids_b):
-                col = sims[:, qi]
-                cand = np.flatnonzero(ids != qid)
-                if cand.size == 0:
-                    continue
-                # top-k with the final tie-break (sim desc, id asc) so
-                # the partial combine is exact, not approximate
-                order = cand[np.lexsort((ids[cand], -col[cand]))][:k]
-                out_qid.extend([qid] * order.size)
-                out_id.extend(ids[order].tolist())
-                out_sim.extend(col[order].tolist())
-            yield pd.DataFrame(
-                {"_qid": out_qid, id_col: out_id, "cos_sim": out_sim}
-            )
+    def kernel(ids, m, q_ids, q_mat):
+        sims = _cosine_sims(m, q_mat).T
+        parts = {"_qid": [], id_col: [], "cos_sim": []}
+        for qi, qid, top in _local_topk(q_ids, ids, sims, k):
+            parts["_qid"].append(np.full(top.size, qid))
+            parts[id_col].append(ids[top])
+            parts["cos_sim"].append(sims[qi][top])
+        return _collect(parts)
 
-    scored = fan_out(corpus).mapInPandas(score_batches, schema=out_schema)
-    w = Window.partitionBy("_qid").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col(id_col),
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rn",
-        )
-    )
+    scored = _scan(fan_out(corpus), qs, schema, kernel, id_col, vec_col)
+    return _ranked(scored, k, "cos_sim", id_col, query_id_col)
 
 
 def cosine_range_search(
@@ -285,63 +388,30 @@ def cosine_range_search(
     (radius search — the dedup/recall twin of :func:`cosine_topk`,
     which bounds by count instead of similarity).
 
-    Same execution shape as :func:`cosine_topk`: the bounded query
-    side broadcasts as one dense matrix, the corpus streams through
-    ``mapInPandas`` scoring every batch with one BLAS matmul — but
-    the radius cut needs NO ranking, so there is no window and no
-    shuffle at all: emit-if-above is decided entirely inside the
-    batch. Result size is data-dependent (that is the operator's
-    contract); at 100 TB the map-only plan means output cost is the
-    only cost.
-    """
-    sc = corpus.sparkSession.sparkContext
-    if queries_local is not None:
-        q_ids, q_mat = queries_local
-        qid_type = T.LongType()
-    else:
-        q_rows = queries.select(query_id_col, vec_col).collect()
-        q_ids = [r[0] for r in q_rows]
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        qid_type = queries.schema[query_id_col].dataType
-    id_field = corpus.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    Same scan as :func:`cosine_topk`, but the radius cut needs NO
+    ranking, so there is no window and no shuffle at all:
+    emit-if-above is decided entirely inside the batch. Result size is
+    data-dependent (that is the operator's contract)."""
+    qs = _query_set(queries, queries_local, query_id_col, vec_col)
+    schema = _schema(
+        (query_id_col, qs.id_type),
+        (id_col, corpus.schema[id_col].dataType),
+        ("cos_sim", T.DoubleType()),
     )
-    if not q_ids:
-        return corpus.sparkSession.createDataFrame([], schema=out_schema)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    bc = sc.broadcast((q_ids, q_mat, q_norm))
 
-    def score_batches(batches):
-        ids_b, qm, qn = bc.value
-        qm_t = qm.T
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0.0] = 1.0
-            sims = (m @ qm_t) / np.outer(norms, qn)  # (N, Q)
-            out_qid, out_id, out_sim = [], [], []
-            for qi, qid in enumerate(ids_b):
-                col = sims[:, qi]
-                hit = np.flatnonzero((col >= threshold) & (ids != qid))
-                out_qid.extend([qid] * hit.size)
-                out_id.extend(ids[hit].tolist())
-                out_sim.extend(col[hit].tolist())
-            yield pd.DataFrame(
-                {query_id_col: out_qid, id_col: out_id, "cos_sim": out_sim}
-            )
+    def kernel(ids, m, q_ids, q_mat):
+        sims = _cosine_sims(m, q_mat)
+        parts = {query_id_col: [], id_col: [], "cos_sim": []}
+        for qi, qid in enumerate(q_ids):
+            col = sims[:, qi]
+            hit = np.flatnonzero((col >= threshold) & (ids != qid))
+            parts[query_id_col].append(np.full(hit.size, qid))
+            parts[id_col].append(ids[hit])
+            parts["cos_sim"].append(col[hit])
+        return _collect(parts)
 
-    return (
-        fan_out(corpus)
-        .mapInPandas(score_batches, schema=out_schema)
-        .select(query_id_col, id_col, F.round("cos_sim", 4).alias("cos_sim"))
+    return _scan(fan_out(corpus), qs, schema, kernel, id_col, vec_col).select(
+        query_id_col, id_col, F.round("cos_sim", 4).alias("cos_sim")
     )
 
 
@@ -361,6 +431,22 @@ def _popcount64(x: np.ndarray) -> np.ndarray:
     return np.unpackbits(b, axis=1).sum(axis=1).astype(np.int32)
 
 
+def _hamming(m: np.ndarray, q_mat: np.ndarray) -> np.ndarray:
+    """(Q, N) 1-bit sign-code Hamming distances."""
+    codes, q_codes = _pack_sign_codes(m), _pack_sign_codes(q_mat)
+    return np.stack([_popcount64(codes ^ qc) for qc in q_codes])
+
+
+def _einsum_cosine(m: np.ndarray, qv: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of ``m`` against one query vector with the
+    :func:`cosine_arrow` signature (einsum against a broadcast view:
+    same per-row multiply-add order, so the doubles are identical)."""
+    qb = np.broadcast_to(qv, m.shape)
+    return np.einsum("ij,ij->i", m, qb) / (
+        np.linalg.norm(m, axis=1) * np.linalg.norm(qb, axis=1)
+    )
+
+
 def cosine_hamming_candidates(
     corpus: DataFrame,
     queries_local: tuple[list, np.ndarray],
@@ -369,83 +455,113 @@ def cosine_hamming_candidates(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """One corpus pass scoring BOTH retrieval families of the RRF
-    fusion (r14, guide §4 "pass only the columns the function needs"):
-    each Arrow batch computes exact cosine and 1-bit-code Hamming
-    against the closure-held query matrix and emits only the union of
-    its local top-``depth`` per ordering, as
-    ``(query_id, vec_id, c, hamming)``.
+    fusion: each Arrow batch computes exact cosine and 1-bit-code
+    Hamming against the query matrix and emits only the union of its
+    local top-``depth`` per ordering, as ``(query_id, vec_id, c,
+    hamming)``.
 
     The union is an EXACT decomposition of both global top-``depth``
     lists: a row in a global top-``depth`` is in its batch's local
     top-``depth`` for that ordering (same total ordering, fewer
     competitors), so every globally-needed row is emitted — and a
-    global ``row_number`` over the union assigns it its TRUE global
+    global rank over the union assigns it its TRUE global
     rank, because every row that beats it globally is itself in a
     global top-``depth`` and therefore present. A row outside a
     global top-``depth`` has ≥ ``depth`` present rows beating it, so
     its union rank lands > ``depth`` and the caller's rank filter
     drops it. Holds for any partitioning of the corpus into batches.
+    The cosine keeps the :func:`cosine_arrow` einsum signature and the
+    sign-pack/XOR/popcount is integer-exact."""
+    qs = _query_set(None, queries_local, "query_id", vec_col)
+    schema = _schema(
+        ("query_id", T.LongType()),
+        (id_col, corpus.schema[id_col].dataType),
+        ("c", T.DoubleType()),
+        ("hamming", T.IntegerType()),
+    )
 
-    Bit-identity with the pair-join formulation this replaces: the
-    cosine keeps the exact einsum signature of :func:`cosine_arrow`
-    (``einsum("ij,ij->i")`` against a broadcast VIEW of the query
-    row — same per-row multiply-add order, no BLAS reassociation),
-    norms keep ``np.linalg.norm(..., axis=1)`` on both sides, and the
-    64-bit sign-pack/XOR/popcount is integer-exact. Python-boundary
-    bytes drop ~Q·2×: each corpus vector crosses ONCE instead of once
-    per query plus a query copy per pair, and the shuffle feeding the
-    ranking windows carries at most 2·depth·Q rows per batch instead
-    of the full n·Q pair table.
+    def kernel(ids, m, q_ids, q_mat):
+        c = np.stack([_einsum_cosine(m, qv) for qv in q_mat])
+        hm = _hamming(m, q_mat)
+        parts = {"query_id": [], id_col: [], "c": [], "hamming": []}
+        for (qi, qid, top_c), (_, _, top_h) in zip(
+            _local_topk(q_ids, ids, c, depth), _local_topk(q_ids, ids, -hm, depth)
+        ):
+            keep = np.union1d(top_c, top_h)
+            parts["query_id"].append(np.full(keep.size, qid))
+            parts[id_col].append(ids[keep])
+            parts["c"].append(c[qi][keep])
+            parts["hamming"].append(hm[qi][keep])
+        return _collect(parts)
+
+    return _scan(
+        fan_out(corpus.select(id_col, vec_col)), qs, schema, kernel, id_col, vec_col
+    )
+
+
+def two_stage_rerank(
+    corpus: DataFrame,
+    k: int = 10,
+    budget: int = 50,
+    queries: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    queries_local: tuple[list, np.ndarray] | None = None,
+) -> DataFrame:
+    """Two-stage retrieval (r9): cheap 1-bit Hamming stage-1 candidate
+    generation → exact-cosine stage-2 rerank — the production
+    composition that turns the LOW standalone recall of binary codes
+    (0.27@10 on this corpus, SCALE.md) into high end recall at a
+    fraction of brute-force cost. Stage 1 keeps the top-``budget``
+    per query by (hamming, id); stage 2 re-scores only candidate
+    rows with exact double cosine and returns the top-k.
+
+    Both stages run inside ONE corpus pass (:func:`_scan`): each batch
+    ranks Hamming against the query matrix and computes the exact
+    einsum cosine for its local top-``budget`` candidates only; a
+    global window over the emitted union (≤ budget·Q rows per batch)
+    then selects the true global top-``budget`` by (hamming, id) — the
+    exact decomposition argued in :func:`cosine_hamming_candidates`.
+
+    ``queries`` defaults to corpus rows with ``id < 10`` (the
+    registry's standing query-set convention; pass ``queries_local``
+    from :func:`load_query_vectors` to skip the bounded collect);
+    self-matches are excluded in stage 1 ONLY in corpus-derived mode
+    (``queries is None``) — an external ``queries`` frame has its
+    own id space, so a corpus doc whose id collides with a query_id
+    is a legitimate candidate, not a self-match (ADVICE r9).
     """
-    sc = corpus.sparkSession.sparkContext
-    q_ids, q_mat = queries_local
-    bc = sc.broadcast((list(q_ids), q_mat))
-    id_field = corpus.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("c", T.DoubleType()),
-            T.StructField("hamming", T.IntegerType()),
-        ]
+    exclude_self = queries is None
+    if queries_local is None and queries is None:
+        queries = corpus.filter(F.col(id_col) < 10).withColumnRenamed(
+            id_col, "query_id"
+        )
+    qs = _query_set(queries, queries_local, "query_id", vec_col)
+    schema = _schema(
+        ("query_id", qs.id_type),
+        (id_col, corpus.schema[id_col].dataType),
+        ("hamming", T.IntegerType()),
+        ("c", T.DoubleType()),
     )
 
-    def score_batches(batches):
-        ids_b, qm = bc.value
-        q_codes = _pack_sign_codes(qm)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            norms = np.linalg.norm(m, axis=1)
-            codes = _pack_sign_codes(m)
-            out = {"query_id": [], id_col: [], "c": [], "hamming": []}
-            for qi, qid in enumerate(ids_b):
-                qv = np.broadcast_to(qm[qi], m.shape)
-                dots = np.einsum("ij,ij->i", m, qv)
-                qn = np.linalg.norm(qv, axis=1)
-                c = dots / (norms * qn)
-                hm = _popcount64(codes ^ q_codes[qi])
-                cand = np.flatnonzero(ids != qid)
-                if cand.size == 0:
-                    continue
-                top_c = cand[np.lexsort((ids[cand], -c[cand]))][:depth]
-                top_h = cand[np.lexsort((ids[cand], hm[cand]))][:depth]
-                keep = np.union1d(top_c, top_h)
-                out["query_id"].extend([qid] * keep.size)
-                out[id_col].extend(ids[keep].tolist())
-                out["c"].extend(c[keep].tolist())
-                out["hamming"].extend(hm[keep].tolist())
-            yield pd.DataFrame(out)
+    def kernel(ids, m, q_ids, q_mat):
+        hm = _hamming(m, q_mat)
+        parts = {"query_id": [], id_col: [], "hamming": [], "c": []}
+        for qi, qid, top in _local_topk(q_ids, ids, -hm, budget, exclude_self):
+            parts["query_id"].append(np.full(top.size, qid))
+            parts[id_col].append(ids[top])
+            parts["hamming"].append(hm[qi][top])
+            parts["c"].append(_einsum_cosine(m[top], q_mat[qi]))
+        return _collect(parts)
 
-    return fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        score_batches, schema=out_schema
+    scored = _scan(
+        fan_out(corpus.select(id_col, vec_col)), qs, schema, kernel, id_col, vec_col
     )
+    stage1 = _top_k(scored, budget, "query_id", "hamming", id_col, rn="_rn")
+    return _ranked(stage1, k, "c", id_col, "query_id", "query_id", "cos_sim")
 
 
+# ---------------------------------------------------------------- LSH
 def _planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
     """Deterministic pseudo-random hyperplanes (unit-normalized rows)."""
     rng = np.random.RandomState(seed)
@@ -616,43 +732,117 @@ def band_signatures(
     vec_col: str = "embedding",
     quantize: bool = False,
 ) -> DataFrame:
-    """Per-vector banded hyperplane signatures in ONE ``mapInPandas``
-    BLAS pass → (id, vec, sigs ARRAY<BIGINT> of length ``bands``).
-
-    Replaces the per-plane interpreted-lambda expression trees (r4's
-    measured scale-killer: 48-60 higher-order-lambda dot products per
-    row, ~20 s at sf0.01) with the `_assign_cells` pattern — broadcast
-    the (P, D) plane matrix, one matmul per Arrow batch, numpy bit
-    packing. No shuffle; the corpus is never collected.
-    """
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(np.ascontiguousarray(all_planes.T))  # (D, P)
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField(vec_col, df.schema[vec_col].dataType),
-            T.StructField("sigs", T.ArrayType(T.LongType())),
-        ]
+    """Per-vector banded hyperplane signatures in ONE ``mapInArrow``
+    BLAS pass → (id, vec, sigs ARRAY<BIGINT> of length ``bands``):
+    broadcast the (P, D) plane matrix, one matmul per Arrow batch,
+    numpy bit packing. No shuffle; the corpus is never collected."""
+    bc = df.sparkSession.sparkContext.broadcast(np.ascontiguousarray(all_planes.T))
+    schema = _schema(
+        (id_col, df.schema[id_col].dataType),
+        (vec_col, df.schema[vec_col].dataType),
+        ("sigs", T.ArrayType(T.LongType())),
     )
 
     def gen(batches):
         planes_t = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            m = _vectors(b, vec_col)
             if quantize:
                 m = _quantize_away_from_zero(m)
             sigs = _pack_band_signatures(m, planes_t, planes_per_band, bands)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "sigs": list(sigs),
-                }
-            )
+            cols = {id_col: b.column(id_col), vec_col: b.column(vec_col), "sigs": sigs}
+            yield _arrow(schema, cols)
 
-    return df.select(id_col, vec_col).mapInPandas(gen, out_schema)
+    return df.select(id_col, vec_col).mapInArrow(gen, schema)
+
+
+class _LSH(NamedTuple):
+    planes: np.ndarray  # (planes_per_band · bands, dim)
+    planes_per_band: int
+    bands: int
+    quantize: bool  # md5 family: planes score round(v·1024) integers
+
+
+def _hyperplanes(
+    sized: DataFrame,
+    planes_per_band: int | None,
+    bands: int | None,
+    default_bands,
+    dim: int,
+    seed: int,
+    family: str,
+) -> _LSH:
+    """The one banded-LSH setup: band width derived from ``sized``'s
+    count when not pinned (:func:`adaptive_planes_per_band`), band
+    count from ``default_bands(width)`` when not pinned, and the plane
+    family — ``'gaussian'`` (seeded, the default) or ``'md5'`` (±1
+    md5-seeded planes over quantized vectors: every plane dot is exact
+    int64 arithmetic, so any engine rebuilds the identical buckets)."""
+    if planes_per_band is None:
+        planes_per_band = adaptive_planes_per_band(sized.count())
+    if bands is None:
+        bands = default_bands(planes_per_band)
+    n_planes = planes_per_band * bands
+    if family == "md5":
+        planes = _md5_sign_planes(n_planes, dim)
+    elif family == "gaussian":
+        planes = _planes(n_planes, dim, seed)
+    else:  # pragma: no cover - authoring guard
+        raise ValueError(f"unknown hyperplane family: {family!r}")
+    return _LSH(planes, planes_per_band, bands, family == "md5")
+
+
+def _verify_bands(threshold: float | None):
+    """Band count of the verify-by-cut operators: 6 in quantile mode
+    (certified for the cos ≈ 0.999 near-dup regime — per-plane
+    collision ~0.986 → recall ≥ 0.998 at any p ≤ 24 — and transcribed
+    by the DuckDB oracle twins), else :func:`bands_for_threshold`,
+    holding ~0.9 recall at the caller's cut as the width grows."""
+    return lambda p: 6 if threshold is None else bands_for_threshold(p, threshold)
+
+
+def _banded(
+    lsh: _LSH,
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    id_as: str,
+    vec_as: str | None = None,
+) -> DataFrame:
+    """(id_as[, vec_as], band, sig): one row per vector and band."""
+    sigs = band_signatures(
+        df, lsh.planes, lsh.planes_per_band, lsh.bands, id_col, vec_col, lsh.quantize
+    )
+    keep = [F.col(id_col).alias(id_as)]
+    if vec_as:
+        keep.append(F.col(vec_col).alias(vec_as))
+    return sigs.select(*keep, F.posexplode("sigs").alias("band", "sig"))
+
+
+def _verify_cosine(lsh: _LSH):
+    """The LSH verify cosine: the md5 family scores the quantized
+    integers too (exact, summation-order-independent — see
+    :func:`cosine_arrow_quantized`), Gaussian full-precision floats."""
+    return cosine_arrow_quantized if lsh.quantize else cosine_arrow
+
+
+def _quantile_cut(scored: DataFrame, col: str, q: float):
+    """The adaptive cut: the exact ⌈q·n⌉-rank element of ``col`` (=
+    DuckDB ``quantile_disc``), None when ``scored`` is empty.
+
+    GK accuracy is derived from the observed count (a fixed 10⁶ went
+    lossy at the sf1 sweep's 1.68M candidates), and above
+    ``GK_LOSSLESS_GATE`` rows the same rank element comes from
+    :func:`~trendengine_spark.operators.util.exact_rank_element` —
+    lossless GK partials would hold every candidate (the sf10 OOM), so
+    the identity holds at every scale with bounded memory."""
+    n = scored.count()
+    if n + 1 > GK_LOSSLESS_GATE:
+        return exact_rank_element(scored, col, q, n=n)
+    acc = max(1_000_000, n + 1)
+    return scored.agg(F.percentile_approx(col, q, acc).alias("c")).collect()[0]["c"]
 
 
 def random_hyperplane_ann(
@@ -670,100 +860,53 @@ def random_hyperplane_ann(
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via random-hyperplane LSH.
 
-    Corpus signatures: one ``mapInPandas`` BLAS pass over all planes
+    Corpus signatures: one BLAS pass over all planes
     (:func:`band_signatures`), exploded to (band, sig) rows. Query
-    signatures: computed driver-side on the bounded query set (same
-    contract as :func:`cosine_topk`) and broadcast as (band, sig)
-    probe rows. Candidates = ONE broadcast equi-join on (band, sig) —
-    no corpus shuffle at all — then distinct + exact cosine re-rank.
-    Recall grows with ``bands``; candidate volume shrinks with
-    ``planes_per_band``.
+    signatures are computed driver-side on the bounded query set and
+    broadcast as (band, sig) probe rows. Candidates = ONE broadcast
+    equi-join on (band, sig) — no corpus shuffle at all — then
+    distinct + exact cosine re-rank. Recall grows with ``bands``;
+    candidate volume shrinks with ``planes_per_band``.
 
-    ``planes_per_band=None``/``bands=None`` (the r14 defaults —
-    VERDICT r13 #1) DERIVE both knobs from the corpus count: band
-    width p = ceil(log2 n) clamped [8, 24]
+    ``planes_per_band=None``/``bands=None`` DERIVE both knobs from the
+    corpus count: band width p = ceil(log2 n) clamped [8, 24]
     (:func:`adaptive_planes_per_band` — keeps bucket occupancy, and
     with it candidate volume per (query, band), ~constant at every
-    scale instead of the frozen p=4's n/16-per-band linear-fraction
-    scan), and the band COUNT from the frozen
-    :data:`_ANN_BANDS_FOR_P` table (ADVICE r13: bands must scale
-    WITH p or recall at the target similarity collapses — the table
-    holds ~0.8 recall at the demo regime's cos ≈ 0.3 up to its 256
-    cap, and ≈ 1.0 recall for high-similarity (cos ≥ 0.9) neighbors
-    at any p). Candidate volume per query ≈ bands at any corpus
-    size. Pass ints to pin either knob (the old fixed default was
-    4×12 — exactly the table's p=4 row). With real embedding corpora
-    whose neighbors sit at cos ≥ 0.7, derived knobs hold recall with
-    far fewer bands than the cap; the cap is the honest LSH bound at
-    LOW similarity (bands would need ~n^0.74 there).
+    scale), and the band COUNT from the frozen :data:`_ANN_BANDS_FOR_P`
+    table (bands must scale WITH p or recall at the target similarity
+    collapses; the table holds ~0.8 recall at the demo regime's
+    cos ≈ 0.3 up to its 256 cap, and ≈ 1.0 recall for cos ≥ 0.9
+    neighbors at any p). Pass ints to pin either knob.
 
-    ``family='md5'`` (r10) makes bucket assignment engine-portable:
-    ±1 planes from :func:`_md5_sign_planes` and vectors quantized to
-    exact integers (:func:`_quantize_away_from_zero`) mean every dot
-    product is EXACT integer arithmetic — identical sign bits on any
-    engine, which is what lets the ``sim_ann_hyperplane`` DuckDB
-    oracle recompute candidates and the final top-k relationally.
-    The BLAS matmul stays exact because every intermediate is an
-    integer < 2⁵³; the Gaussian family stays the default (better
-    bucket isotropy for skewed real corpora).
+    ``family='md5'`` (r10) makes bucket assignment engine-portable
+    (see :func:`_hyperplanes`), which is what lets the
+    ``sim_ann_hyperplane`` DuckDB oracle recompute candidates and the
+    final top-k relationally. The BLAS matmul stays exact because
+    every intermediate is an integer < 2⁵³; the Gaussian family stays
+    the default (better bucket isotropy for skewed real corpora).
     """
-    spark = corpus.sparkSession
-    if planes_per_band is None:
-        planes_per_band = adaptive_planes_per_band(corpus.count())
-    if bands is None:
-        bands = adaptive_ann_bands(planes_per_band)
-    n_planes = planes_per_band * bands
-    if family == "md5":
-        all_planes = _md5_sign_planes(n_planes, dim)
-    elif family == "gaussian":
-        all_planes = _planes(n_planes, dim, seed)
-    else:  # pragma: no cover - authoring guard
-        raise ValueError(f"unknown hyperplane family: {family!r}")
-    quantize = family == "md5"
-    csig = band_signatures(
-        fan_out(corpus), all_planes, planes_per_band, bands, id_col,
-        vec_col, quantize=quantize,
+    lsh = _hyperplanes(
+        corpus, planes_per_band, bands, adaptive_ann_bands, dim, seed, family
     )
-    c_banded = csig.select(
-        id_col, vec_col, F.posexplode("sigs").alias("band", "sig")
-    )
-
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    if not q_rows:
-        # An empty query set would otherwise reach _pack_band_signatures
-        # as a 1-D (0,)-shaped matrix and crash the BLAS matmul.
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, queries.schema[query_id_col].dataType),
-                    T.StructField(id_col, corpus.schema[id_col].dataType),
-                    T.StructField("cos_sim", T.DoubleType()),
-                    T.StructField("rn", T.IntegerType()),
-                ]
-            ),
-        )
-    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    if quantize:
-        q_mat = _quantize_away_from_zero(q_mat)
+    c_banded = _banded(lsh, fan_out(corpus), id_col, vec_col, id_col, vec_col)
+    qs = _query_set(queries, None, query_id_col, vec_col, dim)
+    q_mat = _quantize_away_from_zero(qs.mat) if lsh.quantize else qs.mat
     q_sigs = _pack_band_signatures(
-        q_mat, np.ascontiguousarray(all_planes.T), planes_per_band, bands
+        q_mat, np.ascontiguousarray(lsh.planes.T), lsh.planes_per_band, lsh.bands
     )
     probe_rows = [
-        (r[0], list(r[1]), b, int(q_sigs[i, b]))
-        for i, r in enumerate(q_rows)
-        for b in range(bands)
+        (qid, qs.mat[i].tolist(), b, int(q_sigs[i, b]))
+        for i, qid in enumerate(qs.ids)
+        for b in range(lsh.bands)
     ]
     probes = local_rows_df(
-        spark,
+        corpus.sparkSession,
         probe_rows,
-        T.StructType(
-            [
-                T.StructField("_qid", queries.schema[query_id_col].dataType),
-                T.StructField("_qvec", queries.schema[vec_col].dataType),
-                T.StructField("band", T.IntegerType()),
-                T.StructField("sig", T.LongType()),
-            ]
+        _schema(
+            ("_qid", qs.id_type),
+            ("_qvec", qs.vec_type),
+            ("band", T.IntegerType()),
+            ("sig", T.LongType()),
         ),
     )
     cands = (
@@ -772,59 +915,324 @@ def random_hyperplane_ann(
         .dropDuplicates([id_col, "_qid"])
         .filter(F.col(id_col) != F.col("_qid"))
     )
-    scored = cands.withColumn(
-        "cos_sim", cosine_arrow(F.col("_qvec"), F.col(vec_col))
+    scored = cands.withColumn("cos_sim", cosine_arrow(F.col("_qvec"), F.col(vec_col)))
+    return _ranked(scored, k, "cos_sim", id_col, query_id_col)
+
+
+def embedding_near_dup_pairs(
+    corpus: DataFrame,
+    threshold: float | None = 0.95,
+    dim: int = 64,
+    planes_per_band: int | None = None,
+    bands: int | None = None,
+    seed: int = 7,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    quantile: float = 0.999,
+    min_pairs: int = 10,
+    family: str = "gaussian",
+) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs via banded hyperplane LSH
+    self-bucketing — candidates only share a band signature, then
+    exact cosine verify. No all-pairs join.
+
+    ``family='md5'`` (r10) makes the whole operator engine-portable:
+    identical buckets → identical candidate PAIRS on any engine, the
+    verify cosine scores quantized integers, and the adaptive cut is
+    the exact rank element (:func:`_quantile_cut`).
+
+    ``threshold``: absolute cosine cut (use for real near-dup corpora
+    where duplicates sit at cos ≥ 0.9). ``threshold=None`` switches to
+    an ADAPTIVE cut at the ``quantile`` of the observed candidate
+    similarities, floored so at least ``min_pairs`` candidates survive
+    (cut = min(percentile, min_pairs-th best sim), applied as a
+    broadcast scalar) — by construction the result is non-vacuous at
+    any corpus scale, even on corpora whose nearest pairs are weak
+    (the synthetic test corpus peaks near cos ≈ 0.5; a fixed 0.9 cut
+    returns 0 rows and proves nothing).
+
+    Knobs (:func:`_hyperplanes`): ``planes_per_band=None`` derives the
+    band width from the corpus count, so candidate volume stays ~linear
+    in n; ``bands=None`` is :func:`_verify_bands`.
+
+    Plan shape: the (band, sig) rows are materialized via
+    :func:`owned_cache` (they feed both self-join sides); in adaptive
+    mode the scored pair table is likewise owned-cached, since the cut
+    and the filter both read it.
+    """
+    lsh = _hyperplanes(
+        corpus, planes_per_band, bands, _verify_bands(threshold), dim, seed, family
     )
-    w = Window.partitionBy("_qid").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col(id_col),
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rn",
+    tag = f"{lsh.planes_per_band}.{lsh.bands}.{seed}.{family}"
+    banded = owned_cache(
+        _banded(lsh, fan_out(corpus), id_col, vec_col, "id", "vec"),
+        f"sim.neardup.banded.{tag}",
+    )
+    # IDS-ONLY bucket self-join (r12, the sf10 lesson): the pair
+    # shuffle carries 16-byte id pairs, never the 64-float vectors;
+    # vectors join back per id AFTER the dedup from the cached table.
+    a = banded.select(F.col("id").alias("id_a"), "band", "sig")
+    b = banded.select(F.col("id").alias("id_b"), "band", "sig")
+    id_vec = banded.select("id", "vec").dropDuplicates(["id"])
+
+    def vecs(side: str) -> DataFrame:
+        return id_vec.select(
+            F.col("id").alias(f"id_{side}"), F.col("vec").alias(f"vec_{side}")
         )
+
+    pairs = (
+        a.join(b, ["band", "sig"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+        .join(vecs("a"), "id_a")
+        .join(vecs("b"), "id_b")
     )
+    scored = pairs.withColumn(
+        "cos_sim", _verify_cosine(lsh)(F.col("vec_a"), F.col("vec_b"))
+    )
+    if threshold is None:
+        scored = owned_cache(
+            scored.select("id_a", "id_b", "cos_sim"), f"sim.neardup.scored.{tag}"
+        )
+        # cut = min(percentile, min_pairs-th best sim): the floor keeps
+        # at least min_pairs survivors whenever that many candidates exist
+        p = _quantile_cut(scored, "cos_sim", quantile)
+        cut = (
+            scored.orderBy(F.desc("cos_sim"))
+            .limit(min_pairs)
+            .agg(F.least(F.lit(p).cast("double"), F.min("cos_sim")).alias("_thr"))
+        )
+        scored = scored.join(F.broadcast(cut)).filter(F.col("cos_sim") >= F.col("_thr"))
+    else:
+        scored = scored.filter(F.col("cos_sim") >= threshold)
+    return scored.select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+
+
+def semantic_decontaminate(
+    train: DataFrame,
+    eval_df: DataFrame,
+    threshold: float | None = 0.95,
+    planes_per_band: int | None = None,
+    bands: int | None = None,
+    seed: int = 7,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    drop_quantile: float = 0.99,
+    family: str = "gaussian",
+) -> tuple[DataFrame, DataFrame]:
+    """Semantic (embedding-level) decontamination: remove TRAINING
+    vectors whose embedding is near-duplicate to any EVALUATION
+    vector — the representation-space complement to n-gram
+    decontamination (``pipeline_decontaminate_ngrams`` catches
+    verbatim leakage; paraphrased or re-formatted benchmark items
+    share an embedding neighborhood, not n-grams).
+
+    Same banded-hyperplane LSH machinery as
+    :func:`embedding_near_dup_pairs`, crossed between two corpora:
+    both sides signature with the SAME plane family (shared seed —
+    without it bucket keys are incomparable), candidates are bucket
+    joins on (band, sig) only — never |train| × |eval| — and exact
+    cosine verifies each candidate. ``threshold=None`` switches to
+    the adaptive cut at ``drop_quantile`` of candidate similarities
+    (:func:`_quantile_cut`; non-vacuous on corpora with no true
+    leakage). The eval side is typically tiny next to train, so its
+    banded table broadcasts.
+
+    Returns ``(matches, survivors)``: matches = (train_id, eval_id,
+    cos_sim) above the cut; survivors = train rows minus contaminated
+    ids (anti-join).
+
+    ``family='md5'`` (r12) extends the portability contract to the
+    CROSS-corpus case, which is what lets
+    `pipeline_semantic_decontaminate` carry a full DuckDB oracle.
+    ``planes_per_band=None`` derives the band width from the TRAIN
+    count (the big side — the eval set broadcasts regardless);
+    ``bands=None`` is :func:`_verify_bands`.
+    """
+    lsh = _hyperplanes(
+        train, planes_per_band, bands, _verify_bands(threshold), dim, seed, family
+    )
+    # IDS-ONLY candidate join (r12, the sf10 lesson): carrying both
+    # 64-float vectors through the bucket join put ~15 GB of vector
+    # payload into the dedup shuffle at 200k vectors; candidates are
+    # 16-byte id pairs and the vectors join back per id AFTER dedup.
+    t_band = _banded(lsh, fan_out(train), id_col, vec_col, "train_id")
+    e_band = _banded(lsh, eval_df, id_col, vec_col, "eval_id")
+    cand = (
+        t_band.join(F.broadcast(e_band), ["band", "sig"])
+        .select("train_id", "eval_id")
+        .dropDuplicates(["train_id", "eval_id"])
+    )
+    t_vec = train.select(F.col(id_col).alias("train_id"), F.col(vec_col).alias("vec_t"))
+    e_vec = eval_df.select(F.col(id_col).alias("eval_id"), F.col(vec_col).alias("vec_e"))
+    cand = cand.join(t_vec, "train_id").join(F.broadcast(e_vec), "eval_id")
+    scored = cand.withColumn(
+        "cos_sim", _verify_cosine(lsh)(F.col("vec_t"), F.col("vec_e"))
+    ).select("train_id", "eval_id", "cos_sim")
+    # both returned frames (matches AND the survivors anti-join) read
+    # scored — materialize once in EITHER mode
+    scored = owned_cache(
+        scored, f"sim.decon.{lsh.planes_per_band}.{lsh.bands}.{seed}.{family}"
+    )
+    if threshold is None:
+        q = _quantile_cut(scored, "cos_sim", drop_quantile)
+        cut = float(q) if q is not None else 2.0
+    else:
+        cut = threshold
+    matches = scored.filter(F.col("cos_sim") >= cut)
+    contaminated = matches.select(F.col("train_id").alias(id_col)).distinct()
+    survivors = train.join(contaminated, id_col, "left_anti")
+    return matches, survivors
+
+
+# ---------------------------------------------------------- quantizers
+def _nearest(
+    x: np.ndarray, books: np.ndarray, metric: str, top: int = 1
+) -> np.ndarray:
+    """The one assignment kernel: (N, D) rows against (m, k, D/m)
+    books → (N, m) nearest code per block, or (N, top) cells.
+
+    - ``'cos'`` (IVF cells: one block, corpus assignment and query
+      probing alike): max cosine, zero rows scoring 0; ``top > 1``
+      gives the ``top`` best cells, best first.
+    - ``'l2'`` (PQ codes): per block, min squared L2 =
+      argmax(2x·c − ‖c‖²)."""
+    if metric == "cos":
+        cn = books[0] / np.linalg.norm(books[0], axis=1, keepdims=True)
+        norms = np.linalg.norm(x, axis=1)
+        norms[norms == 0.0] = 1.0
+        sims = (x / norms[:, None]) @ cn.T
+        if top == 1:
+            return np.argmax(sims, axis=1)[:, None]
+        return np.argsort(-sims, axis=1)[:, :top]
+    m, _, d_sub = books.shape
+    out = np.empty((x.shape[0], m), dtype=np.int32)
+    for s in range(m):
+        block = x[:, s * d_sub : (s + 1) * d_sub]
+        scores = 2.0 * block @ books[s].T - (books[s] ** 2).sum(axis=1)
+        out[:, s] = np.argmax(scores, axis=1)
+    return out
+
+
+def _encode(
+    df: DataFrame,
+    books: np.ndarray,
+    metric: str,
+    vec_col: str,
+    keep: list[str],
+    out: str = "codes",
+    top: int = 1,
+) -> DataFrame:
+    """One ``mapInArrow`` pass: the ``keep`` columns plus ``out``
+    ARRAY<INT>, each vector's :func:`_nearest` codes against the
+    broadcast books. No shuffle; the corpus is never collected."""
+    bc = df.sparkSession.sparkContext.broadcast(books)
+    schema = T.StructType(
+        [df.schema[c] for c in keep]
+        + [T.StructField(out, T.ArrayType(T.IntegerType()))]
+    )
+
+    def gen(batches):
+        bks = bc.value
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            codes = _nearest(_vectors(b, vec_col), bks, metric, top)
+            yield _arrow(schema, {**{c: b.column(c) for c in keep}, out: codes})
+
+    return df.select(*dict.fromkeys([*keep, vec_col])).mapInArrow(gen, schema)
 
 
 def _assign_cells(
     df: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Nearest-centroid (max-cosine) cell per vector: broadcast the
-    (small) centroid matrix, one BLAS matmul per Arrow batch via
-    ``mapInPandas`` — no shuffle, corpus never collected."""
-    sc = df.sparkSession.sparkContext
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    bc = sc.broadcast(cn)
-    id_field = df.schema[id_col]
-    vec_field = df.schema[vec_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField(vec_col, vec_field.dataType),
-            T.StructField("cell", T.IntegerType()),
-        ]
-    )
+    """(id, vec, cell): each vector's max-cosine IVF cell."""
+    cells = _encode(df, centroids[None], "cos", vec_col, [id_col, vec_col], "_c")
+    return cells.select(id_col, vec_col, F.col("_c")[0].alias("cell"))
 
-    def gen(batches):
-        cmat = bc.value.T  # (D, C)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0.0] = 1.0
-            cells = np.argmax((m / norms[:, None]) @ cmat, axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": cells.astype("int32"),
-                }
+
+def _by_hash(df: DataFrame, id_col: str, seed: int) -> DataFrame:
+    """``df`` ordered by ``xxhash64(id, seed)`` — the deterministic
+    pseudo-random order behind every training sample and seed init
+    (a TakeOrdered under ``limit``: no full sort, no RNG state)."""
+    return df.withColumn("_h", F.xxhash64(F.col(id_col), F.lit(seed))).orderBy("_h")
+
+
+def _lloyd(
+    corpus: DataFrame,
+    k: int,
+    iters: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+    train_cap: int,
+    key: str,
+    metric: str,
+    m: int = 1,
+    k_from_count=None,
+) -> tuple[DataFrame, np.ndarray]:
+    """The one float Lloyd loop: returns (owned-cached (id, vec)
+    corpus, trained (m, k, D/m) books).
+
+    - Sample: training runs on the ``train_cap`` smallest
+      ``xxhash64(id, seed)`` rows when the corpus is larger (a superset
+      of the seed rows, so corpora under the cap train on everything);
+      capped training cost is the standard quantizer practice (FAISS
+      trains on 30-256 points per cell, Jégou 2011 on a subset).
+    - Seed: the ``k`` smallest-hash vectors; block s of the seeds
+      starts codebook s.
+    - Round: one :func:`_encode` pass assigns every vector's m blocks
+      (:func:`_nearest` under ``metric``), then one hash aggregate keyed
+      by (block, cell, position) — cardinality m·k·D/m, independent of
+      corpus size — takes each mean in decimal, so books are
+      bit-stable under partial-aggregation order. Cells that lose
+      every member keep their centroid.
+
+    ``k=None`` derives it as ``k_from_count(corpus count)`` (IVF's
+    :func:`adaptive_n_cells`)."""
+    c = owned_cache(fan_out(corpus).select(id_col, vec_col), f"{key}.corpus")
+    n = c.count()
+    if k is None:
+        k = k_from_count(n)
+    train = c
+    if n > train_cap:
+        train = owned_cache(
+            fan_out(_by_hash(c, id_col, seed).limit(train_cap).drop("_h")),
+            f"{key}.train.{train_cap}",
+        )
+    tbl = _by_hash(train, id_col, seed).limit(k).select(vec_col).toArrow()
+    init = _mat_from_list_col(tbl.column(0), None, np.float64, vec_col)
+    if init.shape[1] % m:
+        raise ValueError(f"dim {init.shape[1]} not divisible by m={m}")
+    d_sub = init.shape[1] // m
+    books = np.stack([init[:, s * d_sub : (s + 1) * d_sub] for s in range(m)])
+    for _ in range(iters):
+        comp = _encode(train, books, metric, vec_col, [vec_col], "_cells").select(
+            "_cells", F.posexplode(vec_col).alias("pos", "val")
+        )
+        sub = F.expr(f"pos div {d_sub}")
+        means = (
+            comp.select(
+                sub.alias("sub"),
+                F.col("_cells")[sub].alias("cell"),
+                (F.col("pos") % d_sub).alias("p"),
+                "val",
             )
-
-    return df.select(id_col, vec_col).mapInPandas(gen, out_schema)
+            .groupBy("sub", "cell", "p")
+            .agg(
+                (F.sum(F.col("val").cast("decimal(28,12)")) / F.count(F.lit(1)))
+                .cast("double")
+                .alias("m")
+            )
+            .toArrow()
+        )
+        books = books.copy()
+        books[
+            means["sub"].to_numpy(), means["cell"].to_numpy(), means["p"].to_numpy()
+        ] = means["m"].to_numpy()
+    return c, books
 
 
 def ivf_index(
@@ -836,17 +1244,8 @@ def ivf_index(
     vec_col: str = "embedding",
     train_cap: int = 65536,
 ) -> tuple[DataFrame, np.ndarray]:
-    """IVF coarse quantizer: deterministic seeded init + Lloyd
-    iterations, all distributed.
-
-    - Init: the ``n_cells`` vectors with smallest ``xxhash64(id, seed)``
-      — a deterministic pseudo-random sample fetched with a TakeOrdered
-      (no full sort, no RNG state).
-    - Assign: one ``mapInPandas`` BLAS pass (no shuffle).
-    - Update: per-(cell, component) mean via ``posexplode`` + a hash
-      aggregate keyed by (cell, pos) — cardinality n_cells × dim, tiny
-      at any corpus size; sums run in decimal so centroids are
-      bit-stable under partial-agg reordering (deterministic index).
+    """IVF coarse quantizer: :func:`_lloyd` with one block and cosine
+    assignment, then one assignment sweep of the full corpus.
 
     Returns (assignments ``(id, vec, cell)``, centroid matrix). At
     100 TB the assignment output is what you'd persist, bucketed by
@@ -854,76 +1253,15 @@ def ivf_index(
 
     The prepared corpus is :func:`owned_cache`-materialized: the seed
     selection, every Lloyd iteration, and the final assignment each
-    stream the full vector column — 4+ scans that would otherwise
-    re-read and re-decode the source per pass (measured ~2× the whole
-    query's time at sf0.01). One columnar materialization, full
-    lineage, pool-bounded across invocations.
-
-    r14 (VERDICT r13 #1): ``n_cells=None`` derives the cell count
-    from the corpus size via :func:`adaptive_n_cells` (~ceil-sqrt,
-    clamped [16, 4096]) so probe cost becomes ~nprobe·√N instead of
-    the frozen 16's N·nprobe/16 linear-fraction scan. And Lloyd
-    TRAINING runs on a bounded deterministic sample (the
-    ``train_cap`` smallest ``xxhash64(id, seed)`` rows — a superset
-    of the seed selection, so small corpora are bit-identical to the
-    pre-r14 path): with derived cells the per-round assignment is
-    N·n_cells BLAS flops, and capping the train set keeps total
-    training cost ~train_cap·n_cells·iters regardless of corpus
-    size, the standard coarse-quantizer practice (FAISS trains on
-    30-256 points/cell). The FINAL assignment still sweeps the full
-    corpus once — inherent to building the index.
+    stream the full vector column. ``n_cells=None`` derives the cell
+    count from the corpus size via :func:`adaptive_n_cells` (~ceil-sqrt,
+    clamped [16, 4096]) so probe cost becomes ~nprobe·√N.
     """
-    c = owned_cache(
-        fan_out(corpus).select(id_col, vec_col),
-        f"sim.ivf.corpus.{seed}",
+    c, books = _lloyd(
+        corpus, n_cells, iters, seed, id_col, vec_col, train_cap,
+        f"sim.ivf.{seed}", "cos", k_from_count=adaptive_n_cells,
     )
-    # one count action serves both decisions (r15): the second
-    # count() was a separate job per build — cheap against the cache
-    # but a pure stage-launch constant on small corpora
-    n_corpus = c.count()
-    if n_cells is None:
-        n_cells = adaptive_n_cells(n_corpus)
-    train = c
-    if n_corpus > train_cap:
-        train = owned_cache(
-            fan_out(
-                c.withColumn(
-                    "_h", F.xxhash64(F.col(id_col), F.lit(seed))
-                )
-                .orderBy("_h")
-                .limit(train_cap)
-                .drop("_h")
-            ),
-            f"sim.ivf.train.{seed}.{train_cap}",
-        )
-    seed_rows = (
-        train.withColumn("_h", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("_h")
-        .limit(n_cells)
-        .select(vec_col)
-        .collect()
-    )
-    cent = np.asarray([list(r[0]) for r in seed_rows], dtype=np.float64)
-    for _ in range(iters):
-        asg = _assign_cells(train, cent, id_col, vec_col)
-        comp = asg.select("cell", F.posexplode(vec_col).alias("pos", "val"))
-        means = (
-            comp.groupBy("cell", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,12)"))
-                    / F.count(F.lit(1))
-                )
-                .cast("double")
-                .alias("m")
-            )
-            .collect()
-        )
-        new = cent.copy()  # cells that lost every member keep their centroid
-        for r in means:
-            new[r["cell"], r["pos"]] = r["m"]
-        cent = new
-    return _assign_cells(c, cent, id_col, vec_col), cent
+    return _assign_cells(c, books[0], id_col, vec_col), books[0]
 
 
 def ivf_topk(
@@ -947,235 +1285,25 @@ def ivf_topk(
     all-pairs product. Exact cosine re-rank inside the probed cells.
     Expected candidate volume is N·nprobe/n_cells; recall is tuned by
     ``nprobe`` (= 1.0 when nprobe = n_cells, matching brute force).
-
-    ``n_cells=None`` (r14 default) derives ~ceil-sqrt cells from the
-    corpus count (see :func:`adaptive_n_cells`), making candidate
-    volume ~nprobe·√N — sublinear — instead of a fixed fraction.
+    ``n_cells=None`` derives ~ceil-sqrt cells from the corpus count
+    (see :func:`adaptive_n_cells`), making candidate volume
+    ~nprobe·√N — sublinear — instead of a fixed fraction.
     """
-    spark = corpus.sparkSession
     asg, cent = ivf_index(corpus, n_cells, iters, seed, id_col, vec_col)
-    cn = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    probe_rows = []
-    for r in q_rows:
-        qv = np.asarray(list(r[1]), dtype=np.float64)
-        nrm = np.linalg.norm(qv) or 1.0
-        sims = cn @ (qv / nrm)
-        for cell in np.argsort(-sims)[:nprobe]:
-            probe_rows.append((r[0], list(r[1]), int(cell)))
+    qs = _query_set(queries, None, query_id_col, vec_col, cent.shape[1])
+    cells = _nearest(qs.mat, cent[None], "cos", nprobe)
     probes = local_rows_df(
-        spark,
-        probe_rows,
-        T.StructType(
-            [
-                T.StructField("_qid", queries.schema[query_id_col].dataType),
-                T.StructField("_qvec", queries.schema[vec_col].dataType),
-                T.StructField("cell", T.IntegerType()),
-            ]
-        ),
+        corpus.sparkSession,
+        [
+            (qid, qs.mat[qi].tolist(), int(c))
+            for qi, qid in enumerate(qs.ids)
+            for c in cells[qi]
+        ],
+        _schema(("_qid", qs.id_type), ("_qvec", qs.vec_type), ("cell", T.IntegerType())),
     )
-    cands = asg.join(F.broadcast(probes), "cell").filter(
-        F.col(id_col) != F.col("_qid")
-    )
-    scored = cands.withColumn(
-        "cos_sim", cosine_arrow(F.col("_qvec"), F.col(vec_col))
-    )
-    w = Window.partitionBy("_qid").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col(id_col),
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rn",
-        )
-    )
-
-
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float | None = 0.95,
-    dim: int = 64,
-    planes_per_band: int | None = None,
-    bands: int | None = None,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantile: float = 0.999,
-    min_pairs: int = 10,
-    family: str = "gaussian",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via banded hyperplane LSH
-    self-bucketing — candidates only share a band signature, then
-    exact cosine verify. No all-pairs join.
-
-    ``family='md5'`` (r10) makes the whole operator engine-portable,
-    the `sim_ann_hyperplane` contract extended to SELF-bucketing:
-    ±1 md5-seeded planes over integer-quantized vectors give exact
-    int64 plane dots (identical buckets → identical candidate
-    PAIRS on any engine), and the adaptive cut runs at GK accuracy
-    10⁶ — lossless below a million candidates, where Spark's
-    ⌈q·n⌉-rank rule coincides with DuckDB's ``quantile_disc``
-    exactly (the `approx_percentiles` identity). Gaussian stays the
-    default plane family.
-
-    ``threshold``: absolute cosine cut (use for real near-dup corpora
-    where duplicates sit at cos ≥ 0.9). ``threshold=None`` switches to
-    an ADAPTIVE cut at the ``quantile`` of the observed candidate
-    similarities, floored so at least ``min_pairs`` candidates survive
-    (cut = min(percentile, min_pairs-th best sim), applied as a
-    broadcast scalar) — by construction the result is non-vacuous at
-    any corpus scale, even on corpora whose nearest pairs are weak
-    (the synthetic test corpus peaks near cos ≈ 0.5; a fixed 0.9 cut
-    returns 0 rows and proves nothing — VERDICT r4 "what's wrong" #2;
-    the bare percentile returned exactly 1 row at sf0.01 — VERDICT r5).
-
-    ``planes_per_band=None`` (the r13 default) derives the band width
-    from the corpus count via :func:`adaptive_planes_per_band` — one
-    bounded count job — so candidate volume stays ~linear in n
-    instead of ~n²/2^p (the fixed p=10 heap death at 200k vectors,
-    VERDICT r12 #1). Pass an int to pin it.
-
-    ``bands=None`` (the r14 default — ADVICE r13): in THRESHOLD mode
-    the band count is derived from (band width, threshold) via
-    :func:`bands_for_threshold`, holding ~0.9 recall for pairs at
-    the caller's documented cut as the derived p widens (the fixed 6
-    bands gave ~38% recall at cos 0.95 once p hit its 24 clamp); in
-    quantile mode it stays 6, certified for the cos ≈ 0.999 near-dup
-    regime (per-plane collision ~0.986 → recall ≥ 0.998 at any p ≤
-    24) and transcribed by the DuckDB oracle twins.
-
-    Plan shape: signatures are one ``mapInPandas`` BLAS pass, exploded
-    to (band, sig) and materialized via :func:`owned_cache` (it feeds
-    both self-join sides; columnar cache keeps lineage + codegen and
-    the per-key pool bounds live RDDs — neither r3's bare-cache leak
-    nor r4's localCheckpoint regression). In adaptive mode the scored
-    pair table is likewise owned-cached: the percentile branch and the
-    filter branch would otherwise each re-run the self-join.
-    """
-    if planes_per_band is None:
-        planes_per_band = adaptive_planes_per_band(corpus.count())
-    if bands is None:
-        bands = (
-            6
-            if threshold is None
-            else bands_for_threshold(planes_per_band, threshold)
-        )
-    if family == "md5":
-        planes = _md5_sign_planes(planes_per_band * bands, dim)
-    elif family == "gaussian":
-        planes = _planes(planes_per_band * bands, dim, seed)
-    else:  # pragma: no cover - authoring guard
-        raise ValueError(f"unknown hyperplane family: {family!r}")
-    sigs = band_signatures(
-        fan_out(corpus), planes,
-        planes_per_band, bands, id_col, vec_col,
-        quantize=family == "md5",
-    )
-    banded = owned_cache(
-        sigs.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            F.posexplode("sigs").alias("band", "sig"),
-        ),
-        f"sim.neardup.banded.{planes_per_band}.{bands}.{seed}.{family}",
-    )
-    # IDS-ONLY bucket self-join (r12, the sf10 lesson — see
-    # semantic_decontaminate): the pair shuffle carries 16-byte id
-    # pairs, never the 64-float vectors; vectors join back per id
-    # AFTER the dedup from the already-cached banded table.
-    a = banded.select(F.col("id").alias("id_a"), "band", "sig")
-    b = banded.select(F.col("id").alias("id_b"), "band", "sig")
-    id_vec = banded.select("id", "vec").dropDuplicates(["id"])
-    pairs = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .join(
-            id_vec.select(
-                F.col("id").alias("id_a"), F.col("vec").alias("vec_a")
-            ),
-            "id_a",
-        )
-        .join(
-            id_vec.select(
-                F.col("id").alias("id_b"), F.col("vec").alias("vec_b")
-            ),
-            "id_b",
-        )
-    )
-    # md5 family scores on the quantized integers too (not just the
-    # buckets): exact int64 dots are summation-order-independent, so
-    # the verify cosine — and therefore the adaptive cut and the kept
-    # SET — is bit-identical on any engine (see
-    # :func:`cosine_arrow_quantized` for the sf1 ulp-plateau failure
-    # this prevents)
-    verify_cos = (
-        cosine_arrow_quantized if family == "md5" else cosine_arrow
-    )
-    scored = pairs.withColumn(
-        "cos_sim", verify_cos(F.col("vec_a"), F.col("vec_b"))
-    )
-    if threshold is None:
-        scored = owned_cache(
-            scored.select("id_a", "id_b", "cos_sim"),
-            f"sim.neardup.scored.{planes_per_band}.{bands}.{seed}.{family}",
-        )
-        # Adaptive cut = min(percentile value, min_pairs-th best sim):
-        # the floor guarantees at least min_pairs survivors whenever
-        # that many candidates exist, so the result is never the
-        # 1-row-at-sf0.01 thin evidence VERDICT r5 flagged. Both cut
-        # jobs run on the owned-cached scored table (tiny).
-        # GK accuracy is DERIVED from the observed candidate count
-        # (r11 — the first sf1 full-registry sweep caught the fixed
-        # 10^6 going lossy at 1.68M candidates: rank error ≈ 2 picked
-        # an adjacent element and shifted the whole cut). Lossless GK
-        # makes the cut the exact ceil(q*n)-rank element (= DuckDB
-        # quantile_disc — the approx_percentiles identity), which is
-        # what lets the md5 family carry a full oracle at ANY checked
-        # scale; the count is one bounded driver scalar on the
-        # already-cached scored table.
-        # CARDINALITY-GATED since r12 (supersedes the r11 2^24 clamp,
-        # which bounded the sketch but both broke the oracle identity
-        # past the clamp AND still let partials hold every candidate
-        # below it — the sf10 sweep OOM'd the sibling derivation on
-        # 20M-row groups): above GK_LOSSLESS_GATE candidates the cut
-        # is the SAME exact ceil(q*n)-rank element computed by sort +
-        # OFFSET (external, spillable), so the identity now holds at
-        # EVERY scale with bounded memory.
-        from trendengine_spark.operators.util import (
-            GK_LOSSLESS_GATE,
-            exact_rank_element,
-        )
-
-        n_cand = scored.count()
-        if n_cand + 1 <= GK_LOSSLESS_GATE:
-            acc = max(1_000_000, n_cand + 1)
-            cut_p = scored.agg(
-                F.percentile_approx("cos_sim", quantile, acc).alias("_thr_p")
-            )
-        else:
-            v = exact_rank_element(scored, "cos_sim", quantile, n=n_cand)
-            cut_p = scored.sparkSession.range(1).select(
-                F.lit(v).cast("double").alias("_thr_p")
-            )
-        cut_n = (
-            scored.orderBy(F.desc("cos_sim"))
-            .limit(min_pairs)
-            .agg(F.min("cos_sim").alias("_thr_n"))
-        )
-        cut = cut_p.join(cut_n).select(
-            F.least("_thr_p", "_thr_n").alias("_thr")
-        )
-        scored = scored.join(F.broadcast(cut)).filter(
-            F.col("cos_sim") >= F.col("_thr")
-        )
-    else:
-        scored = scored.filter(F.col("cos_sim") >= threshold)
-    return scored.select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+    cands = asg.join(F.broadcast(probes), "cell").filter(F.col(id_col) != F.col("_qid"))
+    scored = cands.withColumn("cos_sim", cosine_arrow(F.col("_qvec"), F.col(vec_col)))
+    return _ranked(scored, k, "cos_sim", id_col, query_id_col)
 
 
 def l2_normalize(vec: Column) -> Column:
@@ -1224,108 +1352,12 @@ def pq_train_codebooks(
     """Train product-quantization codebooks: split the D-dim space
     into ``m_subspaces`` contiguous blocks and k-means each block to
     ``k`` centroids (Jégou et al. 2011, "Product Quantization for
-    Nearest Neighbor Search" — public method). Returns codebooks
-    shaped (m, k, D/m).
-
-    Distributed shape mirrors :func:`ivf_index`, generalized per
-    subspace in ONE pass each step: assignment is a single
-    ``mapInPandas`` BLAS sweep emitting (id, sub, cell) for ALL
-    subspaces; the update is one hash aggregate keyed by
-    (sub, cell, pos) — cardinality m × k × D/m, independent of corpus
-    size. Init is the deterministic seeded sample pattern (smallest
-    ``xxhash64(id, seed)`` rows), so training is reproducible.
-
-    r14: training runs on a bounded deterministic sample (the
-    ``train_cap`` smallest ``xxhash64(id, seed)`` rows — a superset
-    of the seed rows, so corpora under the cap are bit-identical to
-    the pre-r14 path). Codebooks are a compression model: fitting
-    them on a capped sample is the standard PQ practice (Jégou 2011
-    trains on a subset) and bounds training cost at any corpus size;
-    encoding still sweeps the full corpus once, by design.
-    """
-    c = owned_cache(
-        fan_out(corpus).select(id_col, vec_col),
-        f"sim.pq.corpus.{m_subspaces}.{k}.{seed}",
-    )
-    if c.count() > train_cap:
-        c = owned_cache(
-            fan_out(
-                c.withColumn(
-                    "_h", F.xxhash64(F.col(id_col), F.lit(seed))
-                )
-                .orderBy("_h")
-                .limit(train_cap)
-                .drop("_h")
-            ),
-            f"sim.pq.train.{m_subspaces}.{k}.{seed}.{train_cap}",
-        )
-    seed_rows = (
-        c.withColumn("_h", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("_h")
-        .limit(k)
-        .select(vec_col)
-        .collect()
-    )
-    init = np.asarray([list(r[0]) for r in seed_rows], dtype=np.float64)
-    dim = init.shape[1]
-    if dim % m_subspaces:
-        raise ValueError(f"dim {dim} not divisible by m={m_subspaces}")
-    d_sub = dim // m_subspaces
-    # (m, k, d_sub): subspace s starts from the seed sample's block s
-    books = np.stack([init[:, s * d_sub : (s + 1) * d_sub] for s in range(m_subspaces)])
-
-    # r14 session 6: the assign pass emits only the SUBSPACE BLOCK per
-    # (row, sub) — the old shape carried the FULL vector per (row, sub)
-    # (an m× blow-up) and then posexplode'd all m·D positions only to
-    # filter back to the block's d_sub (guide §2.3 "project before the
-    # exchange"). Values are unchanged: the block floats reach the
-    # decimal(28,12) mean through the same double widening either way.
-    asg_schema = T.StructType(
-        [
-            T.StructField("sub", T.IntegerType()),
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("block", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    for _ in range(iters):
-        bks = books  # capture current epoch for the closure
-
-        def assign(batches, bks=bks):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-                out_sub, out_cell, out_block = [], [], []
-                for s in range(bks.shape[0]):
-                    block = mat[:, s * d_sub : (s + 1) * d_sub]
-                    # squared-L2 assignment: argmin ||x - c||² =
-                    # argmax (2x·c - ||c||²)
-                    scores = 2.0 * block @ bks[s].T - (bks[s] ** 2).sum(axis=1)
-                    cells = np.argmax(scores, axis=1)
-                    out_sub.extend([s] * len(pdf))
-                    out_cell.extend(cells.astype("int32"))
-                    out_block.extend(list(block))
-                yield pd.DataFrame(
-                    {"sub": out_sub, "cell": out_cell, "block": out_block}
-                )
-
-        comp = c.mapInPandas(assign, asg_schema).select(
-            "sub", "cell", F.posexplode("block").alias("p", "val")
-        )
-        means = (
-            comp.groupBy("sub", "cell", "p")
-            .agg(
-                (F.sum(F.col("val").cast("decimal(28,12)")) / F.count(F.lit(1)))
-                .cast("double")
-                .alias("m")
-            )
-            .collect()
-        )
-        new = books.copy()  # empty cells keep their centroid
-        for r in means:
-            new[r["sub"], r["cell"], r["p"]] = r["m"]
-        books = new
-    return books
+    Nearest Neighbor Search" — public method) with :func:`_lloyd`'s
+    L2 assignment. Returns codebooks shaped (m, k, D/m)."""
+    return _lloyd(
+        corpus, k, iters, seed, id_col, vec_col, train_cap,
+        f"sim.pq.{m_subspaces}.{k}.{seed}", "l2", m=m_subspaces,
+    )[1]
 
 
 def pq_encode(
@@ -1337,31 +1369,14 @@ def pq_encode(
     """Encode each vector as m small codes (one per subspace): the
     4-bit/8-bit compressed representation that makes billion-vector
     indexes RAM-resident. One broadcast of the (m, k, d_sub) books +
-    one ``mapInPandas`` pass; output (id, codes ARRAY<INT>)."""
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast(books)
+    one Arrow pass; output (id, codes ARRAY<INT>)."""
+    return _encode(fan_out(corpus), books, "l2", vec_col, [id_col])
+
+
+def _adc_tables(qs: _Queries, books: np.ndarray) -> np.ndarray:
+    """(Q, m, k) ADC lookup tables: query block s · centroid."""
     m, _, d_sub = books.shape
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def enc(batches):
-        bks = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                block = mat[:, s * d_sub : (s + 1) * d_sub]
-                scores = 2.0 * block @ bks[s].T - (bks[s] ** 2).sum(axis=1)
-                codes[:, s] = np.argmax(scores, axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
-
-    return fan_out(corpus).select(id_col, vec_col).mapInPandas(enc, out_schema)
+    return np.einsum("qsd,skd->qsk", qs.mat.reshape(len(qs.ids), m, d_sub), books)
 
 
 def pq_topk(
@@ -1381,53 +1396,35 @@ def pq_topk(
     INNER PRODUCT; run over L2-normalized vectors for cosine. The
     per-batch partial top-k + global window mirrors
     :func:`cosine_topk`, so window input stays ≤ k·Q·partitions."""
-    sc = codes.sparkSession.sparkContext
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
     m, _, d_sub = books.shape
-    # (Q, m, k_codes) lookup tables: query block s · centroid
-    tables = np.einsum("qsd,skd->qsk", q_mat.reshape(len(q_ids), m, d_sub), books)
-    bc = sc.broadcast((q_ids, tables))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("_qid", queries.schema[query_id_col].dataType),
-            T.StructField(id_col, codes.schema[id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
+    qs = _query_set(queries, None, query_id_col, vec_col, m * d_sub)
+    bc = codes.sparkSession.sparkContext.broadcast((qs.ids, _adc_tables(qs, books)))
+    schema = _schema(
+        ("_qid", qs.id_type),
+        (id_col, codes.schema[id_col].dataType),
+        ("score", T.DoubleType()),
     )
 
     def score(batches):
-        ids_b, tabs = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        q_ids, tabs = bc.value
+        subs = np.arange(m)
+        for b in batches:
+            if b.num_rows == 0 or not q_ids:
                 continue
-            cd = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (N, m)
-            ids = pdf[id_col].to_numpy()
-            subs = np.arange(m)
-            out_q, out_i, out_s = [], [], []
-            for qi, qid in enumerate(ids_b):
-                scores = tabs[qi][subs, cd].sum(axis=1)  # (N,)
-                cand = np.flatnonzero(ids != qid)
-                top = cand[np.argsort(-scores[cand])[:k]]
-                out_q.extend([qid] * len(top))
-                out_i.extend(ids[top])
-                out_s.extend(scores[top])
-            yield pd.DataFrame({"_qid": out_q, id_col: out_i, "score": out_s})
+            cd = _vectors(b, "codes", np.int64)  # (N, m)
+            ids = b.column(id_col).to_numpy(zero_copy_only=False)
+            scores = np.stack([tab[subs, cd].sum(axis=1) for tab in tabs])
+            parts = {"_qid": [], id_col: [], "score": []}
+            for qi, qid, top in _local_topk(q_ids, ids, scores, k):
+                parts["_qid"].append(np.full(top.size, qid))
+                parts[id_col].append(ids[top])
+                parts["score"].append(scores[qi][top])
+            cols = _collect(parts)
+            if cols is not None:
+                yield _arrow(schema, cols)
 
-    scored = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("_qid").orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            id_col,
-            F.round("score", 4).alias("score"),
-            F.col("rn").cast("int").alias("rn"),
-        )
-    )
+    scored = codes.select(id_col, "codes").mapInArrow(score, schema)
+    return _ranked(scored, k, "score", id_col, query_id_col)
 
 
 # --------------------------------------------------------------- IVFPQ
@@ -1447,80 +1444,108 @@ def ivfpq_index(
     which is far lower-variance than x and quantizes better at the
     same bit budget).
 
-    Build: (1) :func:`ivf_index` Lloyd pass → (id, vec, cell) +
-    centroids; (2) one ``mapInPandas`` residual pass (centroids
-    broadcast, no shuffle); (3) :func:`pq_train_codebooks` on the
-    residual frame; (4) one encode pass carrying ``cell`` through, so
-    the stored index row is (id, cell, m codes) — 20-40 bytes per
-    vector regardless of dimension. Everything distributed except the
-    bounded centroid/codebook state (n_cells·D + m·k·D/m driver-side
-    floats).
+    Build: (1) :func:`ivf_index` → (id, vec, cell) + centroids; (2) one
+    Arrow residual pass (centroids broadcast, no shuffle); (3)
+    :func:`pq_train_codebooks` on the residual frame; (4) one encode
+    pass carrying ``cell`` through, so the stored index row is (id,
+    cell, m codes) — 20-40 bytes per vector regardless of dimension.
 
     Returns (codes_df(id, cell, codes), centroids, books)."""
     asg, centroids = ivf_index(
         corpus, n_cells=n_cells, iters=iters, seed=seed,
         id_col=id_col, vec_col=vec_col,
     )
-    sc = corpus.sparkSession.sparkContext
-    bc_cent = sc.broadcast(centroids)
-    res_schema = T.StructType(
-        [
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("cell", T.IntegerType()),
-            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-        ]
+    bc = corpus.sparkSession.sparkContext.broadcast(centroids)
+    res_schema = _schema(
+        (id_col, corpus.schema[id_col].dataType),
+        ("cell", T.IntegerType()),
+        (vec_col, T.ArrayType(T.DoubleType())),
     )
 
     def residual(batches):
-        cent = bc_cent.value
-        for pdf in batches:
-            if pdf.empty:
+        cent = bc.value
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            cells = pdf["cell"].to_numpy()
-            res = mat - cent[cells]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "cell": cells, vec_col: list(res)}
-            )
+            cells = b.column("cell").to_numpy(zero_copy_only=False)
+            res = _vectors(b, vec_col) - cent[cells]
+            cols = {id_col: b.column(id_col), "cell": b.column("cell"), vec_col: res}
+            yield _arrow(res_schema, cols)
 
     residuals = owned_cache(
-        asg.mapInPandas(residual, res_schema),
+        asg.mapInArrow(residual, res_schema),
         f"sim.ivfpq.res.{n_cells}.{m_subspaces}.{k_codes}.{seed}",
     )
     books = pq_train_codebooks(
         residuals, m_subspaces=m_subspaces, k=k_codes, iters=iters,
         seed=seed, id_col=id_col, vec_col=vec_col,
     )
-    bc_books = sc.broadcast(books)
-    m, _, d_sub = books.shape
-    code_schema = T.StructType(
+    return _encode(residuals, books, "l2", vec_col, [id_col, "cell"]), centroids, books
+
+
+def _ivfpq_search(
+    codes: DataFrame,
+    centroids: np.ndarray,
+    books: np.ndarray,
+    qs: _Queries,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """ADC top-k over the probed cells of an IVFPQ code table."""
+    cells = _nearest(qs.mat, centroids[None], "cos", nprobe)
+    cell_dot = qs.mat @ centroids.T  # (Q, C) exact q·c for scoring
+    probes = local_rows_df(
+        codes.sparkSession,
         [
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
+            (qid, int(c), float(cell_dot[qi, c]), qi)
+            for qi, qid in enumerate(qs.ids)
+            for c in cells[qi]
+        ],
+        _schema(
+            ("_qid", qs.id_type),
+            ("cell", T.IntegerType()),
+            ("_qc", T.DoubleType()),
+            ("_qidx", T.IntegerType()),
+        ),
     )
+    bc = codes.sparkSession.sparkContext.broadcast(_adc_tables(qs, books))
+    schema = _schema(
+        ("_qid", qs.id_type),
+        (id_col, codes.schema[id_col].dataType),
+        ("score", T.DoubleType()),
+    )
+    m = books.shape[0]
 
-    def enc(batches):
-        bks = bc_books.value
-        for pdf in batches:
-            if pdf.empty:
+    def score(batches):
+        tabs = bc.value
+        subs = np.arange(m)
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            mat = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                block = mat[:, s * d_sub : (s + 1) * d_sub]
-                scores = 2.0 * block @ bks[s].T - (bks[s] ** 2).sum(axis=1)
-                codes[:, s] = np.argmax(scores, axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cell": pdf["cell"].to_numpy(),
-                    "codes": list(codes),
-                }
-            )
+            qidx = b.column("_qidx").to_numpy(zero_copy_only=False)
+            qids = b.column("_qid").to_numpy(zero_copy_only=False)
+            ids_all = b.column(id_col).to_numpy(zero_copy_only=False)
+            qc = b.column("_qc").to_numpy(zero_copy_only=False)
+            cd_all = _vectors(b, "codes", np.int64)
+            parts = {"_qid": [], id_col: [], "score": []}
+            for qi in np.unique(qidx):
+                rows = np.flatnonzero(qidx == qi)
+                ids = ids_all[rows]
+                s = tabs[qi][subs, cd_all[rows]].sum(axis=1) + qc[rows]
+                for _, qid, top in _local_topk([qids[rows[0]]], ids, s[None], k):
+                    parts["_qid"].append(np.full(top.size, qid))
+                    parts[id_col].append(ids[top])
+                    parts["score"].append(s[top])
+            cols = _collect(parts)
+            if cols is not None:
+                yield _arrow(schema, cols)
 
-    return residuals.mapInPandas(enc, code_schema), centroids, books
+    cands = codes.join(F.broadcast(probes), "cell").select(
+        id_col, "codes", "_qid", "_qc", "_qidx"
+    )
+    return _ranked(cands.mapInArrow(score, schema), k, "score", id_col, query_id_col)
 
 
 def ivfpq_topk(
@@ -1543,95 +1568,8 @@ def ivfpq_topk(
     probe fan-out (the :func:`ivf_topk` pruning shape: N·nprobe/
     n_cells rows scored, never N·Q); per-batch partial top-k caps the
     final window at k·Q·partitions rows."""
-    sc = codes.sparkSession.sparkContext
-    spark = codes.sparkSession
-    q_rows = queries.select(query_id_col, vec_col).collect()
-    if not q_rows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, score double, rn int"
-        )
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    m, _, d_sub = books.shape
-    tables = np.einsum(
-        "qsd,skd->qsk", q_mat.reshape(len(q_ids), m, d_sub), books
-    )
-    # probe fan-out: nprobe max-cosine cells per query + the exact
-    # q·centroid scalar for the score decomposition
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    qn = q_mat / np.maximum(
-        np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12
-    )
-    cell_cos = qn @ cn.T  # (Q, C) for probing
-    cell_dot = q_mat @ centroids.T  # (Q, C) exact q·c for scoring
-    probe_rows = []
-    for qi, qid in enumerate(q_ids):
-        for cell in np.argsort(-cell_cos[qi])[:nprobe]:
-            probe_rows.append(
-                (qid, int(cell), float(cell_dot[qi, cell]), qi)
-            )
-    if not all(isinstance(q, (int, np.integer)) for q in q_ids):
-        raise ValueError(
-            "ivfpq_topk requires integer query ids (the probe fan-out "
-            "frame is typed long)"
-        )
-    probes = F.broadcast(
-        local_rows_df(
-            spark, probe_rows, "_qid long, cell int, _qc double, _qidx int"
-        )
-    )
-    cands = codes.join(probes, "cell")
-    bc = sc.broadcast(tables)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("_qid", T.LongType()),
-            T.StructField(id_col, codes.schema[id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        tabs = bc.value
-        subs = np.arange(m)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for qidx, grp in pdf.groupby("_qidx"):
-                cd = np.asarray(list(grp["codes"]), dtype=np.int64)
-                s = tabs[qidx][subs, cd].sum(axis=1) + grp["_qc"].to_numpy()
-                ids = grp[id_col].to_numpy()
-                qid = grp["_qid"].iloc[0]
-                cand = np.flatnonzero(ids != qid)
-                # tie-break by id ASC to match the final window's
-                # (score DESC, id ASC) order — argsort(-s) alone breaks
-                # exact-score ties arbitrarily, so a tied candidate the
-                # global order keeps could be pruned per-partition,
-                # making results partitioning-dependent (ADVICE r7 fix)
-                top = cand[np.lexsort((ids[cand], -s[cand]))[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {"_qid": qid, id_col: ids[top], "score": s[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out)
-
-    scored = cands.mapInPandas(score, out_schema)
-    w = Window.partitionBy("_qid").orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            id_col,
-            F.round("score", 4).alias("score"),
-            F.col("rn").cast("int").alias("rn"),
-        )
-    )
+    qs = _query_set(queries, None, query_id_col, vec_col, centroids.shape[1])
+    return _ivfpq_search(codes, centroids, books, qs, k, nprobe, id_col, query_id_col)
 
 
 def ivfpq_write_index(
@@ -1651,46 +1589,31 @@ def ivfpq_write_index(
     call, which is a demo shape, not a production one).
 
     Layout: ``path/codes`` holds (id, codes) PARTITIONED BY the IVF
-    ``cell`` — so a probe of ``nprobe`` cells is a STORAGE-level
-    partition prune (only those directories are ever opened, the
-    ~20-40 B/vector code table is never full-scanned); ``path/
-    centroids`` and ``path/books`` hold the bounded model state
-    (n_cells·D + m·k·D/m doubles) as one-file tables."""
+    ``cell`` through :func:`~trendengine_spark.sinks.write_parquet`,
+    which co-locates each cell first — exactly one file per cell
+    directory — so a probe of ``nprobe`` cells is a STORAGE-level
+    partition prune; ``path/centroids`` and ``path/books`` hold the
+    bounded model state (n_cells·D + m·k·D/m doubles) as one-file
+    tables."""
+    from trendengine_spark.sinks import write_parquet
+
     codes, centroids, books = ivfpq_index(
         corpus, n_cells=n_cells, m_subspaces=m_subspaces, k_codes=k_codes,
         iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
     )
     spark = corpus.sparkSession
-    # co-locate each cell before the partitioned write: without the
-    # repartition every write task emits a file into every cell
-    # directory it touches — ~n_cells × tasks tiny files (measured:
-    # 23,936 files / 197 MB at 600k vectors, 775 derived cells — the
-    # sf30 probe), which at 100M vectors and √N cells is millions of
-    # parquet footers per index. One hash shuffle of the thin
-    # (id, cell, codes) table makes it exactly one file per cell.
-    codes.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path + "/codes")
-    # r14 session 6: the bounded model tables are local rows — build
-    # them as ONE source partition. createDataFrame parallelizes local
-    # rows across defaultParallelism Python partitions, and a
-    # coalesce(1) then evaluates all of them SEQUENTIALLY inside one
-    # task (one Python-worker roundtrip per parent partition —
-    # measured 8-12 s per 16-row write); parallelize(rows, 1) is one
-    # roundtrip (~0.3 s).
-    cent_rows = [(int(i), [float(x) for x in centroids[i]]) for i in range(len(centroids))]
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(cent_rows, 1),
+    write_parquet(codes, path + "/codes", partition_by=["cell"])
+    # the bounded model tables are local rows: one source partition
+    # (see local_rows_df), one file each
+    local_rows_df(
+        spark,
+        [(i, c.tolist()) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
     ).write.mode("overwrite").parquet(path + "/centroids")
     m, k, _ = books.shape
-    book_rows = [
-        (int(s), int(c), [float(x) for x in books[s, c]])
-        for s in range(m)
-        for c in range(k)
-    ]
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(book_rows, 1),
+    local_rows_df(
+        spark,
+        [(s, c, books[s, c].tolist()) for s in range(m) for c in range(k)],
         "subspace int, code int, vec array<double>",
     ).write.mode("overwrite").parquet(path + "/books")
 
@@ -1712,317 +1635,22 @@ def ivfpq_query_index(
     applied as an explicit ``cell IN (...)`` filter BEFORE the scan —
     static partition pruning, visible as ``PartitionFilters`` in the
     plan: at a billion vectors the query touches nprobe·Q/n_cells of
-    the storage and nothing else. Scoring reuses :func:`ivfpq_topk`
-    (ADC gathers, per-batch partial top-k, window finish)."""
-    cent_rows = spark.read.parquet(path + "/centroids").collect()  # <= n_cells
-    n_cells = len(cent_rows)
-    dim = len(cent_rows[0]["centroid"])
-    centroids = np.zeros((n_cells, dim), dtype=np.float64)
-    for r in cent_rows:
-        centroids[r["cell"]] = r["centroid"]
-    book_rows = spark.read.parquet(path + "/books").collect()  # <= m*k
-    m = 1 + max(r["subspace"] for r in book_rows)
-    kk = 1 + max(r["code"] for r in book_rows)
-    d_sub = len(book_rows[0]["vec"])
-    books = np.zeros((m, kk, d_sub), dtype=np.float64)
-    for r in book_rows:
-        books[r["subspace"], r["code"]] = r["vec"]
-
-    q_rows = queries.select(query_id_col, vec_col).collect()  # bounded query set
-    if q_rows:
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        cn = centroids / np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-        )
-        qn = q_mat / np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-        cell_cos = qn @ cn.T
-        probe_cells = sorted(
-            {int(c) for qi in range(len(q_rows)) for c in np.argsort(-cell_cos[qi])[:nprobe]}
-        )
-    else:
-        probe_cells = []
+    the storage and nothing else. Scoring is :func:`ivfpq_topk`'s."""
+    cent = spark.read.parquet(path + "/centroids").toArrow()
+    centroids = np.zeros((cent.num_rows, 0))
+    if cent.num_rows:
+        vecs = _mat_from_list_col(cent["centroid"], None, np.float64, "centroid")
+        centroids = np.zeros_like(vecs)
+        centroids[cent["cell"].to_numpy()] = vecs
+    bk = spark.read.parquet(path + "/books").toArrow()
+    sub, code = bk["subspace"].to_numpy(), bk["code"].to_numpy()
+    vecs = _mat_from_list_col(bk["vec"], None, np.float64, "vec")
+    books = np.zeros((sub.max() + 1, code.max() + 1, vecs.shape[1]))
+    books[sub, code] = vecs
+    qs = _query_set(queries, None, query_id_col, vec_col, centroids.shape[1])
+    cells = _nearest(qs.mat, centroids[None], "cos", nprobe)
+    probe_cells = sorted(set(cells.ravel().tolist()))
     codes = spark.read.parquet(path + "/codes").filter(
         F.col("cell").isin(probe_cells) if probe_cells else F.lit(False)
     )
-    return ivfpq_topk(
-        codes, centroids, books, queries, k=k, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-    )
-
-
-def semantic_decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    threshold: float | None = 0.95,
-    planes_per_band: int | None = None,
-    bands: int | None = None,
-    seed: int = 7,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    drop_quantile: float = 0.99,
-    family: str = "gaussian",
-) -> tuple[DataFrame, DataFrame]:
-    """Semantic (embedding-level) decontamination: remove TRAINING
-    vectors whose embedding is near-duplicate to any EVALUATION
-    vector — the representation-space complement to n-gram
-    decontamination (``pipeline_decontaminate_ngrams`` catches
-    verbatim leakage; paraphrased or re-formatted benchmark items
-    share an embedding neighborhood, not n-grams).
-
-    Same banded-hyperplane LSH machinery as
-    :func:`embedding_near_dup_pairs`, crossed between two corpora:
-    both sides signature with the SAME plane family (shared seed —
-    without it bucket keys are incomparable), candidates are bucket
-    joins on (band, sig) only — never |train| × |eval| — and exact
-    cosine verifies each candidate. ``threshold=None`` switches to an
-    adaptive cut at ``drop_quantile`` of candidate similarities
-    (non-vacuous on corpora with no true leakage). The eval side is
-    typically tiny next to train, so its banded table broadcasts.
-
-    Returns ``(matches, survivors)``: matches = (train_id, eval_id,
-    cos_sim) above the cut; survivors = train rows minus contaminated
-    ids (anti-join).
-
-    ``family='md5'`` (r12) extends the r10 portability contract to
-    the CROSS-corpus case: both sides signature with the md5-seeded
-    ±1 planes over integer-quantized vectors (bucket assignment =
-    exact int64 arithmetic), the verify cosine scores the quantized
-    integers (order-independent — the sf1 ulp-plateau lesson), and
-    the adaptive cut runs at GK accuracy derived from the candidate
-    count, clamped at 2²⁴ (lossless ⌈q·n⌉-rank = DuckDB
-    quantile_disc below the clamp) — which together is what lets
-    `pipeline_semantic_decontaminate` carry a full DuckDB oracle.
-    Gaussian planes + full-precision cosine stay the default.
-
-    ``planes_per_band=None`` (the r13 default) derives the band
-    width from the TRAIN corpus count (the big side — the eval set
-    broadcasts regardless) via :func:`adaptive_planes_per_band`, so
-    cross-corpus candidate volume stays ~linear in |train| at any
-    scale. Pass an int to pin it. ``bands=None`` (r14 — ADVICE r13):
-    threshold mode derives the band count from (p, threshold) via
-    :func:`bands_for_threshold` so recall at the documented cut
-    holds as p widens; quantile mode keeps the oracle-transcribed 6.
-    """
-    if planes_per_band is None:
-        planes_per_band = adaptive_planes_per_band(train.count())
-    if bands is None:
-        bands = (
-            6
-            if threshold is None
-            else bands_for_threshold(planes_per_band, threshold)
-        )
-    if family == "md5":
-        planes = _md5_sign_planes(planes_per_band * bands, dim)
-    elif family == "gaussian":
-        planes = _planes(planes_per_band * bands, dim, seed)
-    else:  # pragma: no cover - authoring guard
-        raise ValueError(f"unknown hyperplane family: {family!r}")
-    quantize = family == "md5"
-    t_sig = band_signatures(
-        fan_out(train), planes, planes_per_band, bands, id_col, vec_col,
-        quantize=quantize,
-    )
-    e_sig = band_signatures(
-        eval_df, planes, planes_per_band, bands, id_col, vec_col,
-        quantize=quantize,
-    )
-    # IDS-ONLY candidate join (r12, the sf10 lesson): carrying both
-    # 64-float vectors through the bucket join put ~15 GB of vector
-    # payload into the dedup shuffle at 200k vectors (the JVM died);
-    # candidates are now 16-byte id pairs and the vectors join back
-    # per id AFTER dedup — the "ids only across the shuffle" posture
-    # semantic_dedup already documents, applied cross-corpus.
-    t_band = t_sig.select(
-        F.col(id_col).alias("train_id"),
-        F.posexplode("sigs").alias("band", "sig"),
-    )
-    e_band = e_sig.select(
-        F.col(id_col).alias("eval_id"),
-        F.posexplode("sigs").alias("band", "sig"),
-    )
-    cand = (
-        t_band.join(F.broadcast(e_band), ["band", "sig"])
-        .select("train_id", "eval_id")
-        .dropDuplicates(["train_id", "eval_id"])
-    )
-    t_vec = train.select(
-        F.col(id_col).alias("train_id"), F.col(vec_col).alias("vec_t")
-    )
-    e_vec = eval_df.select(
-        F.col(id_col).alias("eval_id"), F.col(vec_col).alias("vec_e")
-    )
-    cand = cand.join(t_vec, "train_id").join(F.broadcast(e_vec), "eval_id")
-    verify_cos = (
-        cosine_arrow_quantized if family == "md5" else cosine_arrow
-    )
-    scored = cand.withColumn(
-        "cos_sim", verify_cos(F.col("vec_t"), F.col("vec_e"))
-    ).select("train_id", "eval_id", "cos_sim")
-    # both returned frames (matches AND the survivors anti-join) read
-    # scored — materialize once in EITHER mode, or the LSH join +
-    # verify re-executes per consumer
-    scored = owned_cache(
-        scored, f"sim.decon.{planes_per_band}.{bands}.{seed}.{family}"
-    )
-    if threshold is None:
-        if family == "md5":
-            # exact ⌈q·n⌉-rank cut (= DuckDB quantile_disc): GK
-            # accuracy derived from the candidate count below the
-            # gate, sort+OFFSET exact rank above it — the r12
-            # embedding_near_dup_pairs discipline (memory-bounded,
-            # identity holds at every scale)
-            from trendengine_spark.operators.util import (
-                GK_LOSSLESS_GATE,
-                exact_rank_element,
-            )
-
-            n_cand = scored.count()
-            acc = max(1_000_000, n_cand + 1)
-            if n_cand + 1 > GK_LOSSLESS_GATE:
-                acc = None  # dispatch to the exact sort path below
-        else:
-            acc = 100_000
-        if acc is None:
-            q = exact_rank_element(scored, "cos_sim", drop_quantile, n=n_cand)
-        else:
-            q = scored.agg(
-                F.percentile_approx("cos_sim", drop_quantile, acc).alias("c")
-            ).collect()[0]["c"]
-        cut = float(q) if q is not None else 2.0
-    else:
-        cut = threshold
-    matches = scored.filter(F.col("cos_sim") >= cut)
-    contaminated = matches.select(
-        F.col("train_id").alias(id_col)
-    ).distinct()
-    survivors = train.join(contaminated, id_col, "left_anti")
-    return matches, survivors
-
-
-def two_stage_rerank(
-    corpus: DataFrame,
-    k: int = 10,
-    budget: int = 50,
-    queries: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    queries_local: tuple[list, np.ndarray] | None = None,
-) -> DataFrame:
-    """Two-stage retrieval (r9): cheap 1-bit Hamming stage-1 candidate
-    generation → exact-cosine stage-2 rerank — the production
-    composition that turns the LOW standalone recall of binary codes
-    (0.27@10 on this corpus, SCALE.md) into high end recall at a
-    fraction of brute-force cost. Stage 1 keeps the top-``budget``
-    per query by (hamming, id); stage 2 re-scores only candidate
-    rows with exact double cosine and returns the top-k.
-
-    r14 execution shape (guide §4, one corpus pass): both stages run
-    inside ONE ``mapInPandas`` over the corpus — each batch packs
-    sign codes, ranks Hamming against the closure-held query matrix,
-    and computes the exact einsum cosine for its local top-``budget``
-    candidates only; a global window over the emitted union
-    (≤ budget·Q rows per batch) then selects the true global
-    top-``budget`` by (hamming, id) — an exact decomposition: every
-    global candidate survives its batch-local top-``budget`` under
-    the same total ordering, and rows outside the global
-    top-``budget`` rank past it in the union because all rows that
-    beat them are present. This replaces the previous two-scan plan
-    (JVM pack + code BNLJ + window + id-join back to the vectors +
-    pair cosine): ONE float-column scan instead of two, no pair
-    join, and only candidate rows cross the ranking shuffle. With a
-    PRECOMPUTED code column a code-only stage-1 scan would read 64×
-    fewer bytes — but this operator derives codes from the float
-    column, so the single pass strictly dominates. The in-batch
-    cosine (einsum over the gathered candidate rows) is bit-identical
-    to the pair path's :func:`cosine_arrow` — same per-row
-    multiply-add order.
-
-    ``queries`` defaults to corpus rows with ``id < 10`` (the
-    registry's standing query-set convention; pass ``queries_local``
-    from :func:`load_query_vectors` to skip the bounded collect);
-    self-matches are excluded in stage 1 ONLY in corpus-derived mode
-    (``queries is None``) — an external ``queries`` frame has its
-    own id space, so a corpus doc whose id collides with a query_id
-    is a legitimate candidate, not a self-match (ADVICE r9). The
-    query side is bounded-small by contract and is collected once.
-    """
-    sc = corpus.sparkSession.sparkContext
-    exclude_self = queries is None
-    if queries_local is not None:
-        q_ids, q_mat = queries_local
-        qid_type: T.DataType = T.LongType()
-    elif queries is None:
-        q_rows = corpus.filter(F.col(id_col) < 10).select(
-            id_col, vec_col
-        ).collect()
-        q_ids = [r[0] for r in q_rows]
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        qid_type = corpus.schema[id_col].dataType
-    else:
-        q_rows = queries.select("query_id", vec_col).collect()
-        q_ids = [r[0] for r in q_rows]
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        qid_type = queries.schema["query_id"].dataType
-    bc = sc.broadcast((list(q_ids), q_mat))
-
-    id_field = corpus.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type),
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("hamming", T.IntegerType()),
-            T.StructField("c", T.DoubleType()),
-        ]
-    )
-
-    def score_batches(batches):
-        ids_b, qm = bc.value
-        q_codes = _pack_sign_codes(qm)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            codes = _pack_sign_codes(m)
-            out = {"query_id": [], id_col: [], "hamming": [], "c": []}
-            for qi, qid in enumerate(ids_b):
-                hm = _popcount64(codes ^ q_codes[qi])
-                if exclude_self:
-                    cand = np.flatnonzero(ids != qid)
-                else:
-                    cand = np.arange(ids.size)
-                if cand.size == 0:
-                    continue
-                top_h = cand[np.lexsort((ids[cand], hm[cand]))][:budget]
-                sub = m[top_h]
-                qv = np.broadcast_to(qm[qi], sub.shape)
-                dots = np.einsum("ij,ij->i", sub, qv)
-                c = dots / (
-                    np.linalg.norm(sub, axis=1) * np.linalg.norm(qv, axis=1)
-                )
-                out["query_id"].extend([qid] * top_h.size)
-                out[id_col].extend(ids[top_h].tolist())
-                out["hamming"].extend(hm[top_h].tolist())
-                out["c"].extend(c.tolist())
-            yield pd.DataFrame(out)
-
-    scored_local = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        score_batches, schema=out_schema
-    )
-    w1 = Window.partitionBy("query_id").orderBy("hamming", id_col)
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("c"), id_col)
-    return (
-        scored_local.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= budget)
-        .withColumn("rn", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            id_col,
-            F.round("c", 4).alias("cos_sim"),
-            "rn",
-        )
-    )
+    return _ivfpq_search(codes, centroids, books, qs, k, nprobe, id_col, query_id_col)

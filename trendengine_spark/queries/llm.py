@@ -535,7 +535,7 @@ def sim_range_search(spark, sf_dir):
     ≥ 0.3 to each of 10 query vectors — the similarity-bounded twin
     of sim_cosine_topk's count-bounded search, and the primitive
     behind embedding-level near-dup blocking. Spark plan: broadcast
-    query matrix × one ``mapInPandas`` BLAS pass over the corpus,
+    query matrix × one ``mapInArrow`` BLAS pass over the corpus,
     emit-if-above inside the batch — NO window, NO shuffle (the
     map-only plan is the whole point of radius search at scale).
     τ=0.3 is calibrated non-vacuous on the synthetic corpus at every
@@ -627,7 +627,7 @@ def sim_ann_hyperplane(spark, sf_dir):
     transcribes BOTH derivations: the `par` CTE recomputes p by the
     same integer shift-compare from count(*), and `bnd` mirrors the
     integer table as a CASE — no baked knob values, so one SQL text
-    is hash-green at every sf. Corpus signatures in one mapInPandas
+    is hash-green at every sf. Corpus signatures in one mapInArrow
     BLAS pass, candidates from ONE broadcast (band, sig) equi-join,
     exact cosine re-rank only inside the candidate set.
 
@@ -656,9 +656,7 @@ def sim_ann_hyperplane(spark, sf_dir):
 # op), probing and the verify cosine as fixed-expression doubles over
 # exact integer dots. BOTH engines run the same program (one shared
 # template, dialect differing only in the position-explode spelling),
-# so every bucket, candidate set and score is bit-identical. The
-# float-BLAS ivf_index/ivf_topk operators stay the production path
-# with their own recall/determinism tests.
+# so every bucket, candidate set and score is bit-identical.
 _IVF_NPROBE = 6
 _IVF_K = 5
 
@@ -1677,8 +1675,7 @@ def pipeline_decontaminate_ngrams(spark, sf_dir):
 # query-block·centroid tables summed per code, and a quantized-cosine
 # rerank of the 4k candidate pool. One shared template (dialect:
 # position explode, integer division, DuckDB MATERIALIZED on the
-# chained books — the BPE inlining lesson). The float-BLAS
-# pq_train/pq_encode/pq_topk operators stay the production path.
+# chained books — the BPE inlining lesson).
 _PQ_SUBS = 32
 _PQ_CELLS = 32
 _PQ_K = 5

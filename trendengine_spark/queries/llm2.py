@@ -761,8 +761,7 @@ def multimodal_gif_animation(spark, sf_dir):
 # q·x ≈ q·c(cell) + Σ_sub table[code] ENTIRELY in exact int64 — the
 # ranking never touches a float; only the probing cosine and the
 # final score division are (deterministic fixed-expression) doubles.
-# One shared template; the float-BLAS ivfpq_index/ivfpq_topk
-# operators stay the production path.
+# One shared template.
 _IVFPQ_SUBS = 32
 _IVFPQ_CODES = 32
 _IVFPQ_NPROBE = 8
@@ -2330,7 +2329,7 @@ def sim_two_stage_rerank(spark, sf_dir):
     integer stage-1 ties break on vec_id, so the candidate set is
     engine-exact, and stage 2 is the same double-cosine formulation
     the green sim_cosine_topk oracle already pins. r14: both stages
-    run in ONE mapInPandas corpus pass (see the operator docstring
+    run in ONE mapInArrow corpus pass (see the operator docstring
     for the plan diff and the exactness argument); the query vectors
     load driver-side like sim_cosine_topk's."""
     from trendengine_spark.operators.similarity import (
@@ -2527,7 +2526,7 @@ def sim_rrf_fusion(spark, sf_dir):
     operator docstring). Both row_numbers then rank the bounded
     union over ONE query_id partitioning, and the fusion equi-join
     disappears because both ranks live on the same row. Measured
-    (tools/probe_rrf.py, interleaved A/B/C, sf0.1, all three
+    (a retired one-off probe, interleaved A/B/C, sf0.1, all three
     hash-identical): min 0.633 s (this shape) vs 1.121 s
     (single-pass pair join) vs 1.497 s (the r13 two-scan + SMJ
     shape). Plan: 4 parquet scans → 1, pair BNLJs eliminated,
