@@ -4,11 +4,12 @@ NULL-safe, and timestamp-normalized — one engine renders both sides."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "..", "..", "tools")))
 
 from check_oracle import _digest_sql  # noqa: E402
 

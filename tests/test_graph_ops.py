@@ -32,84 +32,6 @@ def test_label_propagation_separates_bridged_cliques(spark):
     assert out2 == out
 
 
-def test_label_propagation_early_exit_is_fixpoint_identity(spark):
-    """r10: early_exit stops only when a round changes NO label —
-    synchronous LPA is then at a fixpoint, so the result must be
-    bit-identical to running every declared round (and to a larger
-    iters: rounds past convergence are the identity)."""
-    from trendengine_spark.operators.graph import label_propagation
-
-    c1 = [(i, j) for i in range(6) for j in range(i + 1, 6)]
-    c2 = [(10 + i, 10 + j) for i in range(6) for j in range(i + 1, 6)]
-    edges = spark.createDataFrame(
-        c1 + c2 + [(5, 10)], "src long, dst long"
-    )
-    ref = {
-        r["node"]: r["community"]
-        for r in label_propagation(edges, iters=5, early_exit=False).collect()
-    }
-    fast = {
-        r["node"]: r["community"]
-        for r in label_propagation(edges, iters=5, early_exit=True).collect()
-    }
-    more = {
-        r["node"]: r["community"]
-        for r in label_propagation(edges, iters=9, early_exit=True).collect()
-    }
-    assert fast == ref == more
-
-
-def test_label_propagation_checkpoint_cadence_identity(spark):
-    """r12: checkpoint_every batches rounds into fewer jobs — a pure
-    execution-shape knob. Labels must be identical for every cadence
-    (1 = per-round, 2 = pairs, 5 = one job), on a graph that needs
-    several rounds to converge."""
-    from trendengine_spark.operators.graph import label_propagation
-
-    c1 = [(i, j) for i in range(6) for j in range(i + 1, 6)]
-    c2 = [(10 + i, 10 + j) for i in range(6) for j in range(i + 1, 6)]
-    # chain of bridges so labels keep moving for a few rounds
-    edges = spark.createDataFrame(
-        c1 + c2 + [(5, 10), (11, 20), (20, 21), (21, 22)],
-        "src long, dst long",
-    )
-    outs = [
-        {
-            r["node"]: r["community"]
-            for r in label_propagation(
-                edges, iters=5, early_exit=False, checkpoint_every=k
-            ).collect()
-        }
-        for k in (1, 2, 5)
-    ]
-    assert outs[0] == outs[1] == outs[2]
-
-
-def test_label_propagation_repartition_votes_identity(spark):
-    """r14: repartition_votes pre-partitions the checkpointed edge
-    table on the vote-join key — a pure execution-layout knob. Labels
-    must be identical with it on/off, on a graph that converges over
-    several rounds (same topology as the cadence test)."""
-    from trendengine_spark.operators.graph import label_propagation
-
-    c1 = [(i, j) for i in range(6) for j in range(i + 1, 6)]
-    c2 = [(10 + i, 10 + j) for i in range(6) for j in range(i + 1, 6)]
-    edges = spark.createDataFrame(
-        c1 + c2 + [(5, 10), (11, 20), (20, 21), (21, 22)],
-        "src long, dst long",
-    )
-    outs = [
-        {
-            r["node"]: r["community"]
-            for r in label_propagation(
-                edges, iters=5, early_exit=False, repartition_votes=rv
-            ).collect()
-        }
-        for rv in (False, True)
-    ]
-    assert outs[0] == outs[1]
-
-
 def test_label_propagation_isolated_pairs(spark):
     from trendengine_spark.operators.graph import label_propagation
 

@@ -920,10 +920,36 @@ def test_redact_pii_golden(spark):
         assert (r["e"], r["p"], r["i"]) == (e, p, i), s
 
 
-def test_winnow_arrow_matches_expression_path(spark):
-    """The Arrow winnowing path must be row-identical to the pure-JVM
-    expression path on edge-shaped inputs (short docs, < w grams,
-    repeated substrings, nulls, multi-space runs, mixed case)."""
+def _winnow_reference(text, k, w):
+    """Plain-Python winnowing: hashlib md5 per character k-gram of the
+    normalized text, sliding min over the first 8 digest bytes as an
+    integer (same order as the lexicographic min of the 16-hex
+    prefix), distinct per doc. Java ``\\s`` is ASCII-only, hence
+    ``re.ASCII``; < k chars gives no grams, < w hashes one global min."""
+    import hashlib
+    import re
+
+    if text is None:
+        return set()
+    s = re.sub(r"\s+", " ", text.lower(), flags=re.ASCII).strip()
+    h = [
+        int.from_bytes(hashlib.md5(s[i : i + k].encode()).digest()[:8], "big")
+        for i in range(len(s) - k + 1)
+    ]
+    if not h:
+        return set()
+    if len(h) < w:
+        return {format(min(h), "016x")}
+    return {
+        format(min(h[j : j + w]), "016x") for j in range(len(h) - w + 1)
+    }
+
+
+def test_winnow_reference_matches_expression_path(spark):
+    """The expression winnowing path must be row-identical to a
+    plain-Python hashlib reference on edge-shaped inputs (short docs,
+    < w grams, repeated substrings, nulls, multi-space runs, mixed
+    case)."""
     from trendengine_spark.operators.text import winnow_fingerprints
 
     rows = [
@@ -937,19 +963,20 @@ def test_winnow_arrow_matches_expression_path(spark):
         (8, "the quick brown fox jumps over the lazy dog"),  # dup of 1
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        map(tuple, winnow_fingerprints(df, k=5, w=4, impl="arrow").collect())
+    got = sorted(
+        map(tuple, winnow_fingerprints(df, k=5, w=4).collect())
     )
-    e = sorted(
-        map(tuple, winnow_fingerprints(df, k=5, w=4, impl="expr").collect())
+    want = sorted(
+        (d, fp) for d, txt in rows for fp in _winnow_reference(txt, 5, 4)
     )
-    assert a == e
-    assert a, "expected non-empty fingerprints"
+    assert got == want
+    assert got, "expected non-empty fingerprints"
     # docs 1 and 8 share full text -> identical fingerprint sets
-    fa = {fp for d, fp in a if d == 1}
-    fb = {fp for d, fp in a if d == 8}
+    fa = {fp for d, fp in got if d == 1}
+    fb = {fp for d, fp in got if d == 8}
     assert fa == fb and fa
-    assert not any(d in (2, 6) for d, _ in a)
+    assert not any(d in (2, 6) for d, _ in got)
+    assert len({fp for d, fp in got if d == 5}) == 1
 
 
 def test_ivfpq_persisted_index_matches_inmemory(spark, tmp_path):

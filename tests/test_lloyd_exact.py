@@ -81,7 +81,7 @@ def test_whole_vector_round_and_codes_parity(spark):
             pivot_lloyd_sql("tlx_pos", "tlx_b1", nc, "codes", subspaced=False)
         ).collect()
     )
-    fused = lloyd_codes_whole(wide, cells1, cv1, with_books=True)
+    fused = lloyd_codes_whole(wide, cells1, cv1)
     fused = fused.localCheckpoint()
     got_codes = sorted(
         (r["id"], r["cell"])

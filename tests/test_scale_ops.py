@@ -302,7 +302,7 @@ def test_khop_frontiers_exact_levels(spark):
     seed = spark.createDataFrame(pd.DataFrame({"k": [0]}))
     got = {
         (r["k"], r["hop"])
-        for r in khop_frontiers(edges, seed, k=4, checkpoint_every=2).collect()
+        for r in khop_frontiers(edges, seed, k=4).collect()
     }
     # 1 and 2 at hop 1 (0→1, 0→2 shortcut); 3 at hop 2; 4 at hop 3
     assert got == {(1, 1), (2, 1), (3, 2), (4, 3)}

@@ -70,9 +70,11 @@ def test_session_stream_runs(spark, events_dir):
     assert (out["session_end"] > out["session_start"]).all()
 
 
-def test_online_detector_finds_injected_shift(spark):
+def test_online_detector_finds_injected_shift(spark, tmp_path):
     """Batch-mode exercise of the applyInPandasWithState detector
-    semantics via its pure logic on a streaming frame."""
+    semantics via its pure logic on a streaming frame. A once trigger:
+    the detector's processing-time timeout makes ``availableNow`` run
+    no-data batches without end, so that query never terminates."""
     rows = []
     for i in range(60):
         v = 1.0 if i < 30 else 10.0  # clear level shift at i=30
@@ -83,11 +85,8 @@ def test_online_detector_finds_injected_shift(spark):
                 "value": v + np.random.RandomState(i).normal(0, 0.01),
             }
         )
-    pdf = pd.DataFrame(rows)
-    import tempfile, os
-
-    d = tempfile.mkdtemp()
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(d)
+    d = str(tmp_path / "detector_src")
+    spark.createDataFrame(pd.DataFrame(rows)).write.parquet(d)
     src = (
         spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
     )
@@ -96,10 +95,13 @@ def test_online_detector_finds_injected_shift(spark):
         shifts.writeStream.format("memory")
         .queryName("detector_test")
         .outputMode("append")
-        .trigger(availableNow=True)
+        .trigger(once=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), "once-trigger query did not end"
+    finally:
+        q.stop()
     out = spark.sql("SELECT * FROM detector_test").toPandas()
     assert len(out) == 1
     assert abs(out["shift"].iloc[0] - 9.0) < 0.5

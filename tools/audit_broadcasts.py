@@ -23,9 +23,10 @@ Exit code 1 if any offender is found.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FACTS = ("lineitem.parquet", "orders.parquet")
 PREFIXES = (

@@ -14,25 +14,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BENCH_SET = [
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "join_inner_3way", "window_topk_per_group", "stream_session_window",
-    "a1_annual_composite", "d1_period_pairing", "flagship_trend_pipeline",
-    "dedup_minhash_lsh", "sim_cosine_topk",
-    "tpch_q21_waiting_supplier", "flagship_curation_pipeline",
-    "sim_range_search", "dedup_paragraph_global", "graph_pagerank_micro",
-    "multimodal_gif_animation", "trend_mann_kendall_stats",
-    "join_time_window_counts", "sim_hamming_topk", "text_bpe_pair_counts",
-    "window_rolling_slope", "graph_triangle_counts", "text_pii_redact",
-    "profile_heavy_hitters", "udtf_run_length_segments",
-    "quality_gram_matrix", "dedup_semantic_survivors",
-    "flagship_model_curation", "pipeline_semantic_decontaminate",
-    "window_time_weighted_avg", "dedup_image_phash",
-    "dedup_audio_fingerprint", "sim_two_stage_rerank", "sim_rrf_fusion",
-    "quality_isotonic_calibration", "dedup_incremental_batch",
-    "graph_communities_lpa", "quality_logistic_gate",
-    "flagship_lifecycle_pipeline", "pipeline_leakage_safe_split",
-]
+from bench import BENCH_CONF, EXTRAS, HEADLINE  # noqa: E402
+
+BENCH_SET = [*HEADLINE, *EXTRAS]
 
 
 def main() -> None:
@@ -48,14 +32,7 @@ def main() -> None:
             n for n in sorted(all_queries()) if n not in BENCH_SET
         ]
 
-    spark = get_spark(
-        app_name="audit_plans",
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.sql.shuffle.partitions": "8",
-        },
-    )
+    spark = get_spark(app_name="audit_plans", extra_conf=BENCH_CONF)
     qs = all_queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"

@@ -13,10 +13,12 @@ clobber the file head)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def first_sentence(text: str) -> str:
@@ -47,7 +49,7 @@ def main() -> None:
         mode = "oracle" if q.sql is not None else "rows-only"
         lines.append(f"| {i} | `{name}` | {mode} | {first_sentence(q.doc)} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/CATALOG.md", "w") as f:
+    with open(os.path.join(REPO, "CATALOG.md"), "w") as f:
         f.write(out)
     n_oracle = sum(1 for q in REGISTRY.values() if q.sql is not None)
     print(

@@ -25,18 +25,12 @@ def main() -> None:
         sf_dir, args = args[0], args[1:]
     names = args
 
+    from bench import BENCH_CONF
     from trendengine_spark.queries import all_queries
     from trendengine_spark.session import get_spark
     from trendengine_spark.tables import warm_cache
 
-    spark = get_spark(
-        app_name="probe_registry_tail",
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.sql.shuffle.partitions": "8",
-        },
-    )
+    spark = get_spark(app_name="probe_registry_tail", extra_conf=BENCH_CONF)
     qs = all_queries()
     spark.range(1000).selectExpr("sum(id)").collect()
     warm_cache(spark, sf_dir)

@@ -15,14 +15,14 @@ Usage: python tools/stress_ann_index.py [n_thousands]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from trendengine_spark.operators.similarity import (
@@ -30,19 +30,13 @@ from trendengine_spark.operators.similarity import (
     ivfpq_topk,
     ivfpq_write_index,
 )
+from trendengine_spark.session import get_spark
 
 
 def main() -> None:
     n = int(sys.argv[1]) * 1000 if len(sys.argv) > 1 else 100_000
     dim, n_cells, nprobe = 64, 64, 8
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("stress-ann-index")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="stress-ann-index")
     spark.sparkContext.setLogLevel("ERROR")
 
     # deterministic pseudo-vectors: coord j of vec i = centered hash

@@ -5,17 +5,15 @@ cross-join + exact-verify path (eval side broadcast).
 
 Usage: python tools/stress_decon.py [n_train_thousands]  (default 200)"""
 
-import sys, time
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession, functions as F
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql import functions as F
 from trendengine_spark.operators.similarity import semantic_decontaminate
+from trendengine_spark.session import get_spark
 
 n_train = int(sys.argv[1]) * 1000 if len(sys.argv) > 1 else 200_000
 n_eval, n_leak, dim = 2_000, 500, 64
-spark = (SparkSession.builder.master("local[32]")
-  .config("spark.sql.shuffle.partitions","32")
-  .config("spark.driver.memory","48g")
-  .config("spark.sql.session.timeZone","UTC").getOrCreate())
+spark = get_spark(app_name="stress-decon")
 spark.sparkContext.setLogLevel("ERROR")
 
 vec = F.expr(f"transform(sequence(0,{dim-1}), j -> (pmod(xxhash64(id, j), 1000) - 500.0) / 500.0)")

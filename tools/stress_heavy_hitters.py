@@ -14,27 +14,21 @@ Usage: python tools/stress_heavy_hitters.py [N_millions]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from trendengine_spark.operators.profile import heavy_hitters_mg
+from trendengine_spark.session import get_spark
 
 
 def main() -> None:
     n = int(float(sys.argv[1]) * 1e6) if len(sys.argv) > 1 else 20_000_000
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("stress-heavy-hitters")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="stress-heavy-hitters")
     spark.sparkContext.setLogLevel("ERROR")
 
     df = spark.range(0, n).select(

@@ -4,21 +4,22 @@ seasonality + hash noise; asserts-by-print that HW beats the naive
 baseline on every series. Expected ~3.1k series/s warm end-to-end
 (the printed wall includes the cold input generation, ~2s); the
 pure-numpy recursion core is printed for reference (~39k series/s).
+
+Usage: python tools/stress_holtwinters.py [n_thousands]  (default 10)
 """
 
-import sys, time
-sys.path.insert(0,"/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 from trendengine_spark.functions.holtwinters import hw_backtest_groups, hw_vectorized
+from trendengine_spark.session import get_spark
 
-spark = (SparkSession.builder.master("local[32]")
-  .config("spark.sql.shuffle.partitions","32")
-  .config("spark.driver.memory","48g")
-  .config("spark.sql.execution.arrow.pyspark.enabled","true").getOrCreate())
+spark = get_spark(app_name="stress-holtwinters")
 spark.sparkContext.setLogLevel("ERROR")
 
-n_series, t_len = 10_000, 250
+n_series = int(sys.argv[1]) * 1000 if len(sys.argv) > 1 else 10_000
+t_len = 250
 # deterministic synthetic daily series: trend + weekly seasonality + hash noise
 df = (spark.range(0, n_series).select(F.col("id").alias("sid"))
   .join(spark.range(0, t_len).select(F.col("id").alias("t")))

@@ -20,7 +20,7 @@ found exactly (no false pairs at threshold 0.5):
                carry=True hits a CLIFF here — 37-84s: 3.2M band rows
                each dragging a 64-long signature is a ~1.6 GB bucket
                shuffle that spills; the narrow posture shuffles 77 MB.
-               This is why the registry default is carry=False.
+               This is why the carried variant was removed.
     100k docs: paragraph_dedup (32-token block, md5-keyed
                first-occurrence) ~32k docs/s on a shared box;
                finds exactly the planted 20k duplicate blocks
@@ -35,9 +35,9 @@ sf0.1 documents table, ~0.9 GB of raw text):
     curation_flagship  9.6s  (104k docs/s — quality gate → lang
                        select → survivor election → 512-token packing
                        over 64 shards, the flagship composition)
-    No resource cliff anywhere at 1M docs; the only known cliff
-    remains the carried-signature LSH variant's band-shuffle spill
-    (≥200k docs, documented above), which the registry posture avoids.
+    No resource cliff anywhere at 1M docs; the only known cliff was
+    the carried-signature LSH variant's band-shuffle spill (≥200k
+    docs, documented above), and that variant is removed.
     Hot-block stress — ONE 32-token boilerplate block shared by all
     1M docs (10^6 copies of one md5 key): agg plan 6.4s, old window
     plan 4.7s (at 40-token docs: 3.3s both). At this size the hot
@@ -57,10 +57,11 @@ Usage: python tools/stress_llm.py [n_docs] [tokens_per_doc]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -188,12 +189,7 @@ def main() -> None:
         ("quality_features", lambda: quality_features(docs)),
         ("exact_dedup", lambda: exact_dedup(docs)),
         ("paragraph_dedup", paragraph_dedup),
-        (
-            "minhash_lsh_pairs",
-            # carry_signatures=False = the registry/bench posture (the
-            # carried-signature variant spills its band shuffle at 200k)
-            lambda: minhash_lsh_pairs(docs, threshold=0.5, carry_signatures=False),
-        ),
+        ("minhash_lsh_pairs", lambda: minhash_lsh_pairs(docs, threshold=0.5)),
         ("curation_flagship", curation_flagship),
     ]:
         t0 = time.perf_counter()

@@ -15,16 +15,17 @@ Usage: python tools/stress_pca.py [n_thousands]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
 
 from trendengine_spark.operators.pca import pca_fit, pca_project
+from trendengine_spark.session import get_spark
 
 
 def topk(mat: np.ndarray, queries: np.ndarray, k: int) -> np.ndarray:
@@ -42,21 +43,14 @@ def main() -> None:
     z = rng.normal(size=(n, rank))
     x = z @ w + 0.02 * rng.normal(size=(n, dim))
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .appName("stress-pca")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="stress-pca")
     spark.sparkContext.setLogLevel("ERROR")
     df = spark.createDataFrame(
         pd.DataFrame(
             {"vec_id": np.arange(n), "embedding": x.tolist()}
         ),
         schema="vec_id long, embedding array<double>",
-    ).repartition(32)
+    ).repartition(spark.sparkContext.defaultParallelism)
 
     t0 = time.time()
     fit = pca_fit(df, dim)
@@ -137,7 +131,7 @@ def _pq_rotation_study(spark, x, fit, q_idx, k) -> None:
                 {"vec_id": np.arange(len(z)), "embedding": z.tolist()}
             ),
             schema="vec_id long, embedding array<double>",
-        ).repartition(32)
+        ).repartition(spark.sparkContext.defaultParallelism)
         books = pq_train_codebooks(df, m_subspaces=m_sub, k=16)
         codes = pq_encode(df, books)
         qdf = spark.createDataFrame(

@@ -6,18 +6,19 @@ Measures wall, planted-copy recall, and false-drop count. Expected:
 ~11 s on local[32], recall ~0.999 (a copy whose base lands across a
 cluster boundary is the method's documented miss mode — the paper's
 k knob trades this recall against candidate volume), 0 false drops.
+
+Usage: python tools/stress_semantic_dedup.py [n_thousands]  (default 100)
 """
 
-import sys, time
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession, functions as F
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql import functions as F
 from trendengine_spark.operators.dedup import semantic_dedup
+from trendengine_spark.session import get_spark
 
-n, dim, n_cells, n_copies = 100_000, 64, 64, 1000
-spark = (SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions","32")
-    .config("spark.driver.memory","48g")
-    .config("spark.sql.session.timeZone","UTC").getOrCreate())
+n = int(sys.argv[1]) * 1000 if len(sys.argv) > 1 else 100_000
+dim, n_cells, n_copies = 64, 64, 1000
+spark = get_spark(app_name="stress-semantic-dedup")
 spark.sparkContext.setLogLevel("ERROR")
 
 vec = F.expr(f"transform(sequence(0,{dim-1}), j -> (pmod(xxhash64(id, j), 1000) - 500.0) / 500.0)")

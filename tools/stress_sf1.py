@@ -31,7 +31,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 OUT = "/tmp/te_sf1"
 FACTS = ("lineitem", "orders")

@@ -27,11 +27,12 @@ Run AFTER ``tools/stress_sf1.py`` (reuses its /tmp/te_sf1 build):
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 OUT = "/tmp/te_sf1"
 QUERIES = ["tpch_q18_large_volume_customer", "tpch_q21_waiting_supplier"]

@@ -38,7 +38,7 @@ import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.stress_sf1 import OUT, build  # noqa: E402
 

@@ -19,10 +19,11 @@ Usage: python tools/validate_local_cluster.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = (
     sys.argv[1]

@@ -324,7 +324,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     n: int = 3,
     mount: int = 0,
-    carry_signatures: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH, with the
     signature-estimated Jaccard attached and thresholded.
@@ -343,22 +342,12 @@ def minhash_lsh_pairs(
     the branches' exchanges do not reuse across AQE stage boundaries,
     so the shingle→hash→min pipeline ran per branch.
 
-    ``carry_signatures`` picks the verification strategy:
-
-    - ``True`` (default for API stability): the 64-long signature
-      rides through the band explode, so the bucket self-join emits
-      both signatures and the estimated Jaccard is computed in
-      place — two joins and one ``distinct`` shuffle fewer, but
-      bucket-shuffle volume grows by bands × num_perm × 8 B per doc
-      (~8 KB/doc at the defaults).
-    - ``False``: buckets carry only (id, band, bucket) (~24 B/row);
-      candidate pairs re-join the (cached, broadcastable) signature
-      table twice for verification. r6 measurement: the narrow
-      shuffle already wins at sf0.1 (0.77 s vs 0.86 s min-of-5,
-      identical output) — the r5 assumption that carrying pays until
-      very large corpora was wrong at the 64-perm default, so the
-      registry query and bench use ``False``; it is also the only
-      posture for petabyte-wide signature rows.
+    Verification: buckets carry only (id, band, bucket) (~24 B/row)
+    and the distinct candidate pairs re-join the cached signature
+    table twice. Carrying the 64-long signature through the band
+    explode instead (in-place verify, two joins fewer) measured slower
+    already at sf0.1 and spills its ~8 KB/doc band shuffle at 200k
+    docs (SCALE.md, MinHash-LSH row).
 
     ``mount``: pass distinct values when composing two corpora's LSH
     plans in one query plan (forwarded to the signature/band memo keys
@@ -366,7 +355,6 @@ def minhash_lsh_pairs(
     """
     if num_perm % bands:
         raise ValueError("num_perm must divide into bands")
-    r = num_perm // bands
     sig = owned_cache(
         minhash_signatures(df, num_perm, id_col, text_col, n, mount=mount),
         f"dedup.minhash.sig.{num_perm}.{n}.{mount}",
@@ -378,18 +366,8 @@ def minhash_lsh_pairs(
     spark = df.sparkSession
     sig_view = f"_te_minhash_sig_{num_perm}_{bands}_{mount}"
     sig.createOrReplaceTempView(sig_view)
-    band_structs = ", ".join(
-        "named_struct('band', {bi}, 'bucket', xxhash64(concat_ws(',', {parts})))".format(
-            bi=bi,
-            parts=", ".join(
-                f"CAST(element_at(signature, {bi * r + j + 1}) AS STRING)"
-                for j in range(r)
-            ),
-        )
-        for bi in range(bands)
-    )
     est_expr = (
-        "size(filter(zip_with(a.signature, b.signature,"
+        "size(filter(zip_with(sa.signature, sb.signature,"
         " (x, y) -> CAST(x = y AS INT)), v -> v = 1))"
         f" / CAST({num_perm} AS DOUBLE)"
     )
@@ -399,36 +377,19 @@ def minhash_lsh_pairs(
     # recomputed per branch, 16.8 s vs 11.6 s at 100k docs), so the
     # banded subquery text is inlined per branch instead. Plain
     # subqueries/self-joins/LATERAL VIEW all substitute fine.
-    banded_sig = (
-        f"(SELECT id, signature, bh.band AS band, bh.bucket AS bucket"
-        f" FROM {sig_view} LATERAL VIEW explode(array({band_structs})) bt AS bh)"
-    )
-    banded_thin = (
+    banded = (
         f"(SELECT id, bh.band AS band, bh.bucket AS bucket"
-        f" FROM {sig_view} LATERAL VIEW explode(array({band_structs})) bt AS bh)"
-    )
-    if carry_signatures:
-        return spark.sql(
-            f"""
-            SELECT DISTINCT id_a, id_b, round(est_jaccard, 6) AS est_jaccard
-            FROM (
-              SELECT a.id AS id_a, b.id AS id_b, {est_expr} AS est_jaccard
-              FROM {banded_sig} a JOIN {banded_sig} b
-                ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-            ) WHERE est_jaccard >= {threshold!r}
-            """
-        )
-    est_expr_sig = est_expr.replace("a.signature", "sa.signature").replace(
-        "b.signature", "sb.signature"
+        f" FROM {sig_view} LATERAL VIEW explode(array("
+        f"{_band_structs_sql(num_perm, bands)})) bt AS bh)"
     )
     return spark.sql(
         f"""
         SELECT id_a, id_b, round(est_jaccard, 6) AS est_jaccard
         FROM (
-          SELECT id_a, id_b, {est_expr_sig} AS est_jaccard
+          SELECT id_a, id_b, {est_expr} AS est_jaccard
           FROM (
             SELECT DISTINCT a.id AS id_a, b.id AS id_b
-            FROM {banded_thin} a JOIN {banded_thin} b
+            FROM {banded} a JOIN {banded} b
               ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
           ) cands
           JOIN {sig_view} sa ON sa.id = id_a

@@ -23,6 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: uncached ``khop_frontiers`` levels are ``localCheckpoint``-ed every
+#: this many hops (lineage bound; a no-op below 4 hops)
+_KHOP_CHECKPOINT_EVERY = 4
+
 
 def khop_frontiers(
     edges: DataFrame,
@@ -31,7 +35,6 @@ def khop_frontiers(
     src_col: str = "a",
     dst_col: str = "b",
     key_col: str = "k",
-    checkpoint_every: int = 4,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Exact BFS levels: nodes at hop distance 1..``k`` from the seed
@@ -68,7 +71,7 @@ def khop_frontiers(
         )
         if cache_key is not None:
             nxt = owned_cache(nxt, f"{cache_key}.h{hop}")
-        elif hop % checkpoint_every == 0:
+        elif hop % _KHOP_CHECKPOINT_EVERY == 0:
             nxt = nxt.localCheckpoint()
         level = nxt.select(
             F.col("_k").alias(key_col), F.lit(hop).alias("hop")
@@ -84,9 +87,6 @@ def label_propagation(
     iters: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    early_exit: bool = True,
-    checkpoint_every: int = 1,
-    repartition_votes: bool = False,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007 — public method, own implementation): every node
@@ -113,27 +113,9 @@ def label_propagation(
     caller's contract: pass each edge once; both directions are
     derived here.
 
-    ``checkpoint_every`` (r12, VERDICT r11 task 7): batch that many
-    rounds into one job — the per-round eager ``localCheckpoint`` is
-    a blocking job whose scheduler launch cost dominates on small
-    graphs (the declared query's 2.2-2.4 s floor was ~30 stages of
-    fixed cost on 50k rows), and with k rounds composed LAZILY
-    between checkpoints the same rounds run as ⌈iters/k⌉ jobs with
-    lineage depth ≤ k (still O(1) in iters — the discipline the
-    checkpoint exists for). Semantics are identical for any value
-    (fixpoint-identity tested); requires ``early_exit=False`` because
-    the stability probe needs materialized labels every round.
-
-    ``early_exit`` (r10): stop as soon as a round changes NO label —
-    synchronous LPA is then at a fixpoint, so every remaining round
-    is the identity and the result is bit-identical to running all
-    ``iters`` rounds (which is why the oracle-backed declared query
-    can use it while its DuckDB twin runs the full unrolled count:
-    same fixpoint). The stability probe is one short-circuiting
-    anti-equality count per round (``limit(1)`` — first changed row
-    wins); on the sf0.1 co-purchase graph convergence lands in 2-3 of
-    the declared 5 rounds, and the probe's cost is a fraction of one
-    saved round's join+aggregate+checkpoint.
+    Exactly ``iters`` rounds run, with no convergence probe: callers
+    that want the fixpoint round count measure it and pass it as
+    ``iters`` (``tools/stress_lpa.py`` does).
 
     Returns (node, community) — community = the converged label.
     """
@@ -148,32 +130,13 @@ def label_propagation(
     und = und.union(
         nodes.select(F.col("a"), F.col("a").alias("b"))
     )
-    if repartition_votes:
-        # r14 (guide §2.4): the per-round vote join is keyed on b, so
-        # checkpointing the edge table PRE-PARTITIONED on b lets every
-        # round reuse one exchange (LogicalRDD preserves the physical
-        # partitioning across localCheckpoint). r15: the count is
-        # pinned_width — a count-less keyed repartition lets AQE
-        # byte-coalesce the few-MB table and a static 8-partition conf
-        # starve it (the r14 graph-cache trap). Labels (|nodes| rows)
-        # remain the only per-round shuffle.
-        from trendengine_spark.operators.util import pinned_width
-
-        und = und.repartition(pinned_width(edges.sparkSession), F.col("b"))
     und = und.localCheckpoint()
     labels = (
         nodes.select(F.col("a").alias("node"))
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    if checkpoint_every < 1:  # pragma: no cover - authoring guard
-        raise ValueError("checkpoint_every must be >= 1")
-    if early_exit and checkpoint_every != 1:  # pragma: no cover
-        raise ValueError(
-            "early_exit needs materialized labels per round — "
-            "use checkpoint_every=1 with it"
-        )
-    for it in range(iters):
+    for _ in range(iters):
         votes = (
             und.join(
                 labels.withColumnRenamed("node", "b"), "b"
@@ -186,7 +149,7 @@ def label_propagation(
         # count first) then by label ascending — struct comparison is
         # lexicographic, so the label component needs only to be
         # orderable (string/date node ids work, not just numeric)
-        new_labels = (
+        labels = (
             votes.groupBy("node")
             .agg(
                 F.min(
@@ -194,22 +157,8 @@ def label_propagation(
                 ).alias("w")
             )
             .select("node", F.col("w.label").alias("label"))
+            .localCheckpoint()
         )
-        if (it + 1) % checkpoint_every == 0 or it == iters - 1:
-            new_labels = new_labels.localCheckpoint()
-        if early_exit:
-            changed = (
-                new_labels.withColumnRenamed("label", "_new")
-                .join(labels, "node")
-                .filter(F.col("_new") != F.col("label"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break  # fixpoint: remaining rounds are the identity
-        else:
-            labels = new_labels
     return labels.select("node", F.col("label").alias("community"))
 
 

@@ -235,7 +235,6 @@ def lloyd_codes_whole(
     cells: Sequence[int],
     cv: np.ndarray,
     d: int = 64,
-    with_books: bool = True,
     carry_qa: bool = False,
 ) -> DataFrame:
     """One whole-vector assignment pass emitting code rows
@@ -262,8 +261,7 @@ def lloyd_codes_whole(
             if n == 0:
                 continue
             pos = _assign_whole(q, cvf, cn2)
-            if with_books:
-                _accumulate(acc, cnt, pos, q)
+            _accumulate(acc, cnt, pos, q)
             arrays = [
                 ids_col,
                 pa.array(cells_a[pos], type=pa.int32()),
@@ -280,20 +278,19 @@ def lloyd_codes_whole(
             yield pa.RecordBatch.from_arrays(
                 arrays, names=["id", "cell", "ra", "i", "s", "c"]
             )
-        if with_books:
-            p = _partials_batch(cells_a, acc, cnt)
-            n = p.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.nulls(n, type=pa.int64()),
-                    p.column(0),
-                    pa.nulls(n, type=pa.list_(pa.int64())),
-                    p.column(1),
-                    p.column(2),
-                    p.column(3),
-                ],
-                names=["id", "cell", "ra", "i", "s", "c"],
-            )
+        p = _partials_batch(cells_a, acc, cnt)
+        n = p.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.nulls(n, type=pa.int64()),
+                p.column(0),
+                pa.nulls(n, type=pa.list_(pa.int64())),
+                p.column(1),
+                p.column(2),
+                p.column(3),
+            ],
+            names=["id", "cell", "ra", "i", "s", "c"],
+        )
 
     return wide.select("id", "qa").mapInArrow(gen, schema=_FUSED_WHOLE)
 

@@ -67,7 +67,6 @@ def winnow_fingerprints(
     w: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "expr",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003
     — the MOSS algorithm): hash every character k-gram of the
@@ -82,24 +81,14 @@ def winnow_fingerprints(
     fixed-width hex == numeric min) and the DuckDB oracle reproduces
     it exactly.
 
-    Two implementations with IDENTICAL output (cross-checked in
-    tests), both behind :func:`~trendengine_spark.operators.util.fan_out`
-    — the r8 finding was that the whole corpus hashed on ONE core
-    whenever the scan was a single row group; widening was worth 8×
-    (4.9 → 0.6 s compute at sf0.1), after which the two hashing
-    backends measure within ~20% of each other on this corpus shape:
-
-    - ``impl="expr"`` (default): pure-JVM array-lambda projection
-      (transform/slice/array_min), zero Python in the plan.
-    - ``impl="arrow"``: ``mapInPandas`` — hashlib md5 per gram,
-      sliding min as ``np.minimum.reduce`` over the leading 8 digest
-      bytes as uint64 (== lexicographic min of the 16-hex prefix).
-      Kept as an independently-derived cross-check of the expression
-      path (and the faster option if docs grow long enough that
-      per-gram HOF interpretation dominates the Arrow transfer).
+    Pure-JVM array-lambda projection (transform/slice/array_min), zero
+    Python in the plan, behind
+    :func:`~trendengine_spark.operators.util.fan_out` — the r8 finding
+    was that the whole corpus hashed on ONE core whenever the scan was
+    a single row group; widening was worth 8× (4.9 → 0.6 s compute at
+    sf0.1). ``tests/test_llm_ops.py`` cross-checks it against a
+    plain-Python hashlib reference.
     """
-    if impl == "arrow":
-        return _winnow_fingerprints_arrow(df, k, w, id_col, text_col)
     from trendengine_spark.operators.util import fan_out
 
     # materialize each stage as a projected column: a lambda re-evaluates
@@ -140,67 +129,6 @@ def winnow_fingerprints(
     return hashed.select(
         F.col(id_col), F.explode(F.array_distinct(wins)).alias("fingerprint")
     )
-
-
-def _winnow_fingerprints_arrow(
-    df: DataFrame, k: int, w: int, id_col: str, text_col: str
-) -> DataFrame:
-    """Arrow-vectorized winnowing (see :func:`winnow_fingerprints`).
-
-    Semantics mirror the expression path exactly: Java ``\\s`` is
-    ASCII-only, so the normalization regex is compiled with
-    ``re.ASCII``; < k chars → no grams → no rows; < w hashes → one
-    global min; distinct per doc. The sliding min runs on the first 8
-    digest bytes as uint64 — identical ordering to lexicographic min
-    over the 16-char hex prefix.
-    """
-    import hashlib
-    import re as _re
-
-    import numpy as np
-    import pandas as pd
-
-    from trendengine_spark.operators.util import fan_out
-
-    ws = _re.compile(r"\s+", _re.ASCII)
-
-    def gen(batches):
-        for pdf in batches:
-            out_ids: list = []
-            out_fps: list[str] = []
-            for did, txt in zip(pdf[id_col], pdf[text_col]):
-                if not isinstance(txt, str):
-                    continue
-                s = ws.sub(" ", txt.lower()).strip()
-                n_grams = len(s) - k + 1
-                if n_grams <= 0:
-                    continue
-                # slice CHARACTERS (substr semantics), encode per gram
-                h = np.fromiter(
-                    (
-                        int.from_bytes(
-                            hashlib.md5(s[i : i + k].encode()).digest()[:8], "big"
-                        )
-                        for i in range(n_grams)
-                    ),
-                    dtype=np.uint64,
-                    count=n_grams,
-                )
-                if n_grams >= w:
-                    wins = np.minimum.reduce(
-                        [h[j : n_grams - w + 1 + j] for j in range(w)]
-                    )
-                else:
-                    wins = h.min(keepdims=True)
-                for v in np.unique(wins):
-                    out_ids.append(did)
-                    out_fps.append(format(int(v), "016x"))
-            if out_ids:
-                yield pd.DataFrame({id_col: out_ids, "fingerprint": out_fps})
-
-    id_type = dict(df.dtypes)[id_col]
-    slim = fan_out(df.select(id_col, text_col), cpu_dense=True)
-    return slim.mapInPandas(gen, f"{id_col} {id_type}, fingerprint string")
 
 
 def char_class_ratio(text: Column, pattern: str) -> Column:

@@ -426,7 +426,7 @@ def pinned_width(spark) -> int:
     ``repartition`` — a count-less keyed repartition lets AQE's
     byte-based coalescing shrink a few-MB frame to a handful of
     partitions, starving downstream CPU-bound stages (the r14
-    graph-cache regression, tools/probe_graph_conf.py)."""
+    graph-cache regression; A/B recorded in OPTIMIZATION_r15.md)."""
     try:
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:

@@ -188,7 +188,7 @@ def _pagerank_sql(div: str, count1: str) -> str:
 def _copurchase_edges(spark, sf_dir, key):
     """Symmetrized distinct co-purchase edge set (parts sharing an
     order) — the shared input of the iterative graph queries. The
-    r14 plan change (guide §2.4; A/B in ``tools/probe_pagerank_v2.py``
+    r14 plan change (guide §2.4; A/B recorded in OPTIMIZATION_r14.md,
     with identical result hashes at sf0.1 AND sf10): **the
     symmetrized table is cached hash-partitioned on the join key
     ``a``** (r15: at an EXPLICIT ``pinned_width`` partition count —
@@ -233,7 +233,7 @@ def _copurchase_edges(spark, sf_dir, key):
     # inherits shuffle.partitions=8; either way every downstream
     # CPU-bound stage over the cache runs 4x under-parallel on a
     # 32-core box. Interleaved A/B under BOTH confs
-    # (tools/probe_graph_conf.py, hash-identical): explicit width wins
+    # (OPTIMIZATION_r15.md, hash-identical): explicit width wins
     # or ties everywhere (bench conf: triangles 3.49->2.40, pagerank
     # 3.70->2.99; engine conf: pagerank 4.60->2.93, triangles
     # 4.29->2.86). Width = max(shuffle.partitions, defaultParallelism)
@@ -271,7 +271,7 @@ def graph_pagerank_micro(spark, sf_dir):
     the per-iteration math is identical to the oracle SQL.
 
     r14 iteration-body replan (guide §2.3 "shuffle fewer bytes",
-    §2.4; A/B in ``tools/probe_pagerank_v2.py``, hash-identical):
+    §2.4; A/B recorded in OPTIMIZATION_r14.md, hash-identical):
     the old body joined the FULL edge table twice per iteration
     (once against ``deg``, once against the rank table). Both are
     per-node tables, so they are pre-joined into one |nodes|-sized
@@ -1580,7 +1580,7 @@ def graph_triangle_counts(spark, sf_dir):
     plan, provably identical result set, integer-exact hash."""
     from trendengine_spark.operators.util import owned_cache
 
-    # r14 (guide §2.3/§2.4; A/B in tools/probe_tri_lpa.py, hash
+    # r14 (guide §2.3/§2.4; A/B in OPTIMIZATION_r14.md, hash
     # identical, 3.77 → 2.92 s min-of-5 at sf0.1): the oriented pairs
     # and the degree table both read the SHARED co-partitioned
     # symmetrized edge cache (_copurchase_edges — in-row pair
@@ -1975,7 +1975,7 @@ def graph_communities_lpa(spark, sf_dir):
     # 5.50 vs 6.09 s, but was DECLINED for the same reason as
     # _copurchase_edges: at sf10 the per-ORDER group count is 14.7M
     # and the object-hash collect aggregation loses to the
-    # sort-merge self-join — see tools/probe_tri_lpa.py).
+    # sort-merge self-join — OPTIMIZATION_r14.md).
     edges = (
         a.join(b, "o")
         .filter(F.col("src") < F.col("dst"))
@@ -1987,37 +1987,8 @@ def graph_communities_lpa(spark, sf_dir):
     from trendengine_spark.operators.util import owned_cache
 
     edges = owned_cache(edges, "graph.lpa.edges")  # LPA + modularity
-    # early_exit=False, measured (r10): THIS graph converges at
-    # exactly round 5 (per-round changed labels at sf0.1:
-    # 3284/822/69/12/0), so the stability probe would cost ~0.4s of
-    # extra jobs and save zero rounds. The probe stays the operator
-    # DEFAULT because early-converging graphs (the stress_lpa
-    # structure converges in 2 of 5 rounds) save whole rounds; either
-    # setting yields identical labels (fixpoint identity), so the
-    # 5-round unrolled oracle text is valid for both.
-    # checkpoint_every stays 1 (r12, VERDICT r11 task 7 — attempted,
-    # measured, DECLINED): batching rounds into one job via lazy
-    # composition (checkpoint_every=5, also 2) measured SLOWER than
-    # per-round checkpoints on identical fresh-session probes
-    # (min-of-3 at sf0.1: 7.3 s / 7.0 s vs 5.3 s) — AQE re-optimizes
-    # the growing multi-round DAG at every shuffle boundary, costing
-    # more than the per-round job launches it saves. The knob and its
-    # fixpoint-identity test stay (deep-lineage graphs elsewhere may
-    # still want batching); the declared query keeps the measured
-    # winner.
-    # repartition_votes=False (r15, VERDICT r14 #2): the r14 vote-join
-    # co-partition was re-decided by interleaved A/B under BOTH the
-    # driver's bench conf (AQE off, 8 shuffle partitions) and the
-    # engine default (tools/probe_graph_conf.py, hash-identical):
-    # rv=True never wins (bench 3.60 vs 3.44 s; engine 4.87 vs
-    # 4.62 s) — on THIS graph the pre-partitioned edge table saves
-    # one exchange of a few-MB frame but costs the up-front
-    # repartition pass; the knob and its fixpoint-identity test stay
-    # for denser graphs where five reused exchanges beat one.
     labels = owned_cache(
-        label_propagation(
-            edges, iters=5, early_exit=False, repartition_votes=False
-        ),
+        label_propagation(edges, iters=5),
         "graph.lpa.labels",
     )
     from trendengine_spark.operators.graph import modularity

@@ -127,14 +127,8 @@ def dedup_ngram_jaccard(spark, sf_dir):
     "recall vs the exact twin asserted in tests.",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    # carry_signatures=False: the banded shuffle carries (id, band,
-    # bucket) only — measured faster than carrying 64-long signatures
-    # through the explode already at sf0.1 (0.77 s vs 0.86 s min-of-5,
-    # identical output), and it is the posture that survives
-    # petabyte-wide signature rows (operators/dedup.py discussion)
     return minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), threshold=0.35, num_perm=64,
-        bands=16, carry_signatures=False,
+        t(spark, sf_dir, "documents"), threshold=0.35, num_perm=64, bands=16
     )
 
 
@@ -863,7 +857,7 @@ def sim_ivf_topk(spark, sf_dir):
     # round 2: the final assignment (oracle's a2, reused by the
     # candidate join) and the round-2 book (oracle's c2, probe
     # scoring only) both come from ONE fused corpus pass
-    fused = lloyd_codes_whole(wide, cells, cv1, with_books=True)
+    fused = lloyd_codes_whole(wide, cells, cv1)
     fused = fused.localCheckpoint()
     fused.where("i = -1").select("id", "cell").createOrReplaceTempView(
         "te_ivf_a2"

@@ -1014,9 +1014,7 @@ def sim_ivfpq_topk(spark, sf_dir):
     cells, v1 = books_whole_from_partials(
         lloyd_books_whole(wide, list(range(seeds.shape[0])), seeds)
     )
-    fused = lloyd_codes_whole(
-        wide, cells, v1, with_books=True, carry_qa=True
-    ).localCheckpoint()
+    fused = lloyd_codes_whole(wide, cells, v1, carry_qa=True).localCheckpoint()
     fused.where("i = -1").select("id", "cell").createOrReplaceTempView(
         "te_ivfpq_va2"
     )
