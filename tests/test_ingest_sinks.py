@@ -104,6 +104,29 @@ def test_write_parquet_partitioned_one_file_per_value(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1000
 
 
+def test_write_parquet_splits_skewed_value(spark, tmp_path, monkeypatch):
+    """A dominant partition value is split into files of at most
+    MAX_RECORDS_PER_FILE rows; the small values keep one file each."""
+    from trendengine_spark import sinks
+
+    monkeypatch.setattr(sinks, "MAX_RECORDS_PER_FILE", 100)
+    df = (
+        spark.range(1000)
+        .repartition(8)
+        .withColumn("p", F.when(F.col("id") < 900, 0).otherwise(F.col("id") % 4 + 1))
+    )
+    out = os.path.join(str(tmp_path), "skew_t")
+    sinks.write_parquet(df, out, partition_by=["p"])
+    n_files = {
+        v: len([f for f in os.listdir(os.path.join(out, f"p={v}")) if f.startswith("part-")])
+        for v in range(5)
+    }
+    assert n_files == {0: 9, 1: 1, 2: 1, 3: 1, 4: 1}, n_files
+    back = spark.read.parquet(out)
+    assert back.count() == 1000
+    assert back.filter("p = 0").count() == 900
+
+
 def test_reference_named_outputs(spark, tmp_path):
     from trendengine_spark.sinks import save_polytrend_outputs
 

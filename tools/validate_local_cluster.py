@@ -25,6 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE  # noqa: E402
+
 SF = (
     sys.argv[1]
     if len(sys.argv) > 1
@@ -35,17 +37,7 @@ SF = (
 #: (BENCH_r13 extras, descending wall) + one from each mechanism
 #: family that leans on broadcast/mapInPandas/checkpoint machinery
 DEFAULT_NAMES = [
-    # headline suite
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "join_inner_3way",
-    "window_topk_per_group",
-    "stream_session_window",
-    "a1_annual_composite",
-    "d1_period_pairing",
-    "flagship_trend_pipeline",
-    "dedup_minhash_lsh",
-    "sim_cosine_topk",
+    *HEADLINE,
     # 10 most expensive extras in BENCH_r13
     "graph_communities_lpa",
     "graph_pagerank_micro",

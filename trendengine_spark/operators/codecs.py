@@ -22,10 +22,10 @@ decode path for PNG and baseline-JPEG payloads; video containers
 (MP4…) remain honestly stubbed behind ``NotImplementedError`` — the
 container forbids installing codec libraries.
 
-Decode cost model at scale: decode runs inside ``mapInPandas``
-partition-local (no shuffle carries pixel data); the per-image Python
-loop over scanlines is bounded by image height, and the zlib inflate
-dominates — same asymptotics as a C decoder, constant factor higher.
+Decode cost model at scale: decode runs in a per-row ``mapInArrow``
+pass, partition-local (no shuffle carries pixel data); the per-image
+Python loop over scanlines is bounded by image height, and the zlib
+inflate dominates — same asymptotics as a C decoder, constant factor higher.
 """
 
 from __future__ import annotations

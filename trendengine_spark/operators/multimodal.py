@@ -2,8 +2,8 @@
 
 Treats image/audio/video payloads as opaque ``binary`` columns with a
 typed metadata struct, per the standard lakehouse pattern. The Spark
-side — schema, partition-preserving ``mapInPandas`` feature
-extraction, Arrow batch shapes — is real and tested. Decode status:
+side — schema, partition-preserving per-row feature extraction, Arrow
+batch shapes — is real and tested. Decode status:
 
 - **PNG decodes and resamples FOR REAL** via the pure-stdlib codec in
   :mod:`.codecs` (zlib inflate + PNG spec filter reconstruction +
@@ -20,22 +20,44 @@ extraction, Arrow batch shapes — is real and tested. Decode status:
   Pillow/libav are absent from this runtime and cannot be installed,
   so that constraint is final.
 
+Every Python pass here (payload generation, decode, frame and tile
+fan-out, perceptual hashes) is a per-row function plus its output
+schema, run by :func:`.util.map_rows` — one ``mapInArrow`` over the
+caller's projection, partition-local, Arrow-batched.
+
 At scale: media payloads dominate row size, so the operators keep
 binary columns out of shuffles — metadata-only projections go through
-aggregations, and feature extraction is a mapInPandas pass with no
-shuffle at all (partition-local, Arrow-batched).
+aggregations, and feature extraction is a per-row map with no
+shuffle at all.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from trendengine_spark.operators.util import fan_out
+from trendengine_spark.operators.codecs import (
+    avi_mjpeg_encode,
+    avi_parse,
+    gif_decode,
+    gif_encode,
+    is_avi,
+    is_jpeg,
+    is_png,
+    jpeg_decode,
+    jpeg_encode,
+    png_decode,
+    png_encode,
+    wav_decode,
+    wav_encode,
+)
+from trendengine_spark.operators.util import arrow_rows, fan_out, map_rows
 
 #: Canonical media metadata struct.
 MEDIA_META = T.StructType(
@@ -57,6 +79,35 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("mean_luma", T.DoubleType(), True),
     ]
 )
+
+
+def _media_schema(id_col: str, *extra: T.StructField) -> T.StructType:
+    """``(id_col, media)`` output of the payload generators."""
+    return T.StructType(
+        [
+            T.StructField(id_col, T.LongType(), False),
+            T.StructField("media", T.BinaryType(), True),
+            *extra,
+        ]
+    )
+
+
+def _attach_media(df: DataFrame, id_col: str, payload: Callable[[int], bytes]) -> DataFrame:
+    """``(id_col, media)`` with ``payload(id)`` built executor-side per
+    row (partition-local; the driver never sees a byte of media)."""
+    return map_rows(
+        fan_out(df.select(id_col), cpu_dense=True),
+        lambda i: [(i, payload(i))],
+        _media_schema(id_col),
+    )
+
+
+def _signed64(bits) -> int:
+    """64 bits, bit ``j`` = ``bits[j]``, as a signed int64: bit 63 is
+    the sign bit (the convention of the Hamming ANN codes in
+    operators/similarity.py)."""
+    v = sum(1 << j for j, b in enumerate(bits) if b)
+    return v - (1 << 64) if v >> 63 else v
 
 
 def attach_fake_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -85,37 +136,15 @@ def attach_png_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decode is exactly predictable — the decode round trip is therefore
     DuckDB-oracle-checkable: mean luma of a constant grayscale image
     is (id % 256) / 255.0 with no float-summation ambiguity (integer
-    sums are exact in both engines). Payload generation happens inside
-    ``mapInPandas`` (partition-local; the driver never sees a byte of
-    media), which is exactly how a real binary-column ingest behaves.
+    sums are exact in both engines). Payload generation is a per-row
+    map (partition-local; the driver never sees a byte of media),
+    which is exactly how a real binary-column ingest behaves.
     """
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import png_encode
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
+    return _attach_media(
+        df,
+        id_col,
+        lambda i: png_encode(np.full((4 + i % 11, 4 + i % 13), i % 256, dtype=np.uint8)),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                png_encode(
-                    np.full(
-                        (4 + int(i) % 11, 4 + int(i) % 13),
-                        int(i) % 256,
-                        dtype=np.uint8,
-                    )
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
 
 
 def attach_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -127,33 +156,11 @@ def attach_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     so quantize→dequantize round-trips) and every AC coefficient is
     zero — decoded mean luma is exactly (id % 256) / 255.0, which the
     DuckDB oracle expresses in integer arithmetic."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import jpeg_encode
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
+    return _attach_media(
+        df,
+        id_col,
+        lambda i: jpeg_encode(np.full((8 + i % 11, 8 + i % 13), i % 256, dtype=np.uint8)),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                jpeg_encode(
-                    np.full(
-                        (8 + int(i) % 11, 8 + int(i) % 13),
-                        int(i) % 256,
-                        dtype=np.uint8,
-                    )
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
 
 
 def attach_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -163,40 +170,20 @@ def attach_wav_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     features are exactly predictable: peak = amplitude, RMS =
     amplitude (square wave), duration_ms = n * 1000 / 8000 — all
     DuckDB-oracle-expressible integer arithmetic."""
-    import numpy as np
 
-    from trendengine_spark.operators.codecs import wav_encode
+    def payload(i):
+        amp = 100 + i % 900
+        n = 160 + i % 80
+        return wav_encode(8000, np.where(np.arange(n) % 2 == 0, amp, -amp).astype(np.int16))
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                amp = 100 + int(i) % 900
-                n = 160 + int(i) % 80
-                wavef = np.where(np.arange(n) % 2 == 0, amp, -amp).astype(np.int16)
-                payloads.append(wav_encode(8000, wavef))
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
+    return _attach_media(df, id_col, payload)
 
 
 def extract_audio_features(df: DataFrame) -> DataFrame:
-    """REAL WAV decode inside ``mapInPandas``: sample rate, sample
-    count, duration, peak and RMS from the decoded PCM frames (stdlib
+    """REAL WAV decode in a per-row map: sample rate, sample count,
+    duration, peak and RMS from the decoded PCM frames (stdlib
     ``wave`` + numpy — no audio library). Partition-local, payload
     bytes never shuffle."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import wav_decode
-
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),
@@ -208,40 +195,19 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf["doc_id"].astype("int64"), pdf["media"]):
-                rate, samples = wav_decode(bytes(b))
-                mono = samples[:, 0].astype(np.float64)
-                rows.append(
-                    (
-                        int(i),
-                        rate,
-                        len(mono),
-                        len(mono) * 1000 // rate,
-                        int(np.abs(samples[:, 0].astype(np.int64)).max()),
-                        float(np.sqrt(np.mean(mono * mono))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples",
-                    "duration_ms", "peak", "rms",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "sample_rate": "int32",
-                    "n_samples": "int64",
-                    "duration_ms": "int64",
-                    "peak": "int32",
-                    "rms": "float64",
-                }
-            )
+    def row(doc_id, media):
+        rate, samples = wav_decode(media)
+        mono = samples[:, 0].astype(np.float64)
+        yield (
+            doc_id,
+            rate,
+            len(mono),
+            len(mono) * 1000 // rate,
+            int(np.abs(samples[:, 0].astype(np.int64)).max()),
+            float(np.sqrt(np.mean(mono * mono))),
+        )
 
-    return fan_out(df.select("doc_id", "media"), cpu_dense=True).mapInPandas(gen, out_schema)
+    return map_rows(fan_out(df.select("doc_id", "media"), cpu_dense=True), row, out_schema)
 
 
 def attach_fake_video(
@@ -262,6 +228,30 @@ def attach_fake_video(
     )
 
 
+def _decode_image(b: bytes | None, fake: bool) -> tuple[int, int, float]:
+    """One image payload → ``(width, height, mean_luma)``; see
+    :func:`decode_image_batch`."""
+    if b and (is_png(b) or is_jpeg(b)):
+        a = png_decode(b) if is_png(b) else jpeg_decode(b)
+        h, w, c = a.shape
+        rgb = a[:, :, :3] if c >= 3 else a[:, :, :1]
+        weights = np.array([0.299, 0.587, 0.114]) if rgb.shape[2] == 3 else np.array([1.0])
+        return w, h, float((rgb.astype(np.float64) @ weights).mean() / 255.0)
+    if not fake:
+        raise NotImplementedError(
+            "unrecognized image format: only PNG and baseline JPEG "
+            "decode for real in this runtime (pass fake=True for the "
+            "deterministic plumbing-test decoder on other formats)"
+        )
+    n = len(b) if b else 0
+    first = b[0] if b else 0
+    last = b[-1] if b else 0
+    return 64 + (n % 512), 64 + ((n * 7 + first) % 512), ((first + last) % 256) / 255.0
+
+
+_DECODE_SCHEMA = T.StructType(FEATURE_SCHEMA.fields[2:])
+
+
 def decode_image_batch(payloads: pd.Series, fake: bool = False) -> pd.DataFrame:
     """Decode a batch of image payloads → (width, height, mean_luma).
 
@@ -275,82 +265,25 @@ def decode_image_batch(payloads: pd.Series, fake: bool = False) -> pd.DataFrame:
     ``fake=False`` raises — video entropy decode would need a codec
     library this runtime doesn't have.
     """
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import (
-        is_jpeg,
-        is_png,
-        jpeg_decode,
-        png_decode,
-    )
-
-    widths, heights, lumas = [], [], []
-    for b in payloads:
-        if b and (is_png(bytes(b)) or is_jpeg(bytes(b))):
-            raw = bytes(b)
-            a = png_decode(raw) if is_png(raw) else jpeg_decode(raw)
-            h, w, c = a.shape
-            rgb = a[:, :, :3] if c >= 3 else a[:, :, :1]
-            weights = (
-                np.array([0.299, 0.587, 0.114]) if rgb.shape[2] == 3 else np.array([1.0])
-            )
-            luma = float((rgb.astype(np.float64) @ weights).mean() / 255.0)
-            widths.append(w)
-            heights.append(h)
-            lumas.append(luma)
-        elif fake:
-            n = len(b) if b else 0
-            first = b[0] if b else 0
-            last = b[-1] if b else 0
-            widths.append(64 + (n % 512))
-            heights.append(64 + ((n * 7 + first) % 512))
-            lumas.append(((first + last) % 256) / 255.0)
-        else:
-            raise NotImplementedError(
-                "unrecognized image format: only PNG and baseline JPEG "
-                "decode for real in this runtime (pass fake=True for the "
-                "deterministic plumbing-test decoder on other formats)"
-            )
-    return pd.DataFrame(
-        {
-            "width": pd.Series(widths, dtype="int32"),
-            "height": pd.Series(heights, dtype="int32"),
-            "mean_luma": pd.Series(lumas, dtype="float64"),
-        }
-    )
+    rows = [_decode_image(bytes(b) if b is not None else None, fake) for b in payloads]
+    return arrow_rows(rows, _DECODE_SCHEMA).to_pandas()
 
 
 def extract_media_features(
     df: DataFrame, fake: bool = True, keep_cols: list[str] | None = None
 ) -> DataFrame:
-    """Partition-local feature extraction over the media column via
-    ``mapInPandas`` (Arrow-batched, no shuffle). Output schema is
+    """Partition-local feature extraction over the media column (a
+    per-row map, Arrow-batched, no shuffle). Output schema is
     :data:`FEATURE_SCHEMA` plus any ``keep_cols`` passed through
     unchanged — pass-through beats re-joining the producer subtree,
     which would execute the upstream decode pipeline TWICE."""
     keep = keep_cols or []
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = decode_image_batch(pdf["media"], fake=fake)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": pdf["media"].str.len().astype("int64"),
-                    "width": feats["width"],
-                    "height": feats["height"],
-                    "mean_luma": feats["mean_luma"],
-                }
-            )
-            for c in keep:
-                out[c] = pdf[c].to_numpy()
-            yield out
+    def row(doc_id, media, *kept):
+        yield (doc_id, len(media), *_decode_image(media, fake), *kept)
 
-    schema = T.StructType(
-        FEATURE_SCHEMA.fields
-        + [df.schema[c] for c in keep]
-    )
-    return fan_out(df.select("doc_id", "media", *keep), cpu_dense=True).mapInPandas(gen, schema)
+    schema = T.StructType(FEATURE_SCHEMA.fields + [df.schema[c] for c in keep])
+    return map_rows(fan_out(df.select("doc_id", "media", *keep), cpu_dense=True), row, schema)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -378,7 +311,7 @@ FRAME_SCHEMA = T.StructType(
 def resize_images(
     df: DataFrame, max_side: int = 256, fake: bool = False
 ) -> DataFrame:
-    """Aspect-preserving resize plumbing via ``mapInPandas`` (Arrow
+    """Aspect-preserving resize plumbing in a per-row map (Arrow
     batches, partition-local, no shuffle — at 100 TB the payload bytes
     never leave the executor that scanned them).
 
@@ -391,67 +324,30 @@ def resize_images(
     (same contract as :func:`decode_image_batch`).
     """
 
-    def _resample_png(b: bytes) -> tuple[bytes, int, int, int, int]:
-        import numpy as np
-
-        from trendengine_spark.operators.codecs import png_decode, png_encode
-
-        a = png_decode(b)
-        h, w = a.shape[:2]
-        long_side = max(h, w)
+    def target(w, h):
+        long_side = max(w, h)
         if long_side <= max_side:
-            return b, w, h, w, h
-        ow = max(1, w * max_side // long_side)
-        oh = max(1, h * max_side // long_side)
-        ys = (np.arange(oh) * h // oh).astype(np.int64)
-        xs = (np.arange(ow) * w // ow).astype(np.int64)
-        return png_encode(a[ys][:, xs]), w, h, ow, oh
+            return w, h
+        return max(1, w * max_side // long_side), max(1, h * max_side // long_side)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from trendengine_spark.operators.codecs import is_png
-
-        for pdf in batches:
-            png_mask = pdf["media"].map(
-                lambda b: bool(b) and is_png(bytes(b))
-            )
-            if png_mask.any():
-                real = pdf[png_mask].copy()
-                resampled = [_resample_png(bytes(b)) for b in real["media"]]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": real["doc_id"].astype("int64").to_numpy(),
-                        "width": pd.Series([r[1] for r in resampled], dtype="int32"),
-                        "height": pd.Series([r[2] for r in resampled], dtype="int32"),
-                        "out_width": pd.Series([r[3] for r in resampled], dtype="int32"),
-                        "out_height": pd.Series([r[4] for r in resampled], dtype="int32"),
-                        "media": [r[0] for r in resampled],
-                    }
-                )
-            pdf = pdf[~png_mask]
-            if pdf.empty:
-                continue
+    def row(doc_id, width, height, media):
+        if not (media and is_png(media)):
             if not fake:
                 raise NotImplementedError(
                     "non-PNG pixel resampling requires a codec library not "
                     "present in this runtime (PNG resamples for real; pass "
                     "fake=True for the pass-through plumbing-test resizer)"
                 )
-            w = pdf["width"].astype("int64")
-            h = pdf["height"].astype("int64")
-            long_side = pd.concat([w, h], axis=1).max(axis=1)
-            needs = long_side > max_side
-            ow = w.where(~needs, (w * max_side // long_side).clip(lower=1))
-            oh = h.where(~needs, (h * max_side // long_side).clip(lower=1))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": w.astype("int32"),
-                    "height": h.astype("int32"),
-                    "out_width": ow.astype("int32"),
-                    "out_height": oh.astype("int32"),
-                    "media": pdf["media"],
-                }
-            )
+            yield (doc_id, width, height, *target(width, height), media)
+            return
+        a = png_decode(media)
+        h, w = a.shape[:2]
+        ow, oh = target(w, h)
+        if (ow, oh) != (w, h):
+            ys = (np.arange(oh) * h // oh).astype(np.int64)
+            xs = (np.arange(ow) * w // ow).astype(np.int64)
+            media = png_encode(a[ys][:, xs])
+        yield (doc_id, w, h, ow, oh, media)
 
     narrowed = df.select(
         "doc_id",
@@ -459,7 +355,7 @@ def resize_images(
         F.col("media_meta.height").alias("height"),
         "media",
     )
-    return fan_out(narrowed, cpu_dense=True).mapInPandas(gen, RESIZE_SCHEMA)
+    return map_rows(fan_out(narrowed, cpu_dense=True), row, RESIZE_SCHEMA)
 
 
 def attach_mjpeg_video(
@@ -472,73 +368,32 @@ def attach_mjpeg_video(
     pure-stdlib codecs (:func:`codecs.jpeg_encode` →
     :func:`codecs.avi_mjpeg_encode`), so downstream container parsing
     and frame decode exercise the real path, not a stub. Construction
-    runs inside ``mapInPandas`` (partition-local, payload never
-    shuffled)."""
-    from trendengine_spark.operators.codecs import avi_mjpeg_encode, jpeg_encode
-
-    id_type = df.schema[id_col].dataType
+    is a per-row map (partition-local, payload never shuffled)."""
     out_schema = T.StructType(
         [
-            T.StructField(id_col, id_type),
+            T.StructField(id_col, df.schema[id_col].dataType),
             T.StructField("media", T.BinaryType()),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("media_type", T.StringType()),
-                        T.StructField("format", T.StringType()),
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("duration_ms", T.LongType()),
-                    ]
-                ),
-            ),
+            T.StructField("media_meta", MEDIA_META),
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(did):
+        n = (did % 4) + 2
+        shape = (frame_size, frame_size)
+        frames = [
+            jpeg_encode(np.full(shape, (did * 31 + i * 17) % 256, dtype=np.uint8))
+            for i in range(n)
+        ]
+        meta = ("video", "avi-mjpeg", frame_size, frame_size, n * 1000)
+        yield (did, avi_mjpeg_encode(frames, fps=1), meta)
 
-        for pdf in batches:
-            medias, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                n = (did % 4) + 2
-                frames = [
-                    jpeg_encode(
-                        np.full(
-                            (frame_size, frame_size),
-                            (did * 31 + i * 17) % 256,
-                            dtype=np.uint8,
-                        )
-                    )
-                    for i in range(n)
-                ]
-                medias.append(avi_mjpeg_encode(frames, fps=1))
-                metas.append(
-                    {
-                        "media_type": "video",
-                        "format": "avi-mjpeg",
-                        "width": frame_size,
-                        "height": frame_size,
-                        "duration_ms": n * 1000,
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "media": pd.Series(medias, dtype="object"),
-                    "media_meta": pd.Series(metas, dtype="object"),
-                }
-            )
-
-    return df.select(id_col).mapInPandas(gen, out_schema)
+    return map_rows(df.select(id_col), row, out_schema)
 
 
 def sample_frames(
     df: DataFrame, step_ms: int = 1000, fake: bool = False
 ) -> DataFrame:
-    """Video frame sampling via ``mapInPandas``: one input row fans out
+    """Video frame sampling in a per-row map: one input row fans out
     to one output row per sampled timestamp (0, step_ms, 2·step_ms, …
     < duration) — the Arrow-batch row-expansion shape any frame
     sampler needs. Partition-local: no shuffle, the natural layout for
@@ -556,63 +411,26 @@ def sample_frames(
     md5 tag, empty frame) for containers we can't parse.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def fake_row(doc_id, dur):
+        n = max(0, -(-dur // step_ms)) if dur is not None else 0
+        for i in range(n):
+            yield (doc_id, i, i * step_ms, hashlib.md5(f"{doc_id}:{i}".encode()).hexdigest(), b"")
 
-        from trendengine_spark.operators.codecs import avi_parse, is_avi
-
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "frame_idx": [],
-                "ts_ms": [],
-                "frame_md5": [],
-                "frame": [],
-            }
-            if fake:
-                for doc_id, dur in zip(pdf["doc_id"], pdf["duration_ms"]):
-                    n = max(0, -(-int(dur) // step_ms)) if pd.notna(dur) else 0
-                    for i in range(n):
-                        rows["doc_id"].append(int(doc_id))
-                        rows["frame_idx"].append(i)
-                        rows["ts_ms"].append(i * step_ms)
-                        rows["frame_md5"].append(
-                            hashlib.md5(f"{int(doc_id)}:{i}".encode()).hexdigest()
-                        )
-                        rows["frame"].append(b"")
-            else:
-                for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                    raw = bytes(payload) if payload is not None else b""
-                    if not is_avi(raw):
-                        raise NotImplementedError(
-                            "real frame extraction handles MJPEG-in-AVI only; "
-                            "other containers need codec libraries not present "
-                            "in this runtime (pass fake=True for the "
-                            "metadata-driven plumbing sampler)"
-                        )
-                    p = avi_parse(raw)
-                    n_frames = len(p["frames"])
-                    if not n_frames:
-                        continue
-                    period_ms = max(1, p["us_per_frame"] // 1000)
-                    duration_ms = n_frames * period_ms
-                    for ts in range(0, duration_ms, step_ms):
-                        fi = min(ts // period_ms, n_frames - 1)
-                        fb = p["frames"][fi]
-                        rows["doc_id"].append(int(doc_id))
-                        rows["frame_idx"].append(int(fi))
-                        rows["ts_ms"].append(ts)
-                        rows["frame_md5"].append(hashlib.md5(fb).hexdigest())
-                        rows["frame"].append(fb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "ts_ms": pd.Series(rows["ts_ms"], dtype="int64"),
-                    "frame_md5": pd.Series(rows["frame_md5"], dtype="object"),
-                    "frame": pd.Series(rows["frame"], dtype="object"),
-                }
+    def real_row(doc_id, media):
+        if not is_avi(media or b""):
+            raise NotImplementedError(
+                "real frame extraction handles MJPEG-in-AVI only; "
+                "other containers need codec libraries not present "
+                "in this runtime (pass fake=True for the "
+                "metadata-driven plumbing sampler)"
             )
+        p = avi_parse(media)
+        n_frames = len(p["frames"])
+        period_ms = max(1, p["us_per_frame"] // 1000)
+        for ts in range(0, n_frames * period_ms, step_ms):
+            fi = min(ts // period_ms, n_frames - 1)
+            fb = p["frames"][fi]
+            yield (doc_id, fi, ts, hashlib.md5(fb).hexdigest(), fb)
 
     if fake:
         narrowed = df.select(
@@ -620,7 +438,7 @@ def sample_frames(
         )
     else:
         narrowed = df.select("doc_id", "media")
-    return fan_out(narrowed, cpu_dense=True).mapInPandas(gen, FRAME_SCHEMA)
+    return map_rows(fan_out(narrowed, cpu_dense=True), fake_row if fake else real_row, FRAME_SCHEMA)
 
 
 def media_content_stats(df: DataFrame) -> DataFrame:
@@ -654,29 +472,14 @@ def decode_frame_stats(frames: DataFrame) -> DataFrame:
     EXACTLY (DC-only blocks, dc_quant=8), so ``gray`` is
     oracle-checkable as pure arithmetic — the strongest end-to-end
     evidence the container walk + entropy decode are right. Decode is
-    partition-local ``mapInPandas``; the frame payload never
+    a partition-local per-row map; the frame payload never
     shuffles."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from trendengine_spark.operators.codecs import jpeg_decode
+    def row(doc_id, frame_idx, ts_ms, frame):
+        yield (doc_id, frame_idx, ts_ms, int(round(float(jpeg_decode(frame).mean()))), len(frame))
 
-        for pdf in batches:
-            grays = [
-                int(round(float(jpeg_decode(bytes(b)).mean())))
-                for b in pdf["frame"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "frame_idx": pdf["frame_idx"].astype("int32"),
-                    "ts_ms": pdf["ts_ms"].astype("int64"),
-                    "gray": pd.Series(grays, dtype="int32"),
-                    "n_bytes": pdf["frame"].map(len).astype("int64"),
-                }
-            )
-
-    return frames.select("doc_id", "frame_idx", "ts_ms", "frame").mapInPandas(
-        gen, FRAME_STATS_SCHEMA
+    return map_rows(
+        frames.select("doc_id", "frame_idx", "ts_ms", "frame"), row, FRAME_STATS_SCHEMA
     )
 
 
@@ -685,30 +488,13 @@ def attach_tone_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     row at f = 200 + (id % 20)·150 Hz (8 kHz PCM, 1024 + (id % 4)·256
     samples, amplitude 8000) — a known ground-truth frequency, so the
     spectrogram's dominant bin is exactly predictable per document."""
-    import numpy as np
 
-    from trendengine_spark.operators.codecs import wav_encode
+    def payload(i):
+        freq = 200.0 + (i % 20) * 150.0
+        t = np.arange(1024 + (i % 4) * 256, dtype=np.float64) / 8000.0
+        return wav_encode(8000, (8000.0 * np.sin(2 * np.pi * freq * t)).astype(np.int16))
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                freq = 200.0 + (int(i) % 20) * 150.0
-                n = 1024 + (int(i) % 4) * 256
-                t = np.arange(n, dtype=np.float64) / 8000.0
-                wavef = (8000.0 * np.sin(2 * np.pi * freq * t)).astype(np.int16)
-                payloads.append(wav_encode(8000, wavef))
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
+    return _attach_media(df, id_col, payload)
 
 
 def audio_spectrogram(
@@ -717,7 +503,7 @@ def audio_spectrogram(
     hop: int = 128,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """REAL short-time spectral analysis inside ``mapInPandas``:
+    """REAL short-time spectral analysis in a per-row map:
     Hann-windowed rfft frames over the decoded PCM stream (stdlib
     ``wave`` + numpy — no audio library), emitting per frame the
     dominant frequency bin (DC excluded), its frequency in Hz, and
@@ -727,10 +513,6 @@ def audio_spectrogram(
     output is #frames small metadata rows per document. Rows-only
     (no FFT in the DuckDB oracle); the math is pinned by a golden
     known-tone test."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import wav_decode
-
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType(), False),
@@ -740,38 +522,17 @@ def audio_spectrogram(
             T.StructField("energy", T.DoubleType(), True),
         ]
     )
-    window = None  # built lazily so the closure ships cheaply
+    window = np.hanning(n_fft)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nonlocal window
-        if window is None:
-            window = np.hanning(n_fft)
-        for pdf in batches:
-            ids, frames, bins, hzs, energies = [], [], [], [], []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["media"]):
-                rate, samples = wav_decode(bytes(b))
-                mono = samples[:, 0].astype(np.float64)
-                n_frames = max(0, (len(mono) - n_fft) // hop + 1)
-                for f in range(n_frames):
-                    seg = mono[f * hop : f * hop + n_fft] * window
-                    spec = np.abs(np.fft.rfft(seg)) ** 2
-                    dom = int(np.argmax(spec[1:]) + 1)  # skip DC
-                    ids.append(int(i))
-                    frames.append(f)
-                    bins.append(dom)
-                    hzs.append(round(dom * rate / n_fft, 3))
-                    energies.append(round(float(spec.sum()), 3))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(frames, dtype="int32"),
-                    "dominant_bin": pd.Series(bins, dtype="int32"),
-                    "dominant_hz": pd.Series(hzs, dtype="float64"),
-                    "energy": pd.Series(energies, dtype="float64"),
-                }
-            )
+    def row(doc_id, media):
+        rate, samples = wav_decode(media)
+        mono = samples[:, 0].astype(np.float64)
+        for f in range(max(0, (len(mono) - n_fft) // hop + 1)):
+            spec = np.abs(np.fft.rfft(mono[f * hop : f * hop + n_fft] * window)) ** 2
+            dom = int(np.argmax(spec[1:]) + 1)  # skip DC
+            yield (doc_id, f, dom, round(dom * rate / n_fft, 3), round(float(spec.sum()), 3))
 
-    return fan_out(df, cpu_dense=True).mapInPandas(gen, out_schema)
+    return map_rows(fan_out(df, cpu_dense=True).select(id_col, "media"), row, out_schema)
 
 
 def attach_gradient_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -782,46 +543,15 @@ def attach_gradient_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     nearest-neighbor downsample is closed-form integer arithmetic,
     so a real decode→resample→re-encode→decode round trip is
     DuckDB-oracle-checkable pixel-exactly."""
-    import numpy as np
 
-    from trendengine_spark.operators.codecs import png_encode
+    def row(i):
+        w, h = 20 + i % 13, 20 + i % 11
+        yy, xx = np.mgrid[0:h, 0:w]
+        a = ((3 * xx + 5 * yy + i) % 256).astype(np.uint8)
+        yield (i, png_encode(a[:, :, None]), ("image", "png", w, h, None))
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("media_type", T.StringType(), True),
-                        T.StructField("format", T.StringType(), True),
-                        T.StructField("width", T.IntegerType(), True),
-                        T.StructField("height", T.IntegerType(), True),
-                        T.StructField("duration_ms", T.LongType(), True),
-                    ]
-                ),
-                True,
-            ),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads, metas = [], []
-            for i in ids:
-                w = 20 + int(i) % 13
-                h = 20 + int(i) % 11
-                yy, xx = np.mgrid[0:h, 0:w]
-                a = ((3 * xx + 5 * yy + int(i)) % 256).astype(np.uint8)
-                payloads.append(png_encode(a[:, :, None]))
-                metas.append(("image", "png", w, h, None))
-            yield pd.DataFrame(
-                {id_col: ids, "media": payloads, "media_meta": metas}
-            )
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
+    schema = _media_schema(id_col, T.StructField("media_meta", MEDIA_META, True))
+    return map_rows(fan_out(df.select(id_col), cpu_dense=True), row, schema)
 
 
 def image_tile_means(
@@ -833,12 +563,8 @@ def image_tile_means(
     verifiable core (real decode → block reduction → per-patch
     scalar). Tile (ty, tx) covers rows [ty·h//g, (ty+1)·h//g) — the
     floor-split convention, so the math is pure integer arithmetic an
-    oracle can reproduce. Partition-local ``mapInPandas``; payloads
+    oracle can reproduce. Partition-local per-row map; payloads
     never shuffle; output is g² small rows per image."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import png_decode
-
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType(), False),
@@ -848,30 +574,16 @@ def image_tile_means(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, tys, txs, means = [], [], [], []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["media"]):
-                a = png_decode(bytes(b))[:, :, 0].astype(np.float64)
-                h, w = a.shape
-                for ty in range(grid):
-                    y0, y1 = ty * h // grid, (ty + 1) * h // grid
-                    for tx in range(grid):
-                        x0, x1 = tx * w // grid, (tx + 1) * w // grid
-                        ids.append(int(i))
-                        tys.append(ty)
-                        txs.append(tx)
-                        means.append(float(a[y0:y1, x0:x1].mean()))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "tile_y": pd.Series(tys, dtype="int32"),
-                    "tile_x": pd.Series(txs, dtype="int32"),
-                    "mean_pixel": pd.Series(means, dtype="float64"),
-                }
-            )
+    def row(doc_id, media):
+        a = png_decode(media)[:, :, 0].astype(np.float64)
+        h, w = a.shape
+        for ty in range(grid):
+            y0, y1 = ty * h // grid, (ty + 1) * h // grid
+            for tx in range(grid):
+                x0, x1 = tx * w // grid, (tx + 1) * w // grid
+                yield (doc_id, ty, tx, float(a[y0:y1, x0:x1].mean()))
 
-    return fan_out(df.select(id_col, "media"), cpu_dense=True).mapInPandas(gen, out_schema)
+    return map_rows(fan_out(df.select(id_col, "media"), cpu_dense=True), row, out_schema)
 
 
 def attach_animated_gif(
@@ -883,47 +595,21 @@ def attach_animated_gif(
     GIF89a/LZW codec (:mod:`.codecs`) with a real Graphic Control
     delay per frame — closed-form pixel math, so a full
     encode→decode round trip is DuckDB-oracle-checkable exactly."""
-    import numpy as np
 
-    from trendengine_spark.operators.codecs import gif_encode
+    def payload(i):
+        yy, xx = np.mgrid[0 : 16 + i % 7, 0 : 16 + i % 9]
+        frames = [((3 * xx + 5 * yy + i + 7 * f) % 256).astype(np.uint8) for f in range(n_frames)]
+        return gif_encode(frames, delay_cs=4)
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                w = 16 + int(i) % 9
-                h = 16 + int(i) % 7
-                yy, xx = np.mgrid[0:h, 0:w]
-                frames = [
-                    ((3 * xx + 5 * yy + int(i) + 7 * f) % 256).astype(
-                        np.uint8
-                    )
-                    for f in range(n_frames)
-                ]
-                payloads.append(gif_encode(frames, delay_cs=4))
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
+    return _attach_media(df, id_col, payload)
 
 
 def gif_frame_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Decode an animated-GIF media column and emit one row per frame
     with its dimensions, delay and mean pixel — the video-lite twin
     of the MJPEG/AVI frame sampler, exercising a second real
-    container+entropy-coding path (LZW vs Huffman/DCT). Decode is
-    partition-local ``mapInPandas``; payloads never shuffle."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import gif_decode
-
+    container+entropy-coding path (LZW vs Huffman/DCT). Decode is a
+    partition-local per-row map; payloads never shuffle."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType(), False),
@@ -936,42 +622,14 @@ def gif_frame_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                id_col, "frame_idx", "n_frames", "width", "height",
-                "delay_cs", "mean_pixel",
-            )}
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["media"]):
-                g = gif_decode(bytes(b))
-                n = len(g["frames"])
-                for fi, (fr, dl) in enumerate(
-                    zip(g["frames"], g["delays_cs"])
-                ):
-                    rows[id_col].append(int(i))
-                    rows["frame_idx"].append(fi)
-                    rows["n_frames"].append(n)
-                    rows["width"].append(g["width"])
-                    rows["height"].append(g["height"])
-                    rows["delay_cs"].append(dl)
-                    rows["mean_pixel"].append(
-                        float(np.asarray(fr, dtype=np.float64).mean())
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows[id_col], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="int32"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "delay_cs": pd.Series(rows["delay_cs"], dtype="int32"),
-                    "mean_pixel": pd.Series(
-                        rows["mean_pixel"], dtype="float64"
-                    ),
-                }
-            )
+    def row(doc_id, media):
+        g = gif_decode(media)
+        n = len(g["frames"])
+        for fi, (fr, dl) in enumerate(zip(g["frames"], g["delays_cs"])):
+            mean = float(np.asarray(fr, dtype=np.float64).mean())
+            yield (doc_id, fi, n, g["width"], g["height"], dl, mean)
 
-    return fan_out(df.select(id_col, "media"), cpu_dense=True).mapInPandas(gen, out_schema)
+    return map_rows(fan_out(df.select(id_col, "media"), cpu_dense=True), row, out_schema)
 
 
 def attach_textured_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -988,38 +646,19 @@ def attach_textured_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     — measured planted Hamming ≤ 6 of 64 at 500 docs, unrelated
     cross-parity mean 32. All pixel math is integer, so a DuckDB
     oracle reproduces the decoded images exactly."""
-    import numpy as np
 
-    from trendengine_spark.operators.codecs import png_encode
+    def payload(i):
+        if i % 2 == 0:
+            w, h, base, bright, s = 36, 32, i, 0, 1
+        else:
+            w, h, base, bright, s = 72, 64, i - 1, 1, 2
+        k = base % 97 + 3
+        yy, xx = np.mgrid[0:h, 0:w]
+        bx, by = xx // s, yy // s
+        a = (((bx + 1) * (by + 2) * k + 31 * bx + 57 * by + base + bright) % 256).astype(np.uint8)
+        return png_encode(a[:, :, None])
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % 2 == 0:
-                    w, h, base, bright, s = 36, 32, i, 0, 1
-                else:
-                    w, h, base, bright, s = 72, 64, i - 1, 1, 2
-                k = base % 97 + 3
-                yy, xx = np.mgrid[0:h, 0:w]
-                bx, by = xx // s, yy // s
-                a = (
-                    ((bx + 1) * (by + 2) * k + 31 * bx + 57 * by + base + bright)
-                    % 256
-                ).astype(np.uint8)
-                payloads.append(png_encode(a[:, :, None]))
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
+    return _attach_media(df, id_col, payload)
 
 
 def image_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1036,11 +675,7 @@ def image_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     same convention as the Hamming ANN codes in
     operators/similarity.py). Resize- and brightness-invariant by
     construction: only the ORDER of neighboring cell means matters.
-    Partition-local mapInPandas; one int64 out per image."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import png_decode
-
+    Partition-local per-row map; one int64 out per image."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType(), False),
@@ -1050,43 +685,26 @@ def image_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, ws, hs = [], [], [], []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["media"]):
-                a = png_decode(bytes(b))[:, :, 0]
-                h, w = a.shape
-                c = np.zeros((h + 1, w + 1), dtype=np.int64)
-                c[1:, 1:] = a.astype(np.int64).cumsum(0).cumsum(1)
-                ys = [y * h // 8 for y in range(9)]
-                xs = [x * w // 9 for x in range(10)]
-                v = 0
-                for cy in range(8):
-                    y0, y1 = ys[cy], ys[cy + 1]
-                    for cx in range(8):
-                        x0a, x1a = xs[cx], xs[cx + 1]
-                        x0b, x1b = xs[cx + 1], xs[cx + 2]
-                        sa = c[y1, x1a] - c[y0, x1a] - c[y1, x0a] + c[y0, x0a]
-                        sb = c[y1, x1b] - c[y0, x1b] - c[y1, x0b] + c[y0, x0b]
-                        na = (y1 - y0) * (x1a - x0a)
-                        nb = (y1 - y0) * (x1b - x0b)
-                        if int(sb) * na > int(sa) * nb:
-                            j = cy * 8 + cx
-                            v += (1 << j) if j < 63 else -(1 << 63)
-                ids.append(int(i))
-                hashes.append(v)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
+    def row(doc_id, media):
+        a = png_decode(media)[:, :, 0]
+        h, w = a.shape
+        c = np.zeros((h + 1, w + 1), dtype=np.int64)
+        c[1:, 1:] = a.astype(np.int64).cumsum(0).cumsum(1)
+        ys = [y * h // 8 for y in range(9)]
+        xs = [x * w // 9 for x in range(10)]
 
-    return fan_out(df.select(id_col, "media"), cpu_dense=True).mapInPandas(gen, out_schema)
+        def cell(cy, cx):  # (pixel sum, pixel count)
+            y0, y1, x0, x1 = ys[cy], ys[cy + 1], xs[cx], xs[cx + 1]
+            return int(c[y1, x1] - c[y0, x1] - c[y1, x0] + c[y0, x0]), (y1 - y0) * (x1 - x0)
+
+        bits = []
+        for cy in range(8):
+            for cx in range(8):
+                (sa, na), (sb, nb) = cell(cy, cx), cell(cy, cx + 1)
+                bits.append(sb * na > sa * nb)
+        yield (doc_id, _signed64(bits), w, h)
+
+    return map_rows(fan_out(df.select(id_col, "media"), cpu_dense=True), row, out_schema)
 
 
 def attach_textured_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1103,36 +721,17 @@ def attach_textured_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     shift flips a few (measured planted Hamming ≤ 2 at 500 docs,
     unrelated minimum 10). All sample math is integer, so a DuckDB
     oracle reproduces the decoded PCM exactly."""
-    import numpy as np
 
-    from trendengine_spark.operators.codecs import wav_encode
+    def payload(i):
+        if i % 2 == 0:
+            n, base, scale, off = 2080, i, 1, 0
+        else:
+            n, base, scale, off = 4160, i - 1, 2, 1
+        bt = np.arange(n, dtype=np.int64) // scale
+        s = ((bt + 1) * (base % 89 + 2) + (bt * bt) % 509 + base) % 401 - 200
+        return wav_encode(8000, (scale * s + off).astype(np.int16))
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % 2 == 0:
-                    n, base, scale, off = 2080, i, 1, 0
-                else:
-                    n, base, scale, off = 4160, i - 1, 2, 1
-                t = np.arange(n, dtype=np.int64)
-                bt = t if i % 2 == 0 else t // 2
-                s = ((bt + 1) * (base % 89 + 2) + (bt * bt) % 509 + base) % 401 - 200
-                payloads.append(
-                    wav_encode(8000, (scale * s + off).astype(np.int16))
-                )
-            yield pd.DataFrame({id_col: ids, "media": payloads})
-
-    return fan_out(df.select(id_col), cpu_dense=True).mapInPandas(gen, out_schema)
+    return _attach_media(df, id_col, payload)
 
 
 def audio_fingerprint(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1147,12 +746,8 @@ def audio_fingerprint(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     same factor; sample-and-hold upsampling scales by the repeat
     count). Bit 63 packs as the sign bit. Frames are ``n // 65``
     samples (tail truncated), energies exact int64, so the hash is
-    engine-reproducible. Partition-local mapInPandas; one int64 per
+    engine-reproducible. Partition-local per-row map; one int64 per
     clip."""
-    import numpy as np
-
-    from trendengine_spark.operators.codecs import wav_decode
-
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType(), False),
@@ -1161,28 +756,10 @@ def audio_fingerprint(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps, ns = [], [], []
-            for i, b in zip(pdf[id_col].astype("int64"), pdf["media"]):
-                _, samples = wav_decode(bytes(b))
-                s = samples[:, 0].astype(np.int64)
-                n = len(s)
-                frame = n // 65
-                e = (s[: frame * 65] ** 2).reshape(65, frame).sum(axis=1)
-                v = 0
-                for f in range(64):
-                    if int(e[f + 1]) > int(e[f]):
-                        v += (1 << f) if f < 63 else -(1 << 63)
-                ids.append(int(i))
-                fps.append(v)
-                ns.append(n)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "afp": pd.Series(fps, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                }
-            )
+    def row(doc_id, media):
+        s = wav_decode(media)[1][:, 0].astype(np.int64)
+        frame = len(s) // 65
+        e = (s[: frame * 65] ** 2).reshape(65, frame).sum(axis=1)
+        yield (doc_id, _signed64(e[1:] > e[:-1]), len(s))
 
-    return fan_out(df.select(id_col, "media"), cpu_dense=True).mapInPandas(gen, out_schema)
+    return map_rows(fan_out(df.select(id_col, "media"), cpu_dense=True), row, out_schema)

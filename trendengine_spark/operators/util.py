@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 import weakref
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
 import numpy as np
 import pyarrow as pa
@@ -393,6 +393,44 @@ def fit_series(
                 yield emit([(carry_key, [0] * len(out))], out)
 
     return ordered.mapInArrow(stream, schema)
+
+
+def arrow_rows(rows: list[tuple], schema: StructType) -> pa.RecordBatch:
+    """Row tuples in ``schema`` field order → one Arrow batch. Each
+    column is built from its field's Arrow type with
+    ``from_pandas=True``, so a float NaN, nested struct fields
+    included, is written as null (the rule ``mapInPandas`` applies to
+    its output); a struct value may be a tuple in its field order."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cols = zip(*rows) if rows else [()] * len(schema.fields)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(c, type=to_arrow_type(f.dataType), from_pandas=True)
+            for c, f in zip(cols, schema.fields)
+        ],
+        names=schema.names,
+    )
+
+
+def map_rows(
+    df: DataFrame, row_fn: Callable[..., Iterable[tuple]], schema: StructType
+) -> DataFrame:
+    """Run ``row_fn`` on every row of ``df`` in one ``mapInArrow``:
+    partition-local, no shuffle, and ``df``'s projection is all that
+    reaches Python. ``row_fn`` receives the row's values positionally
+    in ``df``'s column order (Arrow's ``to_pylist``: null → ``None``,
+    binary → ``bytes``) and returns or yields zero or more output
+    tuples in ``schema`` field order — one for a feature extractor,
+    many for a frame or tile fan-out. Each input batch yields one
+    output batch, built by :func:`arrow_rows`."""
+
+    def stream(batches):
+        for batch in batches:
+            args = zip(*[c.to_pylist() for c in batch.columns])
+            yield arrow_rows([out for a in args for out in row_fn(*a)], schema)
+
+    return df.mapInArrow(stream, schema)
 
 
 def _series_starts(key_cols: list) -> np.ndarray:

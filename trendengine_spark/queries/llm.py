@@ -1102,9 +1102,9 @@ def multimodal_content_stats(spark, sf_dir):
     """,
 )
 def multimodal_feature_extract(spark, sf_dir):
-    """mapInPandas feature extraction over the media column (decode
-    stubbed with the deterministic fake — real plumbing, Arrow batch
-    round trip, no shuffle)."""
+    """Per-row Arrow-map feature extraction over the media column
+    (decode stubbed with the deterministic fake — real plumbing, Arrow
+    batch round trip, no shuffle)."""
     media = attach_fake_media(t(spark, sf_dir, "documents"))
     return extract_media_features(media, fake=True)
 
@@ -1123,7 +1123,7 @@ def multimodal_png_decode(spark, sf_dir):
     """REAL image decode, oracle-checked end-to-end: a valid grayscale
     PNG is generated per document executor-side (constant fill, dims
     keyed off doc_id), then decoded by the pure-stdlib PNG decoder
-    (zlib inflate + spec filter reconstruction) inside mapInPandas —
+    (zlib inflate + spec filter reconstruction) in a per-row Arrow map —
     no imaging library, no fake path. Constant-fill grayscale makes
     the decoded mean luma exactly (doc_id % 256)/255 (integer sums are
     exact in both engines), so the full encode→Spark→decode round trip
@@ -1150,7 +1150,7 @@ def multimodal_jpeg_decode(spark, sf_dir):
     sequential-DCT JPEG is generated per document executor-side
     (constant fill, dims keyed off doc_id, DC quant step 8) and
     decoded by the numpy baseline decoder (canonical Huffman → 
-    dequantize → IDCT) inside mapInPandas — no imaging library, no
+    dequantize → IDCT) in a per-row Arrow map — no imaging library, no
     fake path. Constant fill makes every AC coefficient zero and the
     DC round-trip exact (8·(g−128) is a multiple of the quant step),
     so decoded mean luma is exactly (doc_id % 256)/255 and the full
@@ -1177,7 +1177,7 @@ def multimodal_jpeg_decode(spark, sf_dir):
 def multimodal_wav_features(spark, sf_dir):
     """REAL audio decode, oracle-checked end-to-end: a valid PCM WAV
     square wave is generated per document executor-side and decoded by
-    stdlib ``wave`` inside mapInPandas. A square wave of amplitude A
+    stdlib ``wave`` in a per-row Arrow map. A square wave of amplitude A
     has peak = RMS = A exactly (A² is an exact float, the mean of N
     identical exact values divides exactly, and sqrt of a perfect
     square is correctly rounded), so peak/RMS/duration all hash-match
@@ -1215,7 +1215,7 @@ def multimodal_wav_features(spark, sf_dir):
     """,
 )
 def multimodal_resize(spark, sf_dir):
-    """Aspect-preserving resize plumbing (mapInPandas, Arrow batch,
+    """Aspect-preserving resize plumbing (per-row Arrow map,
     partition-local): target geometry is computed for real; the pixel
     resample itself is the stubbed step. Payload bytes projected down
     to a length so the oracle hash stays engine-portable."""
@@ -1250,7 +1250,7 @@ def multimodal_frame_sample(spark, sf_dir):
     decode EXACTLY, so the decoded mean gray level is pure integer
     arithmetic the DuckDB oracle reproduces — a wrong container walk,
     frame index, or Huffman/IDCT decode all break the hash. Payloads
-    stay partition-local (mapInPandas); no shuffle."""
+    stay partition-local (per-row Arrow maps); no shuffle."""
     from trendengine_spark.operators.multimodal import (
         attach_mjpeg_video,
         decode_frame_stats,

@@ -257,8 +257,8 @@ def pipeline_hash_sample_per_key(spark, sf_dir):
 def multimodal_audio_spectrogram(spark, sf_dir):
     """Spectrogram over real generated-and-decoded audio: each doc
     carries a sine tone at 200 + (id % 20)·150 Hz; frames of 256
-    samples at hop 128 are Hann-windowed and rfft'd inside
-    ``mapInPandas`` (payloads partition-local, never shuffled). A
+    samples at hop 128 are Hann-windowed and rfft'd in a per-row
+    Arrow map (payloads partition-local, never shuffled). A
     wrong window, FFT, framing, or decode shifts the dominant bin —
     the golden test pins it to the generated frequency."""
     from trendengine_spark.operators.multimodal import (
@@ -310,10 +310,10 @@ def multimodal_resize_real(spark, sf_dir):
     wrong decode, index map, re-encode, or second decode all break
     the hash (the division association (s/n)/255 matches the
     decoder's np.mean exactly). All pixel work partition-local in
-    mapInPandas, ONE linear pipeline — the original dims ride through
-    the second decode as pass-through columns instead of re-joining
-    (a self-join here would execute the attach+resize subtree
-    twice)."""
+    per-row Arrow maps, ONE linear pipeline — the original dims ride
+    through the second decode as pass-through columns instead of
+    re-joining (a self-join here would execute the attach+resize
+    subtree twice)."""
     from trendengine_spark.operators.multimodal import (
         attach_gradient_png,
         extract_media_features,
@@ -571,7 +571,7 @@ def multimodal_image_tiles(spark, sf_dir):
     patch-embedding prep step, oracle-checked pixel-exactly (the
     DuckDB side reproduces the pixel function over the same
     floor-split tile ranges; a wrong decode, split convention, or
-    block reduction breaks the hash). Partition-local mapInPandas;
+    block reduction breaks the hash). Partition-local per-row Arrow map;
     rounding to 6 dp on both sides (tile sums are exact ints; the
     division is one double op)."""
     from trendengine_spark.operators.multimodal import (
@@ -734,7 +734,7 @@ def multimodal_gif_animation(spark, sf_dir):
     each frame's dims, GCE delay and mean pixel. DuckDB computes the
     identical pixel function over the identical grid: a wrong LZW
     bit-unpack, palette, frame order or delay breaks the hash.
-    Payloads stay partition-local in ``mapInPandas`` end-to-end (the
+    Payloads stay partition-local in per-row Arrow maps end-to-end (the
     judge-visible plan has no shuffle touching the binary column);
     mean = round(exact integer sum / (w·h), 6) — engine-stable."""
     from trendengine_spark.operators.multimodal import (

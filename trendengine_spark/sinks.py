@@ -125,6 +125,12 @@ def save_dbest_outputs(
         )
 
 
+#: Row bound per file of a partitioned :func:`write_parquet`: a
+#: dominant partition value splits into files of at most this many
+#: rows instead of one file of any size.
+MAX_RECORDS_PER_FILE = 10_000_000
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -139,12 +145,14 @@ def write_parquet(
     per (task x touched partition value) — the r14 probe measured
     23,936 files for a 197 MB partitioned index. Hash-repartitioning
     on the partition columns lands every value wholly in one task:
-    exactly one file per partition directory."""
+    one file per partition directory, or more for a value with over
+    :data:`MAX_RECORDS_PER_FILE` rows (``maxRecordsPerFile``). A
+    skewed value is still written by that one task."""
     if partition_by:
         df = df.repartition(*[F.col(c) for c in partition_by])
     w = df.write.mode(mode)
     if partition_by:
-        w = w.partitionBy(*partition_by)
+        w = w.partitionBy(*partition_by).option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
     w.parquet(path)
 
 

@@ -89,7 +89,13 @@ def online_level_shifts(
 ) -> DataFrame:
     """Apply the stateful detector to a (streaming or batch-test)
     events frame grouped by ``key_col``. Output: one row per detected
-    shift."""
+    shift.
+
+    The state evicts on ``GroupStateTimeout.ProcessingTimeTimeout``,
+    so a ``trigger(availableNow=True)`` query never terminates: the
+    pending timeout keeps Spark scheduling no-data batches.
+    ``trigger(once=True)`` is the supported batch-style trigger (one
+    micro-batch over what is available, then the query ends)."""
 
     def fn(key, batches, state):
         return _detect(key, batches, state, shift_threshold, alpha)
