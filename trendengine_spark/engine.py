@@ -170,33 +170,6 @@ def polytrend_stats(result: DataFrame) -> DataFrame:
     return polytrend_summary(result)
 
 
-def polytrend_report(
-    result: DataFrame,
-    path: str,
-    title: str = "PolyTrend analysis",
-    series: tuple | None = None,
-) -> str:
-    """S6 presentation sink: render a PolyTrend run into a
-    self-contained HTML report — per-class roll-up table + pie (the
-    reference's polygon Bokeh stage, ``polytrend.py:38-126``) and,
-    for point AOIs, the observed-vs-fitted series plot
-    (``polytrend.py:213-239``) via ``series=(xs, ys, fit)``. Thin
-    client over bounded result tables; see
-    :mod:`trendengine_spark.report`."""
-    from trendengine_spark.report import write_html_report
-
-    stats = polytrend_summary(result)
-    labeled = stats.filter(F.col("trend_type_label") != "total")
-    return write_html_report(
-        path,
-        title,
-        stats=stats,
-        pie=("trend_type_label", "n", labeled),
-        series=series,
-        result_table=result.drop("ts"),
-    )
-
-
 def dbest(
     obs: DataFrame,
     year_from: int,

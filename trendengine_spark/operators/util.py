@@ -161,8 +161,8 @@ def local_rows_df(spark, rows, schema) -> DataFrame:
     defaultParallelism Python partitions, so every scan of the tiny
     frame pays ~ncpu Python-worker roundtrips, and a downstream
     ``coalesce(1)`` evaluates them SEQUENTIALLY inside one task (one
-    roundtrip per parent partition - measured 8-12 s to write a
-    16-row table before the r14 session-6 fix). One source slice =
+    roundtrip per parent partition, ~50 ms each under the engine
+    daemon and ~190 ms under pyspark's, local[4]). One source slice =
     one roundtrip per scan. ``schema`` may be a DDL string or a
     StructType."""
     return spark.createDataFrame(
@@ -328,8 +328,9 @@ def fit_series(
     out_types = {
         f.name: to_arrow_type(f.dataType) for f in schema.fields if f.name not in keys
     }
-    # one partition per core: mapInArrow starts a Python task even for
-    # an empty partition, at ~0.1 s each (pyspark 4.1, local[4])
+    # one partition per core: a sorted mapInArrow starts a Python task
+    # even for an empty partition, at ~70 ms of core time each under the
+    # engine daemon (~270 ms under pyspark's; pyspark 4.1, local[4])
     ordered = (
         obs.select(*keys, *dict.fromkeys([*order_cols, *cols]))
         .repartition(obs.sparkSession.sparkContext.defaultParallelism, *keys)

@@ -14,6 +14,22 @@ Scale notes (100 TB target):
   DuckDB oracle, which is UTC-naive).
 - Arrow is enabled for the pandas-UDF path (the per-series fitting
   stage); everything else stays JVM-side.
+
+Python worker daemon: on ``local``, ``local[...]`` and
+``local-cluster[...]`` masters the session runs its Python workers under
+:mod:`trendengine_spark._daemon` instead of ``pyspark.daemon``. pyspark
+calls ``importlib.invalidate_caches()`` at the start of every task, and
+on CPython 3.11 that eagerly re-reads the central directory of every
+cached zip importer (``pyspark.zip``, the shipped package zip) — the
+fixed cost of every ``fit_series``/``map_rows``/``mapInArrow`` task.
+The engine daemon skips that re-read while an archive's (mtime, size)
+is unchanged; ``.py`` files that ``addPyFile`` drops into the Spark
+files directory are still seen. (CPython 3.13 made the re-read lazy.)
+The daemon starts before any ``addPyFile`` lands, so it can only run
+where this checkout is on the worker's path: the session exports the
+package's parent directory through ``spark.executorEnv.PYTHONPATH``.
+Other masters keep pyspark's own daemon. Turn it off with
+``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``.
 """
 
 from __future__ import annotations
@@ -34,6 +50,13 @@ def get_spark(
     Defaults read ``SPARK_GRAFT_CPUS`` (driver contract) for local
     parallelism; on a real cluster, pass ``master=None`` and submit
     via spark-submit with cluster conf instead.
+
+    Local masters run Python workers under the engine daemon, which
+    skips CPython 3.11's per-task zip re-reads (module docstring;
+    :func:`python_worker_conf`). ``extra_conf`` wins over every key
+    set here, so ``{"spark.python.daemon.module": "pyspark.daemon"}``
+    turns the daemon off; a ``spark.executorEnv.PYTHONPATH`` in it is
+    kept, ahead of the package's parent directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -55,12 +78,31 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in python_worker_conf(master, extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def python_worker_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus, on a local or local-cluster master, the
+    engine daemon and the ``spark.executorEnv.PYTHONPATH`` entry it
+    needs to import this package whatever the driver's cwd. A caller's
+    daemon module wins; a caller's PYTHONPATH is kept, ahead of the
+    package's parent directory. Other masters get ``extra_conf`` as
+    is."""
+    if master != "local" and not master.startswith(("local[", "local-cluster[")):
+        return dict(extra_conf)
+    key = "spark.executorEnv.PYTHONPATH"
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in (extra_conf.get(key), pkg_parent) if p]
+    return {
+        "spark.python.daemon.module": "trendengine_spark._daemon",
+        **extra_conf,
+        key: os.pathsep.join(paths),
+    }
 
 
 def ship_package(spark: SparkSession) -> None:

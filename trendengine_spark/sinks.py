@@ -103,28 +103,6 @@ def save_polytrend_outputs(
         )
 
 
-def save_dbest_outputs(
-    result: DataFrame,
-    time_series: DataFrame | None,
-    out_dir: str,
-    save_result: bool = True,
-    save_ts: bool = False,
-) -> None:
-    """Reference-compatible ``DBEST_result.csv`` / ``time_series.csv``
-    (``dbest.py:544-545,568-569,620-621``)."""
-    import os
-
-    write_csv(
-        result, os.path.join(out_dir, "DBEST_result.csv"),
-        save=save_result, single_file=True,
-    )
-    if time_series is not None:
-        write_csv(
-            time_series, os.path.join(out_dir, "time_series.csv"),
-            save=save_ts, single_file=True,
-        )
-
-
 #: Row bound per file of a partitioned :func:`write_parquet`: a
 #: dominant partition value splits into files of at most this many
 #: rows instead of one file of any size.
